@@ -55,18 +55,46 @@ object FeatureAggs {
       this
     }
 
-    /** Values in index order (indices are unique per group — the row
-      * index from [[FeatureAggs.over]] — so the order is total). */
-    def sortedValues: Array[Double] = {
-      val idx = new Array[Integer](n)
+    /** (indices, values) in index order (indices are unique per group —
+      * the row index from [[FeatureAggs.over]] — so the order is total). */
+    def ordered: (Array[Long], Array[Double]) = {
+      val perm = permutation
+      val oi = new Array[Long](n)
+      val ov = new Array[Double](n)
       var k = 0
-      while (k < n) { idx(k) = k; k += 1 }
-      java.util.Arrays.sort(idx, (a: Integer, b: Integer) =>
-        java.lang.Long.compare(is(a), is(b)))
-      val out = new Array[Double](n)
+      while (k < n) {
+        val s = if (perm == null) k else perm(k)
+        oi(k) = is(s); ov(k) = vs(s); k += 1
+      }
+      (oi, ov)
+    }
+
+    /** Values in index order. */
+    def sortedValues: Array[Double] = ordered._2
+
+    /** Buffer slots in index order, or null when the buffer already is
+      * in order — one linear scan, and the usual case: rows reach the
+      * aggregate in the order of the row-index window that numbered
+      * them. Otherwise (index − min, slot) pairs pack into primitive
+      * longs and sort without boxing; equal indices keep slot order
+      * (a stable sort). */
+    private def permutation: Array[Int] = {
+      var k = 1
+      while (k < n && is(k - 1) <= is(k)) k += 1
+      if (k >= n) return null
+      var lo = is(0); var hi = is(0)
+      k = 1
+      while (k < n) { lo = math.min(lo, is(k)); hi = math.max(hi, is(k)); k += 1 }
+      val span = hi - lo // negative when the true span overflows a long
+      require(span >= 0 && span < (1L << 31), s"SeriesBuf: index span $span exceeds 2^31")
+      val keys = new Array[Long](n)
       k = 0
-      while (k < n) { out(k) = vs(idx(k)); k += 1 }
-      out
+      while (k < n) { keys(k) = ((is(k) - lo) << 32) | k; k += 1 }
+      java.util.Arrays.sort(keys)
+      val perm = new Array[Int](n)
+      k = 0
+      while (k < n) { perm(k) = keys(k).toInt; k += 1 }
+      perm
     }
 
     override def write(kryo: com.esotericsoftware.kryo.Kryo,

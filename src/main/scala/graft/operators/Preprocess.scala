@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Panel
+import graft.functions.TheilSen
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,34 +227,30 @@ object Preprocess {
     * preprocessing.py:971-1013) applied to the linear trend: per
     * entity, slope = median of all pairwise slopes (yⱼ−yᵢ)/(j−i),
     * intercept = median of y − slope·i (the classic exact estimator).
+    * Both medians are Spark's `percentile(·, 0.5)` bit for bit. A null
+    * y keeps its row index (index gaps survive) but stays out of the
+    * fit; an entity with fewer than two non-null points gets null
+    * artifacts and null residuals.
     *
-    * Scale shape: the pair fan-out is a per-entity self-equi-join —
-    * ONE shuffle on the entity key, pairs bounded by series length²
-    * per entity (never corpus-wide). For pathologically long series
-    * the standard mitigation is pair sampling; the estimator's
-    * breakdown point doesn't need every pair. Returns
-    * (residuals, artifacts(entity, __beta, __alpha)). */
+    * Scale shape: [[graft.functions.TheilSen]] runs as a whole-entity
+    * window aggregate over the row-index window's partitioning — ONE
+    * entity shuffle of the rows, no pair rows, no join back. Each
+    * entity's n·(n−1)/2 slopes (8 bytes per pair) live in one task;
+    * past 65,536 non-null points the fit fails with a named error
+    * (pair sampling, the usual mitigation, is not implemented). Returns
+    * (residuals, artifacts(entity, __beta, __alpha)) with one artifact
+    * row per input entity. */
   def detrendTheilSen(p: Panel): (DataFrame, DataFrame) = {
-    val pr = p.withRowIdx("__i")
-    val base = pr.df.select((p.entityCols :+ col("__i").cast("double").as("__i") :+
-      p.x.as("__y")): _*)
-    val a = base.select((p.entityCols :+ col("__i").as("__ia") :+ col("__y").as("__ya")): _*)
-    val b = base.select((p.entityCols :+ col("__i").as("__ib") :+ col("__y").as("__yb")): _*)
-    val slopes = a.join(b, p.entity).filter(col("__ib") > col("__ia"))
-      .select((p.entityCols :+
-        ((col("__yb") - col("__ya")) / (col("__ib") - col("__ia"))).as("__s")): _*)
-    val betas = slopes.groupBy(p.entityCols: _*)
-      .agg(expr("percentile(__s, 0.5)").as("__beta"))
-    val art = base.join(broadcastIfSmall(betas), p.entity)
-      .groupBy(p.entityCols: _*)
-      .agg(first(col("__beta")).as("__beta"),
-        expr("percentile(__y - __beta * __i, 0.5)").as("__alpha"))
-    // LEFT join: a single-observation entity has no pairwise slopes and
-    // no artifact row — it must keep its rows with a null residual
-    // (detrendLinear's behavior), not vanish through an inner join
-    val out = pr.df.join(broadcastIfSmall(art), p.entity, "left")
+    val fitted = p.withRowIdx("__i").df
+      .withColumn("__fit", TheilSen(col("__i"), p.x).over(p.we))
+      .withColumn("__beta", col("__fit.beta"))
+      .withColumn("__alpha", col("__fit.alpha"))
+      .drop("__fit")
+    val out = fitted
       .withColumn(p.value, p.x - (col("__beta") * col("__i").cast("double") + col("__alpha")))
       .drop("__beta", "__alpha")
+    val art = fitted.groupBy(p.entityCols: _*)
+      .agg(first(col("__beta")).as("__beta"), first(col("__alpha")).as("__alpha"))
     (out, art)
   }
 

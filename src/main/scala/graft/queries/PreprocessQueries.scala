@@ -186,9 +186,10 @@ object PreprocessQueries {
     },
 
     // robust Theil–Sen detrend: slope = median pairwise slope, per
-    // entity (the reference's TheilSen regressor option). The pair
-    // fan-out is the same per-entity self-join in both engines; the
-    // exact-percentile interpolation drift is absorbed by rd6
+    // entity (the reference's TheilSen regressor option). The oracle
+    // fans pairs out through a self-join into quantile_cont; Spark fits
+    // each entity in one aggregate whose medians reproduce percentile
+    // bit for bit (quantile_cont ≡ percentile); rd6 absorbs any drift
     "p_detrend_theilsen" -> Q(
       s"""WITH b AS (SELECT user_id, event_id, value,
                             (row_number() OVER ($W) - 1)::DOUBLE AS i FROM events),

@@ -23,6 +23,29 @@ class FeatureAggsSpec extends SparkSpec {
     assertClose(got, Kernels.sampleEntropy(series, 0.2, 2), 1e-9)
   }
 
+  test("SeriesBuf.ordered is a stable index sort, in-order fast path included") {
+    val rnd = new scala.util.Random(3)
+    val specials = Array(Double.NaN, -0.0, 0.0, Double.NegativeInfinity)
+    Seq(0, 1, 2, 17, 300).foreach { n =>
+      val unique = rnd.shuffle((0 until n).map(_.toLong * 3 - 40)).toArray
+      val dups = Array.fill(n)(rnd.nextInt(n / 3 + 1).toLong)
+      val sorted = dups.sorted
+      Seq(unique, dups, sorted).foreach { is =>
+        val vs = Array.tabulate(n)(k =>
+          if (k % 5 == 0) specials(k % specials.length) else rnd.nextGaussian())
+        val b = new FeatureAggs.SeriesBuf()
+        is.indices.foreach(k => b.append(is(k), vs(k)))
+        val perm = is.indices.sortBy(k => is(k)) // stable
+        val (oi, ov) = b.ordered
+        assert(oi.toSeq == perm.map(is(_)))
+        assert(ov.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+          perm.map(k => java.lang.Double.doubleToRawLongBits(vs(k))))
+        assert(b.sortedValues.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+          ov.map(java.lang.Double.doubleToRawLongBits).toSeq)
+      }
+    }
+  }
+
   test("lempel ziv over panel") {
     val p = panel(series.toSeq)
     val got = FeatureAggs.over(p, FeatureAggs.lempelZivComplexity(50.0, asRatio = true), "lz")

@@ -79,6 +79,27 @@ class PreprocessSpec extends SparkSpec {
     assert(math.abs(beta - 2.0) > 0.5, s"OLS slope $beta should be pulled by outliers")
   }
 
+  test("Theil-Sen artifacts: one row per entity, null below two non-null points") {
+    import spark.implicits._
+    val df = Seq(
+      (0, 0, Some(5.0)),                                   // one row
+      (1, 0, Some(1.0)), (1, 1, None),                     // one non-null point
+      (2, 0, None), (2, 1, None),                          // all null
+      (3, 0, Some(1.0)), (3, 1, None), (3, 2, Some(5.0))   // a null keeps its index
+    ).toDF("entity", "t", "value")
+    val p = Panel(df, Seq("entity"), Seq("t"), "value")
+    val (out, art) = Preprocess.detrendTheilSen(p)
+    val arts = art.collect().map(r =>
+      r.getInt(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(art.count() == 4 && arts.keySet == Set(0, 1, 2, 3))
+    Seq(0, 1, 2).foreach(e => assert(arts(e) == ((None, None)), s"entity $e"))
+    // slope (5 − 1)/(2 − 0) = 2 across the gap, intercept median(1, 5 − 4) = 1
+    assert(arts(3) == ((Some(2.0), Some(1.0))))
+    val resid = out.orderBy("entity", "t").select("value").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    assert(resid == Seq(None, None, None, None, None, Some(0.0), None, Some(0.0)))
+  }
+
   test("impute mean / ffill / interpolate") {
     import spark.implicits._
     val df = Seq((0, 0, Some(1.0)), (0, 1, None), (0, 2, Some(3.0)), (0, 3, None), (0, 4, None), (0, 5, Some(9.0)))

@@ -136,8 +136,9 @@ object BenchWarmup {
         testSize = 2, nSplits = 2, stepSize = 2, cdSweeps = 2, strategy = "lasso",
         stackAlphaGrid = Seq(0.01, 0.1),
         models = Seq("naive", "linear_7", "ridge_3", "lasso_7")).count()
-      // ...and the stump-boosting conditional-agg pass (its 40+-column
-      // aggregate compiles a distinctive codegen shape)
+      // ...and stump boosting's lags=3 reduction and recursive-predict
+      // shapes (its rounds are RDD jobs over primitive blocks, so they
+      // compile nothing)
       graft.operators.StumpBoost.fit(tinyPanel, lags = 3, freq = "1d",
         rounds = 2, bins = 4).predict(tinyPanel, "ts", fh = 1).count()
     }

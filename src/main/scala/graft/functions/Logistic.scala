@@ -1,23 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.GraftRddBridge
+import org.apache.spark.sql.DataFrame
 
-/** Logistic regression by IRLS / Newton on per-iteration moment
-  * aggregations — the classifier side of the censored forecaster
-  * family (reference: functime/forecasting/censored.py:32-96, whose
-  * classifier is a driver-side sklearn fit over the collected
-  * reduction).
+/** Logistic regression by IRLS / Newton on per-iteration moment sums —
+  * the classifier side of the censored forecaster family (reference:
+  * functime/forecasting/censored.py:32-96, whose classifier is a
+  * driver-side sklearn fit over the collected reduction).
   *
-  * Spark-native shape: iteration t computes the weighted normal
-  * moments X^T W X (upper triangle) and the gradient X^T (y − μ) in
-  * ONE codegen'd aggregation pass over the distributed reduction —
-  * the same partial-final `sum()` machinery as [[Ols]] — then takes
-  * the Newton step on the driver (a (p+1)-dim Cholesky). `iters`
-  * passes total, each O(p²) aggregate state per partition: at 100 TB
-  * this is `iters` scans with map-side combine, never a collected
-  * matrix, and typically fewer passes than LBFGS needs for the same
-  * tolerance.
+  * Spark-native shape: the complete rows are persisted once as
+  * [[FitBlocks]]; iteration t is then ONE RDD job whose task kernel
+  * computes, per row, η = β₀ + Σ βⱼxⱼ (left fold), μ = σ(η), w = μ(1−μ)
+  * and r = y − μ, and accumulates the weighted normal moments X^T W X
+  * (upper triangle) and the gradient X^T (y − μ). β travels in the task
+  * closure; the driver merges the partials in Spark's `sum` order and
+  * takes the Newton step (a (p+1)-dim Cholesky). `iters` passes total,
+  * each O(p²) state per task: at 100 TB this is `iters` scans of the
+  * cached blocks, never a collected matrix, and typically fewer passes
+  * than LBFGS needs for the same tolerance.
   *
   * A FIXED iteration count (no tolerance exit) keeps the update
   * sequence deterministic, so the DuckDB oracle
@@ -34,74 +34,67 @@ object Logistic {
               lambda: Double = 0.0, iters: Int = 6): (Double, Array[Double]) = {
     val p = featureCols.length
     val d = p + 1
-    val cached = df.na.drop(featureCols :+ labelCol).cache()
-    // size the iteration loop's parallelism to the data (the GBT-fit
-    // rule): `iters` sequential jobs over tiny partitions are pure
-    // scheduling overhead, so target ~100k rows/partition (floor 1) —
-    // a 100 TB reduction still fans out to thousands of tasks
-    val n = cached.count()
-    if (n == 0) {
-      cached.unpersist() // the try/finally below hasn't been entered yet
-      throw new IllegalArgumentException(
-        s"logistic fit has no complete training rows (all rows empty or " +
-          s"null in ${featureCols.mkString(", ")} / $labelCol)")
-    }
-    val parts = math.max(1L,
-      math.min(cached.rdd.getNumPartitions.toLong, n / 100000L)).toInt
-    val rows =
-      if (parts < cached.rdd.getNumPartitions) cached.coalesce(parts) else cached
+    // block column j < p is feature j+1; column p is the label
+    val blocks = FitBlocks.persist(df, featureCols :+ labelCol)
     try {
-      val xs: IndexedSeq[Column] =
-        lit(1.0) +: featureCols.toIndexedSeq.map(c => col(c).cast("double"))
-      val y = col(labelCol).cast("double")
+      // one job materializes the blocks and counts their rows
+      val n = FitBlocks.sum(blocks, 0, 1)((b, _, c) => c(0) += b.n).counts(0)
+      if (n == 0)
+        throw new IllegalArgumentException(
+          s"logistic fit has no complete training rows (all rows empty or " +
+            s"null in ${featureCols.mkString(", ")} / $labelCol)")
+      // size the iteration loop's parallelism to the data (the GBT-fit
+      // rule): `iters` sequential jobs over tiny partitions are pure
+      // scheduling overhead, so target ~100k rows/partition (floor 1) —
+      // a 100 TB reduction still fans out to thousands of tasks
+      val parts = math.max(1L,
+        math.min(blocks.getNumPartitions.toLong, n / 100000L)).toInt
+      val rows =
+        if (parts < blocks.getNumPartitions) GraftRddBridge.coalesceCached(blocks, parts)
+        else blocks
+      val tri = d * (d + 1) / 2
       val beta = new Array[Double](d)
-      val spark = df.sparkSession
       var t = 0
       while (t < iters) {
-        // β rides in as a broadcast single-row ARRAY column, not as
-        // inlined literals: the generated code is then byte-identical
-        // across iterations, so whole-stage codegen compiles ONCE for
-        // all `iters` passes instead of once per iteration (measured
-        // ~2× on the cold fit; the arithmetic is value-identical)
-        val betaDf = spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(beta.toSeq)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__beta",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, containsNull = false)))))
-        val withB = rows.crossJoin(broadcast(betaDf))
-        def bq(j: Int): Column = element_at(col("__beta"), j + 1)
-        // per-row: η = β₀ + Σ βⱼxⱼ (left-to-right), μ = σ(η),
-        // w = μ(1−μ), r = y − μ — arithmetic order mirrored by the SQL
-        // oracle generator; keep the two in lockstep
-        val eta = (1 to p).foldLeft(bq(0))((acc, j) => acc + bq(j) * xs(j))
-        val mu = lit(1.0) / (lit(1.0) + exp(-eta))
-        val wr = mu * (lit(1.0) - mu)
-        val rr = y - mu
-        // μ/w/r are PROJECTED once per row, and the tri + d sums read
-        // the projected columns (r15): inlining wr into every one of
-        // the tri cells made each iteration's analyzed tree ~2.5k
-        // nodes — ~0.25 s of driver planning per iteration × 6
-        // iterations, over half of fc_censored's wall (JobProfile gap).
-        // The optimizer keeps the projection (wr is non-cheap and
-        // referenced tri times, so CollapseProject won't inline it);
-        // each sum's per-row arithmetic — w·(xᵢ·xⱼ) on the identical μ
-        // — is unchanged, so the Newton sequence stays step-exact.
-        val prep = withB.select(
-          (0 until d).map(i => xs(i).as(s"__x$i")) ++
-            Seq(wr.as("__w"), rr.as("__r")): _*)
-        def px(i: Int): Column = col(s"__x$i")
-        val exprs = (for (i <- 0 until d; j <- i until d)
-          yield sum(col("__w") * px(i) * px(j))) ++
-          (0 until d).map(i => sum(col("__r") * px(i)))
-        val row = prep.agg(exprs.head, exprs.tail: _*).collect()(0)
-        val tri = d * (d + 1) / 2
+        val bt = beta.clone()
+        // slots 0..tri−1: Σ (w·xᵢ)·xⱼ for i ≤ j, row-major upper
+        // triangle; slots tri..tri+d−1: Σ r·xᵢ — with x₀ = 1.0, the
+        // products and their order as the SQL oracle generator writes
+        // them; keep the two in lockstep
+        val m = FitBlocks.sum(rows, tri + d, 0) { (b, s, _) =>
+          val x = new Array[Double](d)
+          x(0) = 1.0
+          val y = b.cols(p)
+          var r = 0
+          while (r < b.n) {
+            var j = 1
+            while (j < d) { x(j) = b.cols(j - 1)(r); j += 1 }
+            var eta = bt(0)
+            j = 1
+            while (j < d) { eta += bt(j) * x(j); j += 1 }
+            // Spark's exp is StrictMath.exp, interpreted and codegen'd
+            val mu = 1.0 / (1.0 + StrictMath.exp(-eta))
+            val w = mu * (1.0 - mu)
+            val res = y(r) - mu
+            var k = 0
+            var i = 0
+            while (i < d) {
+              val wi = w * x(i)
+              j = i
+              while (j < d) { s(k) += wi * x(j); k += 1; j += 1 }
+              i += 1
+            }
+            i = 0
+            while (i < d) { s(tri + i) += res * x(i); i += 1 }
+            r += 1
+          }
+        }
         val h = Array.ofDim[Double](d, d)
         var k = 0
         for (i <- 0 until d; j <- i until d) {
-          h(i)(j) = row.getDouble(k); h(j)(i) = row.getDouble(k); k += 1
+          h(i)(j) = m.sums(k); h(j)(i) = m.sums(k); k += 1
         }
-        val g = Array.tabulate(d)(i => row.getDouble(tri + i))
+        val g = Array.tabulate(d)(i => m.sums(tri + i))
         if (lambda != 0.0) {
           var j = 1
           while (j < d) { h(j)(j) += lambda; g(j) -= lambda * beta(j); j += 1 }
@@ -112,6 +105,6 @@ object Logistic {
         t += 1
       }
       (beta(0), beta.drop(1))
-    } finally cached.unpersist(blocking = false)
+    } finally blocks.unpersist(blocking = false)
   }
 }

@@ -47,8 +47,8 @@ object BenchWarmup {
         .groupBy("user_id").agg(avg(col("__l"))).count()
     }
     // ...and the fit machinery the forecaster family shares, on a
-    // 64-row frame (untimed): closed-form OLS moment passes (RDD
-    // treeAggregate + codegen'd SQL aggs), the collect_list/sort_array
+    // 64-row frame (untimed): closed-form OLS moment passes (the
+    // codegen'd SQL agg + the FitBlocks block fold), the collect_list/sort_array
     // per-entity state idiom, and the MLlib logistic/GBT solvers —
     // first use otherwise charges several seconds of JIT/codegen to
     // whichever fc_* query runs first, not to the engine under test
@@ -57,7 +57,7 @@ object BenchWarmup {
       val tiny = spark.range(64).select((col("id") % 8).as("e"),
         col("id").cast("double").as("x"))
         .withColumn("y", col("x") * 2 + 1)
-      graft.functions.Ols.fit(tiny, Seq("x"), "y")
+      graft.functions.Ols.fitSets(tiny, Seq(graft.functions.Ols.MomentSet(Seq("x"), "y")))
       graft.functions.Ols.fitAgg(tiny, Seq("x"), "y")
       tiny.groupBy("e").agg(sort_array(collect_list(struct(col("x"), col("y")))).as("s"))
         .select(col("e"), posexplode(col("s"))).count()

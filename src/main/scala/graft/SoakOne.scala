@@ -30,7 +30,7 @@ object SoakOne {
       f.agg(sum(col("x_logtok") + col("x_mwl") + col("x_stop") + col("x_alpha") + col("label")))
         .collect()(0).getDouble(0).toLong
     }
-    time("fitQualityModel (treeAggregate)") {
+    time("fitQualityModel (moment aggregate)") {
       graft.operators.DataSelection.fitQualityModel(docs, "doc_id", "text")._2.length.toLong
     }
     time("qualityClassifier full") {

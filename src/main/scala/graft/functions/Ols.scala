@@ -8,17 +8,22 @@ import org.apache.spark.sql.functions.col
   * The reference fits its linear forecasters with a closed-form
   * Cholesky solve, arguing the normal matrix is tiny relative to the
   * data (reference: src/linalg/mod.rs:9-14). The Spark-native
-  * equivalent: accumulate X^T X (upper triangle) and X^T y in ONE
-  * `treeAggregate` pass over the reduction matrix — associative
-  * partial sums, map-side combine, no shuffle of row data — then
-  * solve the (p+1)×(p+1) system on the driver. Replaces MLlib
-  * `LinearRegression` on the pure-OLS paths, which costs several
-  * passes (VectorAssembler materialization, label/feature summaries,
-  * then the solve) for the same coefficients.
+  * equivalent: accumulate X^T X (upper triangle) and X^T y in ONE pass
+  * over the reduction matrix — per-partition partial sums, no shuffle
+  * of row data — then solve the (p+1)×(p+1) system on the driver.
+  * Narrow fits run the pass as a codegen'd SQL `sum` aggregate; wide
+  * fits and the multi-model fits of one reduction ([[fitSets]]: every
+  * direct/ensemble horizon, the censored regression) run it as one
+  * [[FitBlocks]] job that folds every model's moments at once. Both
+  * merge partials in partition-index order from 0.0, so a fit's bits
+  * never depend on task timing. Replaces MLlib `LinearRegression` on
+  * the pure-OLS paths, which costs several passes (VectorAssembler
+  * materialization, label/feature summaries, then the solve) for the
+  * same coefficients.
   *
   * At 100 TB the single pass is the floor for any exact fit; the
-  * aggregate buffer is O(p²) doubles per partition, independent of
-  * row count.
+  * aggregate buffer is O(p²) doubles per partition and model,
+  * independent of row count.
   */
 object Ols {
 
@@ -32,67 +37,131 @@ object Ols {
     * reference: functime/forecasting/linear.py:34-39), which penalizes
     * the sum-of-squares objective without standardization. */
   def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
-          ridge: Double = 0.0): (Double, Array[Double]) = {
+          ridge: Double = 0.0): (Double, Array[Double]) =
     // narrow systems take the codegen'd SQL-agg moment pass (measured
-    // 2.5× over treeAggregate at 20M rows × 7 lags — no InternalRow
-    // boxing); wide lag matrices keep the RDD path, where d² codegen'd
-    // sum expressions stop paying off
-    if (featureCols.length <= 16) return fitAgg(df, featureCols, labelCol, ridge)
-    val p = featureCols.length
-    val d = p + 1 // column 0 is the implicit intercept regressor 1.0
-    val tri = d * (d + 1) / 2
-    val rows = df.na.drop(featureCols :+ labelCol)
-      .select((labelCol +: featureCols).map(c => col(c).cast("double")): _*)
-    val zero = (new Array[Double](tri), new Array[Double](d))
-    val (xtx, xty) = rows.rdd.treeAggregate(zero)(
-      seqOp = { case ((m, v), row) =>
-        val y = row.getDouble(0)
+    // 2.5× over an RDD row fold at 20M rows × 7 lags); wide lag
+    // matrices take the primitive block fold, where d² codegen'd sum
+    // expressions stop paying off
+    if (featureCols.length <= 16) fitAgg(df, featureCols, labelCol, ridge)
+    else fitSets(df, Seq(MomentSet(featureCols, labelCol)), ridge).head
+
+  /** One model of a [[fitSets]] pass: y ~ 1 + `features` over the rows
+    * where every feature and the label is neither null nor NaN (the
+    * `na.drop(features :+ label)` rule) and every `notNull` column is
+    * not null (`IS NOT NULL`: a NaN passes). */
+  final case class MomentSet(features: Seq[String], label: String,
+                             notNull: Seq[String] = Nil)
+
+  /** Closed-form fits of every set in `sets` over the rows of `df`, in
+    * ONE data pass: the columns the sets read become [[FitBlocks]]
+    * blocks (not persisted — the pass reads them once; rows that every
+    * set drops are not read), one job folds each set's moments under
+    * its own row rule ([[addMoments]]' layout, one slot range per set),
+    * and the driver solves the sets in order, each throwing the
+    * single-fit errors of [[fit]]. Every moment is the SQL `sum` that
+    * [[fitAgg]] takes over `df.cache()`, bit for bit (`OlsKernelSpec`). */
+  def fitSets(df: DataFrame, sets: Seq[MomentSet],
+              ridge: Double = 0.0): Seq[(Double, Array[Double])] = {
+    val complete = sets.map(s => s.features :+ s.label)
+    val cols = sets.flatMap(s => (s.features :+ s.label) ++ s.notNull).distinct
+    val dropNa = complete.reduce((a, b) => a.filter(b.contains)).distinct
+    val idx = cols.zipWithIndex.toMap
+    val feat = sets.map(_.features.map(idx).toArray).toArray
+    val label = sets.map(s => idx(s.label)).toArray
+    val full = complete.map(_.map(idx).toArray).toArray
+    val nonNull = sets.map(_.notNull.map(idx).toArray).toArray
+    val offs = sets.scanLeft(0)((o, s) => o + momentWidth(s.features.length + 1)).toArray
+    val m = FitBlocks.sum(FitBlocks.blocks(df, cols, dropNa), offs.last, 0) { (b, s, _) =>
+      val xs = feat.map(f => new Array[Double](f.length + 1))
+      xs.foreach(_(0) = 1.0)
+      var r = 0
+      while (r < b.n) {
         var k = 0
-        var a = 0
-        while (a < d) {
-          val xa = if (a == 0) 1.0 else row.getDouble(a)
-          var b = a
-          while (b < d) {
-            val xb = if (b == 0) 1.0 else row.getDouble(b)
-            m(k) += xa * xb
-            k += 1
-            b += 1
+        while (k < xs.length) {
+          var ok = true
+          var j = 0
+          while (ok && j < full(k).length) {
+            val c = full(k)(j)
+            ok = !b.isNull(c, r) && !b.cols(c)(r).isNaN
+            j += 1
           }
-          v(a) += xa * y
-          a += 1
+          j = 0
+          while (ok && j < nonNull(k).length) { ok = !b.isNull(nonNull(k)(j), r); j += 1 }
+          if (ok) {
+            val x = xs(k)
+            j = 0
+            while (j < feat(k).length) { x(j + 1) = b.cols(feat(k)(j))(r); j += 1 }
+            addMoments(s, offs(k), x, b.cols(label(k))(r), 1.0)
+          }
+          k += 1
         }
-        (m, v)
-      },
-      combOp = { case ((m1, v1), (m2, v2)) =>
-        var i = 0
-        while (i < tri) { m1(i) += m2(i); i += 1 }
-        i = 0
-        while (i < d) { v1(i) += v2(i); i += 1 }
-        (m1, v1)
-      })
-    // xtx(0) accumulates 1.0 per row (= n): zero means the aggregate saw
-    // no rows — same actionable error as the fitAgg path, not a silent
-    // jitter-fallback fit over an all-zero normal system
-    if (xtx(0) == 0.0)
-      throw new IllegalArgumentException(
-        s"OLS fit has no complete training rows (all rows empty or null " +
-          s"in ${featureCols.mkString(", ")} / $labelCol)")
-    val a = expand(xtx, d)
-    if (ridge != 0.0) {
-      var i = 1 // column 0 is the intercept — never penalized
-      while (i < d) { a(i)(i) += ridge; i += 1 }
+        r += 1
+      }
+    }.sums
+    sets.indices.map { k =>
+      solveMoments(m, offs(k), sets(k).features.length + 1, ridge)(
+        noRows("OLS fit", sets(k).features, sets(k).label))
     }
-    val w = choleskySolve(a, xty)
+  }
+
+  /** Slots of one moment set over d regressors (intercept included):
+    * [[addMoments]]' layout. */
+  private[graft] def momentWidth(d: Int): Int = d * (d + 1) / 2 + d + 2
+
+  /** The moment fold of every primitive pass — [[fitSets]], the wide
+    * path of [[gramMoments]] and the censored regression
+    * ([[graft.operators.CensoredForecaster]]). Adds one row to `s` from
+    * `off`: the upper triangle of w·(xᵢ·xⱼ) in row-major order, then
+    * w·(xᵢ·y), then 1.0 (the row count), then w·(y·y) — the SQL
+    * aggregate's layout and association in [[gramMoments]]. x(0) is 1.0
+    * for an intercept; w = 1.0 when unweighted (an exact product). From
+    * 0.0 in row order, each slot is Spark's `Sum` of the same term. */
+  private[graft] def addMoments(s: Array[Double], off: Int, x: Array[Double],
+                                y: Double, w: Double): Unit = {
+    val d = x.length
+    var k = off
+    var i = 0
+    while (i < d) {
+      val xi = x(i)
+      var j = i
+      while (j < d) { s(k) += w * (xi * x(j)); k += 1; j += 1 }
+      i += 1
+    }
+    i = 0
+    while (i < d) { s(k) += w * (x(i) * y); k += 1; i += 1 }
+    s(k) += 1.0
+    s(k + 1) += w * (y * y)
+  }
+
+  /** Solves the moment set at `off` of `m` ([[addMoments]]' layout, d
+    * regressors with the intercept first): throws `noRows` when the set
+    * saw no row, else adds `ridge` to the non-intercept diagonal and
+    * takes the Cholesky solve. Returns (intercept, weights). */
+  private[graft] def solveMoments(m: Array[Double], off: Int, d: Int, ridge: Double)(
+      noRows: => Exception): (Double, Array[Double]) = {
+    val tri = d * (d + 1) / 2
+    if (m(off + tri + d) == 0.0) throw noRows
+    val a = expand(java.util.Arrays.copyOfRange(m, off, off + tri), d)
+    var i = 1 // column 0 is the intercept — never penalized
+    if (ridge != 0.0) while (i < d) { a(i)(i) += ridge; i += 1 }
+    val w = choleskySolve(a, java.util.Arrays.copyOfRange(m, off + tri, off + tri + d))
     (w(0), w.drop(1))
   }
 
-  /** [[fit]] with the moment pass as a SQL aggregation instead of an
-    * RDD `treeAggregate`: the d(d+3)/2 `sum(xᵢ·xⱼ)` / `sum(xᵢ·y)`
-    * expressions run inside whole-stage codegen with partial
-    * aggregation — no InternalRow→Row boxing per input row (measured
-    * ~2× on a 5-dim fit over 1M rows). Same closed-form driver solve;
-    * use this for small d, the treeAggregate path for wide lag
-    * matrices where d² codegen'd sum expressions stop paying off. */
+  /** The error of a fit whose row rule leaves no row. */
+  private[graft] def noRows(what: String, featureCols: Seq[String],
+                            labelCol: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$what has no complete training rows (all rows empty or null " +
+        s"in ${featureCols.mkString(", ")} / $labelCol)")
+
+  /** [[fit]] with the moment pass as a SQL aggregation: the d(d+3)/2
+    * `sum(xᵢ·xⱼ)` / `sum(xᵢ·y)` expressions run inside whole-stage
+    * codegen with partial aggregation — no InternalRow→Row boxing per
+    * input row (measured ~2× over an RDD row fold on a 5-dim fit over
+    * 1M rows). Same closed-form driver solve; [[fit]] uses it for small
+    * d and the block fold for wide lag matrices, where d² codegen'd sum
+    * expressions stop paying off. */
   def fitAgg(df: DataFrame, featureCols: Seq[String], labelCol: String,
              ridge: Double = 0.0): (Double, Array[Double]) = {
     val (a, b) = momentsAgg(df, featureCols, labelCol)
@@ -216,9 +285,9 @@ object Ols {
     // Janino's size limits and the WHOLE aggregate stage silently
     // falls back to interpreted mode (observed at lags=64 on the M5
     // panel: d=65 → 2210 sums). The wide path below accumulates the
-    // identical sums in one primitive per-partition buffer — same
-    // row-order accumulation as codegen'd Sum — and folds partials in
-    // ascending partition order. Every oracle-gated fit (lags ≤ 14,
+    // identical sums in one primitive per-partition buffer (addMoments)
+    // — same row-order accumulation as codegen'd Sum — and folds
+    // partials in ascending partition order. Every oracle-gated fit (lags ≤ 14,
     // d ≤ 15 → ≤ 137 exprs) stays on the codegen'd aggregate,
     // bit-for-bit untouched.
     val vals: Array[Double] =
@@ -233,57 +302,27 @@ object Ols {
         val row = rows.agg(exprs.head, exprs.tail: _*).collect()(0)
         // sum() over zero rows is NULL — surface an actionable error,
         // not the opaque ROW_VALUE_IS_NULL getDouble failure
-        if (row.isNullAt(0))
-          throw new IllegalArgumentException(
-            s"$what has no complete training rows (all rows empty or null " +
-              s"in ${featureCols.mkString(", ")} / $labelCol)")
+        if (row.isNullAt(0)) throw noRows(what, featureCols, labelCol)
         Array.tabulate(width)(row.getDouble)
       } else {
-        val dd = d
         val isW = wOpt.isDefined
-        val parts = rows.select((xs ++ (y +: wOpt.toSeq)): _*).rdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            // layout: tri Gram sums, d X^T y sums, count, Σy² — each
-            // term w·(xᵢ·xⱼ) in weighted mode, the same association
-            // as the codegen'd path above
-            val buf = new Array[Double](tri + dd + 2)
-            val x = new Array[Double](dd + 1)
-            var any = false
+        // one buffer per partition, collected in partition-index order
+        val acc = new Array[Double](width)
+        rows.select((xs ++ (y +: wOpt.toSeq)): _*).rdd
+          .mapPartitions { it =>
+            val buf = new Array[Double](width)
+            val x = new Array[Double](d)
             it.foreach { r =>
               var i = 0
-              while (i <= dd) { x(i) = r.getDouble(i); i += 1 }
-              val wg = if (isW) r.getDouble(dd + 1) else 1.0
-              var idx = 0
-              i = 0
-              while (i < dd) {
-                val xi = x(i)
-                var j = i
-                while (j < dd) {
-                  buf(idx) += (if (isW) wg * (xi * x(j)) else xi * x(j))
-                  idx += 1; j += 1
-                }
-                i += 1
-              }
-              i = 0
-              while (i < dd) {
-                buf(tri + i) += (if (isW) wg * (x(i) * x(dd)) else x(i) * x(dd))
-                i += 1
-              }
-              buf(tri + dd) += 1.0
-              buf(tri + dd + 1) += (if (isW) wg * (x(dd) * x(dd)) else x(dd) * x(dd))
-              any = true
+              while (i < d) { x(i) = r.getDouble(i); i += 1 }
+              addMoments(buf, 0, x, r.getDouble(d), if (isW) r.getDouble(d + 1) else 1.0)
             }
-            if (any) Iterator((pid, buf)) else Iterator.empty
-          }.collect().sortBy(_._1).map(_._2)
-        if (parts.isEmpty)
-          throw new IllegalArgumentException(
-            s"$what has no complete training rows (all rows empty or null " +
-              s"in ${featureCols.mkString(", ")} / $labelCol)")
-        val acc = new Array[Double](tri + dd + 2)
-        parts.foreach { pbuf =>
-          var i = 0
-          while (i < acc.length) { acc(i) += pbuf(i); i += 1 }
-        }
+            Iterator.single(buf)
+          }.collect().foreach { buf =>
+            var i = 0
+            while (i < width) { acc(i) += buf(i); i += 1 }
+          }
+        if (acc(tri + d) == 0.0) throw noRows(what, featureCols, labelCol)
         acc
       }
     val a = expand(Array.tabulate(tri)(vals), d)

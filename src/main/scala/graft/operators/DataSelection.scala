@@ -182,8 +182,8 @@ object DataSelection {
     graft.queries.Q.rd6(featureExprs(text).zip(weights)
       .foldLeft(lit(intercept)) { case (acc, (f, wi)) => acc + f * wi })
 
-  /** Fit the linear quality model: one `treeAggregate` pass building
-    * the 5×5 normal system, solved on the driver ([[Ols.fit]]). The
+  /** Fit the linear quality model: one SQL moment-aggregate pass
+    * building the 5×5 normal system, solved on the driver ([[Ols.fitAgg]]). The
     * small ridge keeps the system SPD when a signal is constant over
     * the corpus (e.g. an all-alphabetic synthetic corpus pins
     * `x_alpha` ≡ 1, collinear with the intercept). */

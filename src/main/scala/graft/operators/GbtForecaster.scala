@@ -132,30 +132,43 @@ object CensoredForecaster {
   }
 
   def fit(p: Panel, lags: Int, freq: String, threshold: Double = 0.0): Model = {
-    val reduction = Forecasters.makeReduction(p, lags)
+    import graft.functions.{FitBlocks, Logistic, Ols}
     val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
-    val train = reduction.na.drop(featureCols :+ p.value)
-      .withColumn("__above", (col(p.value) > threshold).cast("double"))
-      .cache()
-    // both parts are moment-aggregation fits over the shared cached
-    // reduction: the classifier is IRLS Newton (one weighted-moment
-    // pass per iteration, graft.functions.Logistic — deterministic
+    // both parts are moment fits over one block set of the complete
+    // reduction rows, columns (lags, __above, value): the classifier is
+    // IRLS Newton (one weighted-moment pass per iteration — deterministic
     // fixed iterations, so the DuckDB oracle replicates it), the
-    // above-threshold regression is one-pass closed-form OLS. The two
-    // are INDEPENDENT models over the same cache — overlap them as
-    // concurrent jobs (r15) instead of serializing the OLS pass behind
-    // the 6-iteration Newton train; each fit's own sequence is
-    // untouched, so both stay oracle step-exact.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fits = Future.sequence(Seq(
-      Future(graft.functions.Logistic.fitIrls(train, featureCols, "__above")),
-      Future(graft.functions.Ols.fit(
-        train.filter(col(p.value) > threshold), featureCols, p.value))))
-    val Seq((pIntercept, pWeights), (rIntercept, rWeights)) =
-      Await.result(fits, Duration.Inf)
-    train.unpersist(blocking = false)
-    Model(pIntercept, pWeights, rIntercept, rWeights, lags, freq)
+    // above-threshold regression is closed-form OLS whose moments ride
+    // in the classifier's row-count pass
+    val blocks = FitBlocks.persist(
+      Forecasters.makeReduction(p, lags)
+        .withColumn("__above", (col(p.value) > threshold).cast("double")),
+      featureCols :+ "__above" :+ p.value)
+    try {
+      val d = lags + 1
+      // one job materializes the blocks, counts their rows and folds the
+      // moments of the rows with value > threshold (Spark's `>`)
+      val first = FitBlocks.sum(blocks, Ols.momentWidth(d), 1) { (b, s, c) =>
+        c(0) += b.n
+        val x = new Array[Double](d)
+        x(0) = 1.0
+        val y = b.cols(lags + 1)
+        var r = 0
+        while (r < b.n) {
+          if (FitBlocks.gt(y(r), threshold)) {
+            var j = 0
+            while (j < lags) { x(j + 1) = b.cols(j)(r); j += 1 }
+            Ols.addMoments(s, 0, x, y(r), 1.0)
+          }
+          r += 1
+        }
+      }
+      if (first.counts(0) == 0) throw Logistic.noRows(featureCols, "__above")
+      val (rIntercept, rWeights) = Ols.solveMoments(first.sums, 0, d, 0.0)(
+        Ols.noRows("OLS fit", featureCols, p.value))
+      val (pIntercept, pWeights) =
+        Logistic.fitBlocks(blocks, lags, first.counts(0), lambda = 0.0, iters = 6)
+      Model(pIntercept, pWeights, rIntercept, rWeights, lags, freq)
+    } finally blocks.unpersist(blocking = false)
   }
 }

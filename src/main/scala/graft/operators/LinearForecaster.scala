@@ -74,51 +74,41 @@ object LinearForecaster {
 
   /** "ensemble" strategy — _ar.py:83-114, :356-371: the recursive and
     * direct models fit independently, predictions averaged per
-    * (entity, step). ONE shared null-keeping lag pass feeds all
-    * fh + 1 closed-form fits: the recursive model's training set is
-    * the rows with f1..f_lags non-null (Ols.fit's na.drop), the
-    * direct models' is the rows past the full lags+fh−1 warmup — so
-    * sharing the window output changes no model's rows, and the
-    * per-fit moment aggregations run as concurrent jobs over the one
-    * cached frame. */
+    * (entity, step). ONE null-keeping lag pass feeds all fh + 1
+    * closed-form fits, and ONE moment pass ([[graft.functions.Ols.fitSets]])
+    * folds them all: the recursive model's training set is the rows
+    * with f1..f_lags and the label complete (Ols.fit's na.drop), each
+    * direct model's is the rows past the full lags+fh−1 warmup
+    * (`lag_{lags+fh−1} IS NOT NULL`, which passes NaN) with its own
+    * shifted window complete — so sharing the pass changes no model's
+    * rows. */
   def fitEnsemble(p: Panel, lags: Int, fh: Int, freq: String): EnsembleLinearModel = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val shared = Preprocess.lagKeepAll(p, 1 to (lags + fh - 1)).cache()
-    try {
-      val recCols = (1 to lags).map(l => s"${p.value}__lag_$l")
-      val directTrain = shared.filter(
-        org.apache.spark.sql.functions.col(s"${p.value}__lag_${lags + fh - 1}").isNotNull)
-      val fits = Future.sequence(
-        Future(graft.functions.Ols.fit(shared, recCols, p.value)) +:
-          (1 to fh).map { h => Future(
-            graft.functions.Ols.fit(directTrain,
-              (h until h + lags).map(l => s"${p.value}__lag_$l"), p.value))
-          })
-      val all = Await.result(fits, Duration.Inf)
-      EnsembleLinearModel(
-        LinearForecasterModel(all.head._1, all.head._2, lags, freq),
-        DirectLinearModel(all.tail, lags, freq))
-    } finally shared.unpersist(blocking = false)
+    import graft.functions.Ols.MomentSet
+    val lagCol = (l: Int) => s"${p.value}__lag_$l"
+    val warm = lagCol(lags + fh - 1)
+    val all = graft.functions.Ols.fitSets(
+      Preprocess.lagKeepAll(p, 1 to (lags + fh - 1)),
+      MomentSet((1 to lags).map(lagCol), p.value) +:
+        (1 to fh).map(h => MomentSet((h until h + lags).map(lagCol), p.value, Seq(warm))))
+    EnsembleLinearModel(
+      LinearForecasterModel(all.head._1, all.head._2, lags, freq),
+      DirectLinearModel(all.tail, lags, freq))
   }
 
   /** Direct multi-horizon strategy — _ar.py:53-73: one model per
     * horizon h, trained on the lag window shifted by h (features
-    * y_{t−h}..y_{t−h−L+1} → label y_t). At predict time every model
+    * y_{t−h}..y_{t−h−L+1} → label y_t). All fh models fit in ONE moment
+    * pass over one wide reduction ([[graft.functions.Ols.fitSets]]),
+    * each over its own `na.drop(features_h :+ label)` rows — the
+    * reference's per-model training rows. At predict time every model
     * scores the same per-entity tail [y_cutoff..y_{cutoff−L+1}], so
     * the whole fh-horizon prediction is broadcast column algebra —
     * one job, no recursion error compounding. */
   def fitDirect(p: Panel, lags: Int, fh: Int, freq: String): DirectLinearModel = {
-    // one cached wide reduction; each horizon is a single closed-form
-    // aggregation pass over its shifted lag window (per-horizon NA-drop
-    // keeps the reference's per-model training rows)
-    val reduction = Forecasters.makeReduction(p, lags + fh - 1).cache()
-    val models = (1 to fh).map { h =>
-      val featureCols = (h until h + lags).map(l => s"${p.value}__lag_$l")
-      graft.functions.Ols.fit(reduction, featureCols, p.value)
-    }
-    reduction.unpersist(blocking = false)
+    val models = graft.functions.Ols.fitSets(
+      Forecasters.makeReduction(p, lags + fh - 1),
+      (1 to fh).map(h => graft.functions.Ols.MomentSet(
+        (h until h + lags).map(l => s"${p.value}__lag_$l"), p.value)))
     DirectLinearModel(models, lags, freq)
   }
 }

@@ -1272,7 +1272,7 @@ object PipelineQueries {
     },
 
     // model-based quality filtering: ridge-fit the linear scorer that
-    // distills the Gopher rule decision (one treeAggregate pass →
+    // distills the Gopher rule decision (one moment-aggregate pass →
     // driver Cholesky; oracle re-derives the identical 5×5 solve in
     // SQL), then score every doc with the coefficients inlined.
     // keep thresholds the 6-dp-rounded score so the bit is stable.

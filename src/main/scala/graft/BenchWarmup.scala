@@ -47,8 +47,8 @@ object BenchWarmup {
         .groupBy("user_id").agg(avg(col("__l"))).count()
     }
     // ...and the fit machinery the forecaster family shares, on a
-    // 64-row frame (untimed): closed-form OLS moment passes (the
-    // codegen'd SQL agg + the FitBlocks block fold), the collect_list/sort_array
+    // 64-row frame (untimed): the closed-form OLS moment pass (the
+    // FitBlocks block fold), the collect_list/sort_array
     // per-entity state idiom, and the MLlib logistic/GBT solvers —
     // first use otherwise charges several seconds of JIT/codegen to
     // whichever fc_* query runs first, not to the engine under test
@@ -58,7 +58,6 @@ object BenchWarmup {
         col("id").cast("double").as("x"))
         .withColumn("y", col("x") * 2 + 1)
       graft.functions.Ols.fitSets(tiny, Seq(graft.functions.Ols.MomentSet(Seq("x"), "y")))
-      graft.functions.Ols.fitAgg(tiny, Seq("x"), "y")
       tiny.groupBy("e").agg(sort_array(collect_list(struct(col("x"), col("y")))).as("s"))
         .select(col("e"), posexplode(col("s"))).count()
       val labeled = new org.apache.spark.ml.feature.VectorAssembler()
@@ -72,8 +71,8 @@ object BenchWarmup {
     }
     // ...and the elite-ensemble machinery end-to-end on a 384-row
     // synthetic panel (untimed): concurrent backtest futures, the
-    // shared 14-lag matrix, the wide OLS moment aggregates (the same
-    // generated aggregate classes the sf-scale fit compiles), window
+    // shared 14-lag matrix, the OLS moment passes and the predict
+    // projections (the same generated classes the sf-scale fit compiles), window
     // rank + blend + localCheckpoint — first use otherwise charges
     // ~8 s of JIT/codegen to the timed fc_elite. The configs mirror
     // the registry's heavy queries EXACTLY (topK drives the stacker

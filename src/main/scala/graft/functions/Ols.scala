@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
 
 /** One-pass closed-form ordinary least squares.
   *
@@ -11,18 +10,19 @@ import org.apache.spark.sql.functions.col
   * equivalent: accumulate X^T X (upper triangle) and X^T y in ONE pass
   * over the reduction matrix — per-partition partial sums, no shuffle
   * of row data — then solve the (p+1)×(p+1) system on the driver.
-  * Narrow fits run the pass as a codegen'd SQL `sum` aggregate; wide
-  * fits and the multi-model fits of one reduction ([[fitSets]]: every
-  * direct/ensemble horizon, the censored regression) run it as one
-  * [[FitBlocks]] job that folds every model's moments at once. Both
-  * merge partials in partition-index order from 0.0, so a fit's bits
-  * never depend on task timing. Replaces MLlib `LinearRegression` on
-  * the pure-OLS paths, which costs several passes (VectorAssembler
-  * materialization, label/feature summaries, then the solve) for the
-  * same coefficients.
+  * Every fit here — closed-form, ridge, weighted, no-intercept,
+  * coordinate descent, the AIC sweep and LARS — takes its moments from
+  * one kind of pass, [[moments]]: one [[FitBlocks]] job that folds the
+  * moments of every requested model at once ([[fitSets]]: every
+  * direct/ensemble horizon; the censored regression folds the same
+  * [[addMoments]] in its own block pass). Partials merge in
+  * partition-index order from 0.0, so a fit's bits never depend on
+  * task timing. Replaces MLlib `LinearRegression` on the pure-OLS
+  * paths, which costs several passes (VectorAssembler materialization,
+  * label/feature summaries, then the solve) for the same coefficients.
   *
   * At 100 TB the single pass is the floor for any exact fit; the
-  * aggregate buffer is O(p²) doubles per partition and model,
+  * partial buffer is O(p²) doubles per partition and model,
   * independent of row count.
   */
 object Ols {
@@ -38,40 +38,52 @@ object Ols {
     * the sum-of-squares objective without standardization. */
   def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
           ridge: Double = 0.0): (Double, Array[Double]) =
-    // narrow systems take the codegen'd SQL-agg moment pass (measured
-    // 2.5× over an RDD row fold at 20M rows × 7 lags); wide lag
-    // matrices take the primitive block fold, where d² codegen'd sum
-    // expressions stop paying off
-    if (featureCols.length <= 16) fitAgg(df, featureCols, labelCol, ridge)
-    else fitSets(df, Seq(MomentSet(featureCols, labelCol)), ridge).head
+    // one-set moment pass (shared inside a withMomentSharing scope),
+    // then the driver-side ridge + Cholesky
+    solveMoments(gramMoments(df, featureCols, labelCol), 0, featureCols.length + 1, ridge)(
+      noRows("OLS fit", featureCols, labelCol))
 
-  /** One model of a [[fitSets]] pass: y ~ 1 + `features` over the rows
-    * where every feature and the label is neither null nor NaN (the
-    * `na.drop(features :+ label)` rule) and every `notNull` column is
-    * not null (`IS NOT NULL`: a NaN passes). */
+  /** One model of a [[moments]] pass: y ~ 1 + `features` over the rows
+    * where every feature, the label and the `weight` column is neither
+    * null nor NaN (the `na.drop(features :+ label ++ weight)` rule) and
+    * every `notNull` column is not null (`IS NOT NULL`: a NaN passes).
+    * With a `weight` column every term is w·(term) ([[addMoments]]). */
   final case class MomentSet(features: Seq[String], label: String,
-                             notNull: Seq[String] = Nil)
+                             notNull: Seq[String] = Nil, weight: Option[String] = None)
 
   /** Closed-form fits of every set in `sets` over the rows of `df`, in
-    * ONE data pass: the columns the sets read become [[FitBlocks]]
-    * blocks (not persisted — the pass reads them once; rows that every
-    * set drops are not read), one job folds each set's moments under
-    * its own row rule ([[addMoments]]' layout, one slot range per set),
-    * and the driver solves the sets in order, each throwing the
-    * single-fit errors of [[fit]]. Every moment is the SQL `sum` that
-    * [[fitAgg]] takes over `df.cache()`, bit for bit (`OlsKernelSpec`). */
+    * ONE data pass ([[moments]]); the driver solves the sets in order,
+    * each throwing the single-fit errors of [[fit]]. */
   def fitSets(df: DataFrame, sets: Seq[MomentSet],
               ridge: Double = 0.0): Seq[(Double, Array[Double])] = {
-    val complete = sets.map(s => s.features :+ s.label)
-    val cols = sets.flatMap(s => (s.features :+ s.label) ++ s.notNull).distinct
+    val m = moments(df, sets)
+    val offs = offsets(sets)
+    sets.indices.map { k =>
+      solveMoments(m, offs(k), sets(k).features.length + 1, ridge)(
+        noRows("OLS fit", sets(k).features, sets(k).label))
+    }
+  }
+
+  /** The one moment pass behind every fit: the columns the sets read
+    * become [[FitBlocks]] blocks (not persisted — the pass reads them
+    * once; rows that every set drops are not read), and one job folds
+    * each set's moments under its own row rule into its own slot range
+    * ([[addMoments]]' layout, from [[offsets]]). Every slot is the SQL
+    * `sum` of its term over `df.cache()`, bit for bit (`OlsKernelSpec`
+    * keeps that aggregate as the reference). A set that sees no row has
+    * a zero count slot. */
+  private[graft] def moments(df: DataFrame, sets: Seq[MomentSet]): Array[Double] = {
+    val complete = sets.map(s => (s.features :+ s.label) ++ s.weight)
+    val cols = sets.zip(complete).flatMap { case (s, c) => c ++ s.notNull }.distinct
     val dropNa = complete.reduce((a, b) => a.filter(b.contains)).distinct
     val idx = cols.zipWithIndex.toMap
     val feat = sets.map(_.features.map(idx).toArray).toArray
     val label = sets.map(s => idx(s.label)).toArray
+    val weight = sets.map(_.weight.fold(-1)(idx)).toArray
     val full = complete.map(_.map(idx).toArray).toArray
     val nonNull = sets.map(_.notNull.map(idx).toArray).toArray
-    val offs = sets.scanLeft(0)((o, s) => o + momentWidth(s.features.length + 1)).toArray
-    val m = FitBlocks.sum(FitBlocks.blocks(df, cols, dropNa), offs.last, 0) { (b, s, _) =>
+    val offs = offsets(sets)
+    FitBlocks.sum(FitBlocks.blocks(df, cols, dropNa), offs.last, 0) { (b, s, _) =>
       val xs = feat.map(f => new Array[Double](f.length + 1))
       xs.foreach(_(0) = 1.0)
       var r = 0
@@ -91,31 +103,31 @@ object Ols {
             val x = xs(k)
             j = 0
             while (j < feat(k).length) { x(j + 1) = b.cols(feat(k)(j))(r); j += 1 }
-            addMoments(s, offs(k), x, b.cols(label(k))(r), 1.0)
+            addMoments(s, offs(k), x, b.cols(label(k))(r),
+              if (weight(k) < 0) 1.0 else b.cols(weight(k))(r))
           }
           k += 1
         }
         r += 1
       }
     }.sums
-    sets.indices.map { k =>
-      solveMoments(m, offs(k), sets(k).features.length + 1, ridge)(
-        noRows("OLS fit", sets(k).features, sets(k).label))
-    }
   }
+
+  /** Start slot of each set in a [[moments]] vector, then its length. */
+  private def offsets(sets: Seq[MomentSet]): Array[Int] =
+    sets.scanLeft(0)((o, s) => o + momentWidth(s.features.length + 1)).toArray
 
   /** Slots of one moment set over d regressors (intercept included):
     * [[addMoments]]' layout. */
   private[graft] def momentWidth(d: Int): Int = d * (d + 1) / 2 + d + 2
 
-  /** The moment fold of every primitive pass — [[fitSets]], the wide
-    * path of [[gramMoments]] and the censored regression
-    * ([[graft.operators.CensoredForecaster]]). Adds one row to `s` from
-    * `off`: the upper triangle of w·(xᵢ·xⱼ) in row-major order, then
-    * w·(xᵢ·y), then 1.0 (the row count), then w·(y·y) — the SQL
-    * aggregate's layout and association in [[gramMoments]]. x(0) is 1.0
-    * for an intercept; w = 1.0 when unweighted (an exact product). From
-    * 0.0 in row order, each slot is Spark's `Sum` of the same term. */
+  /** The moment fold of every pass — [[moments]] and the censored
+    * regression ([[graft.operators.CensoredForecaster]]). Adds one row
+    * to `s` from `off`: the upper triangle of w·(xᵢ·xⱼ) in row-major
+    * order, then w·(xᵢ·y), then 1.0 (the row count), then w·(y·y) — the
+    * association `Q.olsMomentsSql` mirrors. x(0) is 1.0 for an
+    * intercept; w = 1.0 when unweighted (an exact product). From 0.0 in
+    * row order, each slot is Spark's `Sum` of the same term. */
   private[graft] def addMoments(s: Array[Double], off: Int, x: Array[Double],
                                 y: Double, w: Double): Unit = {
     val d = x.length
@@ -133,19 +145,38 @@ object Ols {
     s(k + 1) += w * (y * y)
   }
 
-  /** Solves the moment set at `off` of `m` ([[addMoments]]' layout, d
-    * regressors with the intercept first): throws `noRows` when the set
-    * saw no row, else adds `ridge` to the non-intercept diagonal and
-    * takes the Cholesky solve. Returns (intercept, weights). */
-  private[graft] def solveMoments(m: Array[Double], off: Int, d: Int, ridge: Double)(
-      noRows: => Exception): (Double, Array[Double]) = {
+  /** A normal system: (Xᵀ X, Xᵀ y, n, Σy²). */
+  private[graft] type Normal = (Array[Array[Double]], Array[Double], Double, Double)
+
+  /** The normal system of the moment set at `off` of `m` ([[addMoments]]'
+    * layout, d regressors with the intercept first) as (Xᵀ X, Xᵀ y, n,
+    * Σy²), fresh arrays; throws `noRows` when the set saw no row.
+    * `intercept` = false drops the intercept row and column: every slot
+    * is its own sum of the same per-row product (and 1.0·(xᵢ·xⱼ) is
+    * exact), so what is left is the no-intercept system bit for bit. */
+  private[graft] def system(m: Array[Double], off: Int, d: Int, intercept: Boolean = true)(
+      noRows: => Exception): Normal = {
     val tri = d * (d + 1) / 2
-    if (m(off + tri + d) == 0.0) throw noRows
+    val n = m(off + tri + d)
+    if (n == 0.0) throw noRows
+    val from = if (intercept) 0 else 1
     val a = expand(java.util.Arrays.copyOfRange(m, off, off + tri), d)
-    var i = 1 // column 0 is the intercept — never penalized
-    if (ridge != 0.0) while (i < d) { a(i)(i) += ridge; i += 1 }
-    val w = choleskySolve(a, java.util.Arrays.copyOfRange(m, off + tri, off + tri + d))
-    (w(0), w.drop(1))
+    (a.drop(from).map(_.drop(from)), java.util.Arrays.copyOfRange(m, off + tri + from, off + tri + d),
+      n, m(off + tri + d + 1))
+  }
+
+  /** Solves the moment set at `off` of `m` ([[system]]): adds `ridge` to
+    * every diagonal entry but the intercept's and takes the Cholesky
+    * solve. Returns (intercept, weights); the intercept is 0.0 when
+    * `intercept` = false. */
+  private[graft] def solveMoments(m: Array[Double], off: Int, d: Int, ridge: Double,
+                                  intercept: Boolean = true)(
+      noRows: => Exception): (Double, Array[Double]) = {
+    val (a, b, _, _) = system(m, off, d, intercept)(noRows)
+    var i = if (intercept) 1 else 0 // the intercept is never penalized
+    if (ridge != 0.0) while (i < a.length) { a(i)(i) += ridge; i += 1 }
+    val w = choleskySolve(a, b)
+    if (intercept) (w(0), w.drop(1)) else (0.0, w)
   }
 
   /** The error of a fit whose row rule leaves no row. */
@@ -155,75 +186,39 @@ object Ols {
       s"$what has no complete training rows (all rows empty or null " +
         s"in ${featureCols.mkString(", ")} / $labelCol)")
 
-  /** [[fit]] with the moment pass as a SQL aggregation: the d(d+3)/2
-    * `sum(xᵢ·xⱼ)` / `sum(xᵢ·y)` expressions run inside whole-stage
-    * codegen with partial aggregation — no InternalRow→Row boxing per
-    * input row (measured ~2× over an RDD row fold on a 5-dim fit over
-    * 1M rows). Same closed-form driver solve; [[fit]] uses it for small
-    * d and the block fold for wide lag matrices, where d² codegen'd sum
-    * expressions stop paying off. */
-  def fitAgg(df: DataFrame, featureCols: Seq[String], labelCol: String,
-             ridge: Double = 0.0): (Double, Array[Double]) = {
-    val (a, b) = momentsAgg(df, featureCols, labelCol)
-    val d = b.length
-    if (ridge != 0.0) {
-      var i = 1
-      while (i < d) { a(i)(i) += ridge; i += 1 }
-    }
-    val w = choleskySolve(a, b)
-    (w(0), w.drop(1))
-  }
-
   /** Fit y ~ w·x with NO intercept — scikit-learn
     * `LinearRegression/Ridge(fit_intercept=False)` semantics, the
     * reference elite zoo's `*_no_drift` members
     * (functime/forecasting/elite.py:92-95). With no unpenalized
     * intercept column, `ridge` > 0 adds λ to EVERY diagonal entry.
-    * One codegen'd moment pass (p ≤ 16 in all callers), closed-form
-    * Cholesky solve. Returns the weight vector; callers model the
-    * fit as (0.0, w). */
+    * The same one-set moment pass as [[fit]], read without the
+    * intercept row and column ([[system]]), then the Cholesky solve.
+    * Returns the weight vector; callers model the fit as (0.0, w). */
   def fitNoDrift(df: DataFrame, featureCols: Seq[String], labelCol: String,
-                 ridge: Double = 0.0): Array[Double] = {
-    val p = featureCols.length
-    val (a, b, _, _) = gramMoments(df, featureCols, labelCol,
-      intercept = false, what = "no-drift OLS fit")
-    if (ridge != 0.0) {
-      var i = 0
-      while (i < p) { a(i)(i) += ridge; i += 1 }
-    }
-    choleskySolve(a, b)
-  }
+                 ridge: Double = 0.0): Array[Double] =
+    solveMoments(gramMoments(df, featureCols, labelCol), 0, featureCols.length + 1, ridge,
+      intercept = false)(noRows("no-drift OLS fit", featureCols, labelCol))._2
 
-  /** The one-pass SQL-aggregated Gram/moment collection behind every
-    * closed-form and CD fit: the upper-triangle X^T X sums (optionally
-    * with the implicit 1.0 intercept regressor as column 0 — its (0,0)
-    * entry is then n), the X^T y vector, and optionally a trailing
-    * count(1) (no-intercept CD needs n) and Σy² (the AIC sweep's RSS
-    * recovery). One codegen'd aggregate, one data pass, regardless of
-    * which extras are requested — keeping the four fit families on one
-    * collection path so null-row handling and cast discipline can't
-    * drift apart. Returns (full symmetric X^T X, X^T y, n, Σy²) with
-    * NaN for extras not requested (n is a(0)(0) when intercept). */
   /** Scoped MOMENT SHARING (r15): many elite-zoo members fit over the
     * IDENTICAL train slice with the identical feature set — linear vs
     * ridge differ only in the driver-side solve (λ on the diagonal),
-    * lasso/elastic-net CD consume the very same intercept-carrying
-    * Gram, and the transform trios (linear/ridge/lasso over one scaled
-    * or detrended slice) share both the artifact subplan and the
-    * moments. Each such fit used to run its own one-row aggregate JOB
-    * (JobProfile r15: 6 Ols collects per split in fc_elite_stack where
-    * 3 distinct moment sets exist). Inside a `withMomentSharing` scope
-    * gramMoments memoizes on (canonicalized plan, features, label,
-    * intercept, weight): plan-identical requests run ONE job and share
-    * the collected doubles (deep-copied out — callers mutate the
-    * matrix in place for ridge). The cache lives only while scopes are
-    * open (cleared when the outermost exits), so nothing persists
-    * across queries or bench reps — strictly a within-query
-    * intermediate, like the caches the members already share. */
+    * lasso/elastic-net CD and the no-drift members read the very same
+    * moments, and the transform trios (linear/ridge/lasso over one
+    * scaled or detrended slice) share both the artifact subplan and the
+    * moments. Each such fit used to run its own moment JOB (JobProfile
+    * r15: 6 Ols collects per split in fc_elite_stack where 3 distinct
+    * moment sets exist). Inside a `withMomentSharing` scope
+    * [[gramMoments]] memoizes the raw moment vector on (canonicalized
+    * plan, features, label, weight): plan-identical requests run ONE
+    * job. Every caller expands its own matrix from the vector
+    * ([[system]]), so the shared doubles are never mutated. The cache
+    * lives only while scopes are open (cleared when the outermost
+    * exits), so nothing persists across queries or bench reps —
+    * strictly a within-query intermediate, like the caches the members
+    * already share. */
   private final class MomentHolder {
-    private var value: (Array[Array[Double]], Array[Double], Double, Double) = _
-    def get(body: () => (Array[Array[Double]], Array[Double], Double, Double))
-        : (Array[Array[Double]], Array[Double], Double, Double) = synchronized {
+    private var value: Array[Double] = _
+    def get(body: () => Array[Double]): Array[Double] = synchronized {
       if (value == null) value = body()
       value
     }
@@ -231,7 +226,7 @@ object Ols {
   private val momentScopeDepth = new java.util.concurrent.atomic.AtomicInteger(0)
   private val momentCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[String], String, Boolean, Option[String]), MomentHolder]()
+      Seq[String], String, Option[String]), MomentHolder]()
 
   /** Open a moment-sharing scope around `body` (re-entrant; the cache
     * clears when the outermost scope exits). */
@@ -241,104 +236,26 @@ object Ols {
     finally if (momentScopeDepth.decrementAndGet() == 0) momentCache.clear()
   }
 
-  private def gramMoments(df: DataFrame, featureCols: Seq[String],
-                          labelCol: String, intercept: Boolean,
-                          withCount: Boolean = false, withSyy: Boolean = false,
-                          what: String = "OLS fit",
-                          weightCol: Option[String] = None)
-      : (Array[Array[Double]], Array[Double], Double, Double) = {
-    if (momentScopeDepth.get() == 0)
-      return gramMomentsCompute(df, featureCols, labelCol, intercept, what, weightCol)
-    val key = (df.queryExecution.analyzed.canonicalized,
-      featureCols, labelCol, intercept, weightCol)
-    val holder = momentCache.computeIfAbsent(key, _ => new MomentHolder)
-    val (a, b, nn, syy) =
-      try holder.get(() =>
-        gramMomentsCompute(df, featureCols, labelCol, intercept, what, weightCol))
+  /** One set's moments over `df` (intercept layout): a one-set
+    * [[moments]] pass, memoized inside a [[withMomentSharing]] scope. */
+  private def gramMoments(df: DataFrame, featureCols: Seq[String], labelCol: String,
+                          weightCol: Option[String] = None): Array[Double] = {
+    def compute() = moments(df, Seq(MomentSet(featureCols, labelCol, weight = weightCol)))
+    if (momentScopeDepth.get() == 0) compute()
+    else {
+      val key = (df.queryExecution.analyzed.canonicalized, featureCols, labelCol, weightCol)
+      val holder = momentCache.computeIfAbsent(key, _ => new MomentHolder)
+      try holder.get(() => compute())
       catch { case t: Throwable => momentCache.remove(key, holder); throw t }
-    // defensive deep copy: fitAgg/fitNoDrift add ridge to the diagonal
-    // of the returned matrix in place
-    (a.map(_.clone()), b.clone(), nn, syy)
+    }
   }
 
-  /** The one-pass Gram/moment collection (always also collects the row
-    * count and Σy² — two extra independent sums in the same aggregate,
-    * which leave every other sum's value untouched and let plan-equal
-    * requests with different extras share one cache entry). */
-  private def gramMomentsCompute(df: DataFrame, featureCols: Seq[String],
-                                 labelCol: String, intercept: Boolean,
-                                 what: String, weightCol: Option[String])
-      : (Array[Array[Double]], Array[Double], Double, Double) = {
-    import org.apache.spark.sql.functions.{count, lit, sum}
-    val rows = df.na.drop(featureCols ++ (labelCol +: weightCol.toSeq))
-    val base = featureCols.map(c => col(c).cast("double"))
-    val xs = if (intercept) lit(1.0) +: base else base
-    val d = xs.length
-    val y = col(labelCol).cast("double")
-    // weighted moments enter every sum as w·(xᵢ·xⱼ) — the association
-    // Q.olsMomentsSql's weighted form mirrors; the wide path uses the
-    // identical order below
-    val wOpt = weightCol.map(c => col(c).cast("double"))
-    val tri = d * (d + 1) / 2
-    val width = tri + d + 2
-    // Past ~600 sum expressions the generated hashAgg method exceeds
-    // Janino's size limits and the WHOLE aggregate stage silently
-    // falls back to interpreted mode (observed at lags=64 on the M5
-    // panel: d=65 → 2210 sums). The wide path below accumulates the
-    // identical sums in one primitive per-partition buffer (addMoments)
-    // — same row-order accumulation as codegen'd Sum — and folds
-    // partials in ascending partition order. Every oracle-gated fit (lags ≤ 14,
-    // d ≤ 15 → ≤ 137 exprs) stays on the codegen'd aggregate,
-    // bit-for-bit untouched.
-    val vals: Array[Double] =
-      if (width <= 600) {
-        def t(prod: Column): Column = wOpt match {
-          case Some(wg) => wg * prod
-          case None => prod
-        }
-        val exprs = ((for (i <- 0 until d; j <- i until d) yield sum(t(xs(i) * xs(j)))) ++
-          (0 until d).map(i => sum(t(xs(i) * y)))) ++
-          Seq(count(lit(1)).cast("double"), sum(t(y * y)))
-        val row = rows.agg(exprs.head, exprs.tail: _*).collect()(0)
-        // sum() over zero rows is NULL — surface an actionable error,
-        // not the opaque ROW_VALUE_IS_NULL getDouble failure
-        if (row.isNullAt(0)) throw noRows(what, featureCols, labelCol)
-        Array.tabulate(width)(row.getDouble)
-      } else {
-        val isW = wOpt.isDefined
-        // one buffer per partition, collected in partition-index order
-        val acc = new Array[Double](width)
-        rows.select((xs ++ (y +: wOpt.toSeq)): _*).rdd
-          .mapPartitions { it =>
-            val buf = new Array[Double](width)
-            val x = new Array[Double](d)
-            it.foreach { r =>
-              var i = 0
-              while (i < d) { x(i) = r.getDouble(i); i += 1 }
-              addMoments(buf, 0, x, r.getDouble(d), if (isW) r.getDouble(d + 1) else 1.0)
-            }
-            Iterator.single(buf)
-          }.collect().foreach { buf =>
-            var i = 0
-            while (i < width) { acc(i) += buf(i); i += 1 }
-          }
-        if (acc(tri + d) == 0.0) throw noRows(what, featureCols, labelCol)
-        acc
-      }
-    val a = expand(Array.tabulate(tri)(vals), d)
-    val b = Array.tabulate(d)(i => vals(tri + i))
-    // nn is the exact row count (an integral double ≡ the former
-    // sum-of-1.0 intercept cell a(0)(0) below 2^53)
-    (a, b, vals(tri + d), vals(tri + d + 1))
-  }
-
-  /** The intercept-carrying moments shared by [[fitAgg]] and
-    * [[elasticNetCD]]. */
-  private def momentsAgg(df: DataFrame, featureCols: Seq[String],
-                         labelCol: String): (Array[Array[Double]], Array[Double]) = {
-    val (a, b, _, _) = gramMoments(df, featureCols, labelCol, intercept = true)
-    (a, b)
-  }
+  /** [[system]] of one set over `df` ([[gramMoments]]); `what` names the
+    * fit in the no-rows error. */
+  private def gram(df: DataFrame, featureCols: Seq[String], labelCol: String, what: String,
+                   intercept: Boolean = true): Normal =
+    system(gramMoments(df, featureCols, labelCol), 0, featureCols.length + 1, intercept)(
+      noRows(what, featureCols, labelCol))
 
   /** Weighted least squares — the sample-weight hook of the
     * reference's regressors (base/model.py:48 `fit(..., sample_weight)`;
@@ -348,19 +265,12 @@ object Ols {
     * exact association is mirrored by Q.olsMomentsSql's weighted
     * form — keep them in lockstep) including the intercept row, solved
     * by the same Cholesky. Still ONE data pass at any scale. Rows with
-    * a null weight are dropped like null features; weights are taken
-    * as-is (no normalization — WLS is scale-invariant in w). */
+    * a null or NaN weight are dropped like null features; weights are
+    * taken as-is (no normalization — WLS is scale-invariant in w). */
   def fitWeighted(df: DataFrame, featureCols: Seq[String], labelCol: String,
-                  weightCol: String): (Double, Array[Double]) = {
-    // shares gramMoments so the >600-expression wide path (the Janino
-    // hashAgg size guard, see gramMoments' comment) applies to
-    // weighted fits too — a hand-rolled agg here silently fell back
-    // to interpreted codegen at M5-scale lag budgets (round-10 review)
-    val (a, b, _, _) = gramMoments(df, featureCols, labelCol,
-      intercept = true, what = "weighted OLS fit", weightCol = Some(weightCol))
-    val w = choleskySolve(a, b)
-    (w(0), w.drop(1))
-  }
+                  weightCol: String): (Double, Array[Double]) =
+    solveMoments(gramMoments(df, featureCols, labelCol, Some(weightCol)), 0,
+      featureCols.length + 1, 0.0)(noRows("weighted OLS fit", featureCols, labelCol))
 
   /** Lasso / elastic-net by cyclic coordinate descent on the CENTERED
     * normal-equation moments — scikit-learn `ElasticNet(alpha,
@@ -372,16 +282,15 @@ object Ols {
     * Gram updates below do.
     *
     * L1 has no closed form, but CD needs only X^T X / X^T y — so at
-    * 100 TB this is still ONE data pass (the same `momentsAgg`
-    * aggregation as OLS/ridge) plus O(sweeps·p²) driver flops,
-    * instead of an iterative solver passing over the data per step.
-    * A FIXED `sweeps` count (no tolerance early-exit) keeps the
-    * update sequence deterministic, so the DuckDB oracle
-    * (Q.cdSolveSql) replicates it step-exactly. */
+    * 100 TB this is still ONE data pass (the same moment pass as
+    * OLS/ridge) plus O(sweeps·p²) driver flops, instead of an iterative
+    * solver passing over the data per step. A FIXED `sweeps` count (no
+    * tolerance early-exit) keeps the update sequence deterministic, so
+    * the DuckDB oracle (Q.cdSolveSql) replicates it step-exactly. */
   def elasticNetCD(df: DataFrame, featureCols: Seq[String], labelCol: String,
                    alpha: Double, l1Ratio: Double,
                    sweeps: Int = 40): (Double, Array[Double]) = {
-    val (a, b) = momentsAgg(df, featureCols, labelCol)
+    val (a, b, _, _) = gram(df, featureCols, labelCol, "OLS fit")
     cdFromMoments(a, b, alpha, l1Ratio, sweeps)
   }
 
@@ -394,30 +303,8 @@ object Ols {
   def elasticNetCDNoDrift(df: DataFrame, featureCols: Seq[String],
                           labelCol: String, alpha: Double, l1Ratio: Double,
                           sweeps: Int): Array[Double] = {
-    val p = featureCols.length
-    val (g, b, nn, _) = gramMoments(df, featureCols, labelCol,
-      intercept = false, withCount = true, what = "no-drift CD fit")
-    val thr = nn * (alpha * l1Ratio)
-    val l2 = nn * (alpha * (1.0 - l1Ratio))
-    val w = new Array[Double](p)
-    var t = 0
-    while (t < sweeps) {
-      var j = 0
-      while (j < p) {
-        var rho = b(j)
-        var k = 0
-        while (k < p) { if (k != j) rho -= g(j)(k) * w(k); k += 1 }
-        val den = g(j)(j) + l2
-        w(j) =
-          if (den <= 0.0) 0.0
-          else if (rho > thr) (rho - thr) / den
-          else if (rho < -thr) (rho + thr) / den
-          else 0.0
-        j += 1
-      }
-      t += 1
-    }
-    w
+    val (g, b, nn, _) = gram(df, featureCols, labelCol, "no-drift CD fit", intercept = false)
+    cdSweeps(g, b, nn * (alpha * l1Ratio), nn * (alpha * (1.0 - l1Ratio)), sweeps)
   }
 
   /** LassoLarsIC analog — the reference elite's final stacking
@@ -448,9 +335,14 @@ object Ols {
                  alphaGrid: Seq[Double], sweeps: Int = 40)
       : (Double, Double, Array[Double]) = {
     require(alphaGrid.nonEmpty, "lassoAicCD needs a non-empty alpha grid")
-    val (a, b, nn, syy) = gramMoments(df, featureCols, labelCol,
-      intercept = true, withSyy = true, what = "lassoAicCD")
-    val p = featureCols.length
+    lassoAic(gram(df, featureCols, labelCol, "lassoAicCD"), alphaGrid, sweeps)
+  }
+
+  /** [[lassoAicCD]] on a collected [[system]]. */
+  private[graft] def lassoAic(sys: Normal, alphaGrid: Seq[Double],
+                              sweeps: Int): (Double, Double, Array[Double]) = {
+    val (a, b, nn, syy) = sys
+    val p = b.length - 1
     val cands = alphaGrid.map { al =>
       val (b0, w) = cdFromMoments(a, b, al, 1.0, sweeps)
       // RSS = Σy² − 2·Σy·ŷ + Σŷ² from raw moments, fixed fold order
@@ -677,9 +569,14 @@ object Ols {
                   criterion: String = "aic"): (Double, Double, Array[Double]) = {
     require(criterion == "aic" || criterion == "bic",
       s"lassoLarsIC criterion must be aic or bic (got '$criterion')")
-    val (a, b, nn, syy) = gramMoments(df, featureCols, labelCol,
-      intercept = true, withSyy = true, what = "lassoLarsIC")
-    val p = featureCols.length
+    lassoLarsICOf(gram(df, featureCols, labelCol, "lassoLarsIC"), criterion)
+  }
+
+  /** [[lassoLarsIC]] on a collected [[system]]. */
+  private[graft] def lassoLarsICOf(sys: Normal,
+                                   criterion: String): (Double, Double, Array[Double]) = {
+    val (a, b, nn, syy) = sys
+    val p = b.length - 1
     require(nn > p + 1,
       s"lassoLarsIC needs n > p + 1 rows for the noise variance (n=$nn, p=$p)")
     val cm = Array.tabulate(p, p)((j, k) => a(j + 1)(k + 1) - a(0)(j + 1) * a(0)(k + 1) / nn)
@@ -725,10 +622,9 @@ object Ols {
     (alpha, (b(0) - dot) / nn, w)
   }
 
-  /** The driver-side CD loop; arithmetic order (centering, the ρ
-    * accumulation k-ascending, soft-threshold branches, the intercept
-    * recovery) is replicated term-for-term by Q.cdSolveSql — keep the
-    * two in lockstep. */
+  /** The driver-side centered CD solve; arithmetic order (centering,
+    * [[cdSweeps]], the intercept recovery) is replicated term-for-term
+    * by Q.cdSolveSql — keep the two in lockstep. */
   private[graft] def cdFromMoments(a: Array[Array[Double]], b: Array[Double],
                                    alpha: Double, l1Ratio: Double,
                                    sweeps: Int): (Double, Array[Double]) = {
@@ -736,17 +632,31 @@ object Ols {
     val nn = a(0)(0)
     val cm = Array.tabulate(p, p)((j, k) => a(j + 1)(k + 1) - a(0)(j + 1) * a(0)(k + 1) / nn)
     val cv = Array.tabulate(p)(j => b(j + 1) - a(0)(j + 1) * b(0) / nn)
-    val thr = nn * (alpha * l1Ratio)
-    val l2 = nn * (alpha * (1.0 - l1Ratio))
+    val w = cdSweeps(cm, cv, nn * (alpha * l1Ratio), nn * (alpha * (1.0 - l1Ratio)), sweeps)
+    var dot = 0.0
+    var j = 0
+    while (j < p) { dot += w(j) * a(0)(j + 1); j += 1 }
+    ((b(0) - dot) / nn, w)
+  }
+
+  /** The one cyclic coordinate-descent loop ([[cdFromMoments]] on the
+    * centered system, [[elasticNetCDNoDrift]] on the raw one): `sweeps`
+    * fixed passes of w_j = S(c_j − Σ_{k≠j} g_jk·w_k, thr) / (g_jj + l2)
+    * for j ascending, ρ accumulated k-ascending from c_j. Q.cdSolveSql
+    * and Q.cdSolveNoDriftSql replicate it term-for-term — keep them in
+    * lockstep. */
+  private def cdSweeps(g: Array[Array[Double]], c: Array[Double], thr: Double,
+                       l2: Double, sweeps: Int): Array[Double] = {
+    val p = c.length
     val w = new Array[Double](p)
     var t = 0
     while (t < sweeps) {
       var j = 0
       while (j < p) {
-        var rho = cv(j)
+        var rho = c(j)
         var k = 0
-        while (k < p) { if (k != j) rho -= cm(j)(k) * w(k); k += 1 }
-        val den = cm(j)(j) + l2
+        while (k < p) { if (k != j) rho -= g(j)(k) * w(k); k += 1 }
+        val den = g(j)(j) + l2
         w(j) =
           if (den <= 0.0) 0.0
           else if (rho > thr) (rho - thr) / den
@@ -756,10 +666,7 @@ object Ols {
       }
       t += 1
     }
-    var dot = 0.0
-    var j = 0
-    while (j < p) { dot += w(j) * a(0)(j + 1); j += 1 }
-    ((b(0) - dot) / nn, w)
+    w
   }
 
   private def expand(tri: Array[Double], d: Int): Array[Array[Double]] = {
@@ -790,7 +697,9 @@ object Ols {
           var k = 0
           while (k < j) { s -= l(i)(k) * l(j)(k); k += 1 }
           if (i == j) {
-            if (s <= 0.0) return None
+            // a NaN pivot (non-finite moments) fails too, so it reaches
+            // the jittered retries and the throw below
+            if (!(s > 0.0)) return None
             l(i)(i) = math.sqrt(s)
           } else l(i)(j) = s / l(j)(j)
           j += 1

@@ -43,6 +43,13 @@ object AutoForecast {
     row.getDouble(0)
   }
 
+  /** [[meanScore]] of a backtest this search owns (an eager checkpoint
+    * that nothing reads after the score), then its blocks released
+    * instead of left to a driver GC. */
+  private def scoreOwned(bt: DataFrame, entity: Seq[String], what: => String): Double =
+    try meanScore(backtestScore(bt, entity), what)
+    finally EliteDeep.releaseCheckpoint(bt)
+
   /** Expanding-window backtest of the linear AR forecaster sharing ONE
     * window pass across all splits: because each train slice is a row
     * PREFIX per entity, its lag matrix is exactly the full-data lag
@@ -180,7 +187,7 @@ object AutoForecast {
       // over the same cached panel
       val scored = Await.result(Future.sequence(lagGrid.map { lags => Future {
         val bt = backtestLinearPrefix(cached, timeCol, lags, testSize, nSplits, stepSize)
-        val mean = meanScore(backtestScore(bt, p.entity), s"autoLinear(lags=$lags)")
+        val mean = scoreOwned(bt, p.entity, s"autoLinear(lags=$lags)")
         (lags, mean)
       } }), Duration.Inf)
       val (bestLags, bestScore) = scored.minBy(_._2)
@@ -204,7 +211,7 @@ object AutoForecast {
     try {
       val scored = Await.result(Future.sequence(candidates.map { c => Future {
         val bt = Conformal.backtest(cached, timeCol, testSize, nSplits, stepSize, fitPredict(c))
-        val mean = meanScore(backtestScore(bt, p.entity), s"autoModel(candidate=$c)")
+        val mean = scoreOwned(bt, p.entity, s"autoModel(candidate=$c)")
         (c, mean)
       } }), Duration.Inf)
       scored.minBy(_._2)
@@ -232,7 +239,7 @@ object AutoForecast {
         val scored = Await.result(Future.sequence(lagGrid.map { lags => Future {
           val bt = backtestLinearPrefix(cached, timeCol, lags, testSize, nSplits,
             stepSize, ridge = regParam)
-          val mean = meanScore(backtestScore(bt, p.entity), s"autoRegularized(lags=$lags)")
+          val mean = scoreOwned(bt, p.entity, s"autoRegularized(lags=$lags)")
           (lags, mean)
         } }), Duration.Inf)
         scored.minBy(_._2)
@@ -555,8 +562,7 @@ object AutoForecast {
         // enumeration (what the oracle's CASE chains use too)
         val (cfg, best, _) = cfoWalk("lin", seed, nCandidates, dimsLinear) { c =>
           val cand = decodeLinear(c)
-          meanScore(backtestScore(bt(cand, nSplits), p.entity),
-            s"autoSearch(cfo, $cand)")
+          scoreOwned(bt(cand, nSplits), p.entity, s"autoSearch(cfo, $cand)")
         }
         val (configs, _) = cfoReachable("lin", seed, nCandidates, dimsLinear)
         val (lags, alpha, l1) = decodeLinear(cfg)
@@ -570,7 +576,7 @@ object AutoForecast {
       val (winner, best) = successiveHalving(cands, nSplits,
         (c: (Int, Double, Double)) =>
           c._1.toDouble + (if (c._3 != 0.0) 100.0 else 0.0)) { (c, i, splits) =>
-        meanScore(backtestScore(bt(c, splits), p.entity),
+        scoreOwned(bt(c, splits), p.entity,
           s"autoSearch(candidate=$i, $c, splits=$splits)")
       }
       val (lags, alpha, l1) = cands(winner)
@@ -616,7 +622,7 @@ object AutoForecast {
       val bt = Conformal.backtest(cached, timeCol, testSize, splits, stepSize,
         (tr, h) => TreeBoost.fit(tr, lags, freq, rounds, bins, eta)
           .predict(tr, timeCol, h))
-      meanScore(backtestScore(bt, p.entity), what)
+      scoreOwned(bt, p.entity, what)
     }
     try {
       if (strategy == "cfo") {

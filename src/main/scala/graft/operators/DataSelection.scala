@@ -182,14 +182,14 @@ object DataSelection {
     graft.queries.Q.rd6(featureExprs(text).zip(weights)
       .foldLeft(lit(intercept)) { case (acc, (f, wi)) => acc + f * wi })
 
-  /** Fit the linear quality model: one SQL moment-aggregate pass
-    * building the 5×5 normal system, solved on the driver ([[Ols.fitAgg]]). The
+  /** Fit the linear quality model: one moment pass building the 5×5
+    * normal system, solved on the driver ([[Ols.fit]]). The
     * small ridge keeps the system SPD when a signal is constant over
     * the corpus (e.g. an all-alphabetic synthetic corpus pins
     * `x_alpha` ≡ 1, collinear with the intercept). */
   def fitQualityModel(docs: DataFrame, idCol: String, textCol: String,
                       ridge: Double = 1e-3): (Double, Array[Double]) =
-    Ols.fitAgg(qualityTrainingFrame(docs, idCol, textCol), qualityFeatures,
+    Ols.fit(qualityTrainingFrame(docs, idCol, textCol), qualityFeatures,
       "label", ridge)
 
   /** Train the quality model and score every document with the
@@ -206,7 +206,7 @@ object DataSelection {
     // and would otherwise run twice (fit, then score)
     val feats = qualityTrainingFrame(docs, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (b0, w) = Ols.fitAgg(feats, qualityFeatures, "label", ridge)
+    val (b0, w) = Ols.fit(feats, qualityFeatures, "label", ridge)
     val score = qualityFeatures.zip(w)
       .foldLeft(lit(b0)) { case (acc, (f, wi)) => acc + col(f) * wi }
     feats.select(col(idCol), col("label").cast("long").as("label"),

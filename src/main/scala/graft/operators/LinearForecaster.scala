@@ -297,16 +297,11 @@ object ExogLinear {
   }
 
   /** Fit y ~ lags 1..L + exogCols (already present on the panel frame)
-    * — one closed-form moment pass over the materialized reduction. */
+    * — one closed-form moment pass over the reduction. */
   def fit(p: Panel, lags: Int, freq: String, exogCols: Seq[String]): Model = {
-    val reduction = Forecasters.makeReduction(p, lags)
     val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l") ++ exogCols
-    val slim = reduction
-      .select((p.value +: featureCols).map(col): _*).cache()
-    try {
-      val (b0, w) = graft.functions.Ols.fit(slim, featureCols, p.value)
-      Model(b0, w.take(lags), w.drop(lags), lags, freq, exogCols)
-    } finally slim.unpersist(blocking = false)
+    val (b0, w) = graft.functions.Ols.fit(Forecasters.makeReduction(p, lags), featureCols, p.value)
+    Model(b0, w.take(lags), w.drop(lags), lags, freq, exogCols)
   }
 }
 
@@ -370,13 +365,9 @@ object ExogDowLinear {
   }
 
   /** Fit y ~ lags 1..L + dow dummies over the AR reduction — one
-    * closed-form moment pass like every other linear fit. The dummy
-    * projection is materialized (narrow cache of label + features)
-    * before the moment aggregation: projection collapse would
-    * otherwise inline each CASE dummy into every one of the ~d²/2
-    * moment products, and the generated aggregate blows past the JIT
-    * method limits (measured 9.3 s → materialized ≈ linear-fit cost
-    * at 20M rows). */
+    * closed-form moment pass like every other linear fit. The block
+    * pass evaluates each CASE dummy once per row, so no materialized
+    * copy of the projection is needed. */
   def fit(p: Panel, lags: Int, freq: String, timeCol: String): Model = {
     val reduction = Forecasters.makeReduction(p, lags)
       .withColumn("__dw", pmod(expr(s"(CAST($timeCol AS LONG) div 86400)") + 3, lit(7)))
@@ -384,12 +375,8 @@ object ExogDowLinear {
       d.withColumn(s"__dow_$k", when(col("__dw") === k, 1.0).otherwise(0.0)))
     val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l") ++
       (1 to 6).map(k => s"__dow_$k")
-    val slim = withDummies
-      .select((p.value +: featureCols).map(col): _*).cache()
-    try {
-      val (b0, w) = graft.functions.Ols.fit(slim, featureCols, p.value)
-      Model(b0, w.take(lags), w.drop(lags), lags, freq)
-    } finally slim.unpersist(blocking = false)
+    val (b0, w) = graft.functions.Ols.fit(withDummies, featureCols, p.value)
+    Model(b0, w.take(lags), w.drop(lags), lags, freq)
   }
 }
 

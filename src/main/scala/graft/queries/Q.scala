@@ -159,7 +159,8 @@ object Q {
   /** Cyclic-coordinate-descent elastic-net solve (the sklearn
     * `ElasticNet`/`Lasso` objective) as ONE RECURSIVE-CTE fold — the
     * oracle side of [[graft.functions.Ols.cdFromMoments]], replicating
-    * its arithmetic term-for-term: moment centering, the k-ascending ρ
+    * its arithmetic term-for-term: moment centering, the one CD loop
+    * (`Ols.cdSweeps`, shared with the no-intercept solve): the k-ascending ρ
     * accumulation (left-associated subtraction chain, element
     * extraction from the packed lists is exact), the soft-threshold
     * branches (ρ let-bound once via the single-element-list lambda),
@@ -232,8 +233,9 @@ object Q {
     * drift=false predStages naming. */
   def cdSolveNoDriftSql(p: Int, alpha: Double, l1Ratio: Double, sweeps: Int,
                         from0: String, pre: String = "cnd"): String = {
-    // same recursive fold as [[cdSolveSql]], on the RAW Gram (0-based
-    // feature indices, no centering, no intercept recovery)
+    // same recursive fold as [[cdSolveSql]] — the same Ols.cdSweeps
+    // loop — on the RAW Gram (0-based feature indices, no centering,
+    // no intercept recovery)
     def mName(j: Int, k: Int) = s"m_${math.min(j, k)}_${math.max(j, k)}"
     val consts = Seq(
       s"nn * ${alpha * l1Ratio} AS ${pre}_thr",
@@ -287,7 +289,7 @@ object Q {
                     penalizeFrom: Int = 1, weight: String = ""): String = {
     val d = xs.length
     // weighted moments enter as w·(xᵢ·xⱼ) — the same association
-    // Ols.fitWeighted's Spark aggregates use; keep them in lockstep
+    // Ols.addMoments folds for Ols.fitWeighted; keep them in lockstep
     def t(prod: String) = if (weight.isEmpty) prod else s"$weight * ($prod)"
     val ms = for (i <- 0 until d; j <- i until d) yield {
       val pen = if (ridge != 0.0 && i == j && i >= penalizeFrom) s" + $ridge" else ""

@@ -437,4 +437,20 @@ class AutoForecastSpec extends SparkSpec {
       stepSize = 5, cdSweeps = 6, strategy = "halving")
     assert(AutoForecast.searchCandidates(42L, 4)(hw) == hc)
   }
+
+  test("auto searches release every backtest checkpoint they score") {
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val signal = (0 until 60).map(t => 50 + 20 * math.sin(0.3 * t))
+    val p = panel(signal, signal.map(_ + 3.0))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val wasEmpty = cacheManager.isEmpty
+    AutoForecast.autoSearchRegularized(p, "t", "1i", seed = 42L, nCandidates = 5,
+      testSize = 5, nSplits = 2, stepSize = 5, cdSweeps = 6)
+    AutoForecast.autoTreeBoost(p, "t", "1i", lagGrid = Seq(1, 3), rounds = 2, bins = 4,
+      eta = 0.5, testSize = 3, nSplits = 2, stepSize = 3)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"leftover persisted RDDs: $left")
+    assert(cacheManager.isEmpty == wasEmpty, "leftover cached frame")
+  }
 }

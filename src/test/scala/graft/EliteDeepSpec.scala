@@ -168,6 +168,29 @@ class EliteDeepSpec extends SparkSpec {
     assert(rows.forall(r => !r.isNullAt(r.length - 1)))
   }
 
+  test("eliteDeep leaves only its result's own checkpoint behind") {
+    val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val p = panel(Seq.tabulate(30)(i => i * 1.0 + (i % 3)),
+      Seq.tabulate(30)(i => 50.0 - i * 0.5))
+    val wasEmpty = cacheManager.isEmpty
+    for (strategy <- Seq("mean", "lasso")) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = EliteDeep.run(p, "t", "1i", fh = 2, topK = 2, strategy = strategy,
+        testSize = 4, nSplits = 2, stepSize = 4, sp = 3,
+        models = Seq("naive", "linear_7", "ridge_7", "lasso_7"))
+      assert(out.collect().length == 4)
+      val own = out.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.subsetOf(own), s"$strategy: leftover persisted RDDs ${left -- own}")
+      own.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    }
+    assert(cacheManager.isEmpty == wasEmpty, "leftover cached frame")
+  }
+
   test("eliteDeep lasso falls back to naive where naive ranks first") {
     // pure random-walk-ish flat series: naive backtests perfectly and
     // must win rank 1, routing the entity to the naive forecast

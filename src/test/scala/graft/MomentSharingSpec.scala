@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.Ols
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** r15 optimization internals: scoped OLS moment sharing and the
@@ -28,13 +29,45 @@ class MomentSharingSpec extends SparkSpec {
       }
       assert(sharedOls._1 == plainOls._1 &&
         sharedOls._2.sameElements(plainOls._2), "OLS drifted under sharing")
-      // ridge mutates the Gram diagonal in place — the cache must hand
-      // out copies or the SECOND fit reads a penalized matrix
+      // ridge goes on the diagonal of the caller's own matrix — the
+      // shared moment vector must stay unpenalized for the next fit
       assert(sharedRidge._1 == plainRidge._1 &&
         sharedRidge._2.sameElements(plainRidge._2), "ridge drifted under sharing")
       assert(sharedCd._1 == plainCd._1 &&
         sharedCd._2.sameElements(plainCd._2), "CD drifted under sharing")
     } finally d.unpersist(blocking = false)
+  }
+
+  /** The jobs `body` starts on this thread, and its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val group = s"moment-sharing-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      org.apache.spark.ListenerDrain(sc)
+      (n.get, r)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("a drift and a no-drift fit over one frame share one moment job") {
+    val d = frame
+    val fs = Seq("x1", "x2")
+    val (plainJobs, (plain, plainNd)) =
+      jobsOf((Ols.fit(d, fs, "y", ridge = 0.5), Ols.fitNoDrift(d, fs, "y", ridge = 0.5)))
+    val (sharedJobs, (shared, sharedNd)) = jobsOf(Ols.withMomentSharing(
+      (Ols.fit(d, fs, "y", ridge = 0.5), Ols.fitNoDrift(d, fs, "y", ridge = 0.5))))
+    assert(plainJobs == 2 && sharedJobs == 1, s"jobs: $plainJobs unshared, $sharedJobs shared")
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(shared._1 +: shared._2.toSeq) == bits(plain._1 +: plain._2.toSeq))
+    assert(bits(sharedNd.toSeq) == bits(plainNd.toSeq))
   }
 
   test("sharing scope is cleared on exit (no cross-scope reuse)") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured ANN recall curves (r13 verdict #5): recall@k of the IVF
@@ -23,12 +23,7 @@ object AnnRecallSoak {
     val nQ = 100
     val k = 10
     val nGroups = 1024
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // group = id % nGroups → the first nQ query ids land in nQ

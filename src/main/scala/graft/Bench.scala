@@ -1,42 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // pre-flight: refuse to start timing on a loaded host (r10/r11/r12
     // graded benches were all inflated by builder-side load — prevent
     // in code, not discipline). The wait is stamped into the JSON.
     val (preflightWait, loadAtGate) = BenchWarmup.preflightLoadGate()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 4 MB Tungsten pages: the default scales to 64 MB at large
-      // heaps, exceeding half of G1's 32 MB max region size — every
-      // page then allocates as G1-humongous and GC time explodes
-      // (observed 10-20x slowdowns at 64g heaps)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the default 100-entry codegen class cache cannot hold a
-      // 233-query session: by the time the alphabetical run reaches
-      // fc_*, every class the warmup below compiled has been evicted
-      // and fc_gbt re-pays ~9 s of Janino cold-compile (BENCH_r06's
-      // one budget breach). 4000 entries (static conf, set before the
-      // session exists) keeps warmup + cross-query shapes resident.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // r14: wide conditional aggregates (TreeBoost pass A/B at 102/196
-      // output fields, the lags=14 OLS moment aggregates at ~137) were
-      // silently ejected from whole-stage codegen by the default
-      // spark.sql.codegen.maxFields=100 and ran interpreted — measured
-      // 2.5x on fc_gbt's pass B (1.25 s -> 0.5 s). Width-, not
-      // scale-dependent: the same aggregates exceed 100 fields at any
-      // data size, so the raise is equally right at 100 TB. Results are
-      // bitwise unchanged (same per-partition fold order either way).
-      .config("spark.sql.codegen.maxFields", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: tables + every heavy family's codegen shapes
     BenchWarmup.run(spark, sfDir)

@@ -1,25 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Time a single registered query N times (local profiling aid). */
+/** Time a single registered query N times (local profiling aid), in
+  * Bench's session ([[GraftSession]]) after Bench's warmup. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      // match Bench's enlarged codegen class cache (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.codegen.maxFields", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // run the SAME untimed warmup as Bench (SPARK_GRAFT_WARMUP=0 to
     // skip for cold profiling): BenchOne is the adjudication tool for

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, DataSelection, Sampling, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Composed-curation soak: the `pipe_curate_full` five-operator plan
@@ -18,15 +17,7 @@ import org.apache.spark.sql.functions._
 object CurateSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(10000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate-soak")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // shuffle-bytes accounting via a stage-completion listener

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Panel
 import graft.operators.{EliteDeep, Forecasters, Metrics}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Elite-vs-naive forecast value add (FVA) on real M4 data — the
@@ -66,14 +65,7 @@ object EliteM4 {
         usable0 ++ deep
       } else usable0
     val dataDir = sys.env.getOrElse("M4_DATA_DIR", "/root/reference/data")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-elite-m4")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def load(path: String) = {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the FULL 35-member EliteDeep zoo (the reference's
@@ -32,26 +31,18 @@ object EliteSoak {
       case "knn" => "naive" +: EliteDeep.allModels.filter(_.startsWith("knn"))
       case csv => csv.split(",").toSeq
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build(cpus,
       // big-heap soak JVMs can pause for tens of seconds under full
       // GCs; don't let a pause masquerade as a dead executor (the
       // default 120 s heartbeat timeout killed the r11 1M run)
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeatInterval" -> "60s",
       // cached/checkpointed blocks written to disk are UNCOMPRESSED by
       // default — on the zoo's numeric frames lz4 is worth 3-5× of
       // scratch (the soak host's effective scratch is ~80 GB); pay the
       // codec CPU, the soak is disk-bound not CPU-bound
-      .config("spark.rdd.compress", "true")
-      .getOrCreate()
+      "spark.rdd.compress" -> "true")
     spark.sparkContext.setLogLevel("WARN")
     def time[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
@@ -70,7 +61,7 @@ object EliteSoak {
           sin(col("t") * (2 * math.Pi / 7) + pmod(col("user_id"), lit(11))) * 3.0 +
           pmod(hash(col("user_id"), col("t").cast("long")), lit(100)).cast("double") / 50.0)
       .drop("t")
-      .repartition(cpus.toInt, col("user_id"))
+      .repartition(cpus, col("user_id"))
     val p = graft.core.Panel(df, Seq("user_id"), Seq("ts", "event_id"), "value")
     val rows = time("materialize panel")(p.df.cache().count())
     println(s"[elite-soak] $nEntities entities x $nPoints points = $rows rows")

@@ -10,9 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * them without touching the Scala API:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * spark.sql("SELECT array_dot(a, b) FROM embeddings_pairs")
   * }}}
   */

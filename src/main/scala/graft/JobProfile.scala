@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-query job/stage/task accounting (r15 — VERDICT's ask: attribute
@@ -19,18 +18,7 @@ import scala.collection.mutable
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.codegen.maxFields", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val jobDump = sys.env.get("SPARK_GRAFT_JOBDUMP").exists(_ != "0")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Panel
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the exact broadcast-KNN's O(rows × entities) scale wall
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
   * Synthesizes E entities × 40 rows, times one-step exact vs IVF. */
 object KnnEntitySoak {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     def mkPanel(entities: Int, len: Int): Panel = {
       val df = spark.range(entities.toLong * len).select(
@@ -60,7 +54,7 @@ object KnnEntitySoak {
     // STRUCTURE — no entity-scale collect or broadcast anywhere in the
     // per-step plan (states live in a checkpointed distributed frame;
     // only the nCells×lags centroid matrix crosses the driver), so
-    // heap stays flat in fh. local[32] shares one JVM between driver
+    // heap stays flat in fh. Local mode shares one JVM between driver
     // and executors, so the peak below is the whole pipeline's working
     // set, an upper bound on any driver share.
     if (args.contains("--recursive") || args.contains("--recursive-only")) {

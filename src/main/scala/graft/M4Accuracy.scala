@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Panel
 import graft.operators.{LinearForecaster, Metrics}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reproduce the reference's M4 accuracy floor (BASELINE.md target 1):
@@ -22,18 +21,7 @@ object M4Accuracy {
     val dataDir = args.headOption.getOrElse("/root/reference/data")
     val freqFilter: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-m4")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // 4 MB Tungsten pages: the default scales to 64 MB at large
-      // heaps, exceeding half of G1's 32 MB max region size — every
-      // page then allocates as G1-humongous and GC time explodes
-      // (observed 10-20x slowdowns at 64g heaps)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // (freq label, fh, lags); paths derive from the label. 1h is not

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Media-parser scale soak: N synthetic binary payloads (real
@@ -13,15 +12,7 @@ import org.apache.spark.sql.functions._
 object MediaScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10_000_000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // NOTE: spark.driver.memory is NOT set here — in local mode the
-      // driver heap is fixed at JVM launch, so a builder config is a
-      // silent no-op; the heap comes from sbt's forked JVM (-mem /
-      // SBT_OPTS), same as Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{MediaFixtures, Multimodal}
 

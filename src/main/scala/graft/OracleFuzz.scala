@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{FuzzBuilders, Q}
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
 import scala.util.Random
@@ -186,15 +185,7 @@ object OracleFuzz {
     val outDir = args(1)
     val nPerFamily = if (args.length > 2) args(2).toInt else 9
     val baseSeed = if (args.length > 3) args(3).toLong else 14L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

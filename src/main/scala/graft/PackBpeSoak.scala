@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{DataSelection, Packing, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10M-doc soak for the composed packing + BPE + perplexity-bucket
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
 object PackBpeSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(10000000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-pack-bpe-soak")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.range(nDocs).select(col("id").as("doc_id"),
       concat_ws(" ", (0 until 20).map(w =>

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pipeline-extension soak: ~1M synthetic documents (with a planted
@@ -16,14 +15,7 @@ object PipelineSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(1000000)
     val nVecs = args.drop(1).headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-pipeline-soak")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ~20-word docs; 10% planted duplicates (doc i copies doc i-1 when

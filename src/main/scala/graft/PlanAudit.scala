@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints `explain(formatted)` for representative
   * queries and greps the properties that matter at 100 TB — pushed
   * filters, pruned read schemas, broadcast vs shuffle joins, and
@@ -10,22 +8,11 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // 4 MB Tungsten pages: the default scales to 64 MB at large
-      // heaps, exceeding half of G1's 32 MB max region size — every
-      // page then allocates as G1-humongous and GC time explodes
-      // (observed 10-20x slowdowns at 64g heaps)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE off HERE ONLY: an unexecuted AdaptiveSparkPlan hides the
-      // codegen-id annotations this audit wants to count (Bench and the
-      // driver contract keep AQE on)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE off HERE ONLY: an unexecuted AdaptiveSparkPlan hides the
+    // codegen-id annotations this audit wants to count (Bench and the
+    // driver contract keep AQE on)
+    val spark = GraftSession.build(GraftSession.cpus,
+      "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     val picks = Seq(

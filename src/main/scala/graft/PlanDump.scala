@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `explain("formatted")` for named registry queries to files —
@@ -8,26 +7,16 @@ import java.nio.file.{Files, Paths}
   * (`plans/r{N}/<query>_{before,after}.txt`).
   *
   * Usage: `runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]`
-  * writes `<outDir>/<query>_<suffix>.txt` per query. Session config
-  * matches Bench (AQE on, 32-way shuffle partitions via
-  * SPARK_GRAFT_CPUS) so the dumped initial plans are the bench's. */
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session is
+  * Bench's ([[GraftSession]]), so the dumped initial plans are the
+  * bench's at the same SPARK_GRAFT_CPUS. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

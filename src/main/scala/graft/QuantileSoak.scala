@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Panel
 import graft.operators.TreeBoost
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantile-objective renewal at scale: fits the same boosted quantile
@@ -19,14 +18,8 @@ object QuantileSoak {
   def main(args: Array[String]): Unit = {
     val nEntities = args.headOption.map(_.toInt).getOrElse(100000)
     val nPoints = args.drop(1).headOption.map(_.toInt).getOrElse(200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-quantile-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // continuous target: hash-noise makes every value (and so every
     // in-leaf residual) distinct — the exact percentile buffer then
@@ -37,7 +30,7 @@ object QuantileSoak {
       .withColumn("value",
         lit(50.0) + (col("t") % 7).cast("double") +
           pmod(xxhash64(col("entity"), col("t")), lit(1000000000)).cast("double") / 1e8)
-      .repartition(cpus.toInt, col("entity"))
+      .repartition(cpus, col("entity"))
     val p = Panel(df.cache(), Seq("entity"), Seq("t"), "value")
     println(s"[q-soak] rows=${p.df.count()} (all-distinct continuous target)")
     def run(tag: String, exact: Boolean, weighted: Boolean,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-SHAPED dataset from sf0.1 for the r15 scaling
@@ -19,13 +18,7 @@ object ScaleGen {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/sf1graft"
     val factor = if (args.length > 1) args(1).toInt else 10
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // per-table ID columns to shift per replica (offset = max+1, so
     // replicas are disjoint); every other column is copied verbatim

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Panel
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak: synthetic panel ~100k entities x 200 points (20M rows,
@@ -15,14 +14,7 @@ object ScaleSoak {
   def main(args: Array[String]): Unit = {
     val nEntities = args.headOption.map(_.toInt).getOrElse(100000)
     val nPoints = args.drop(1).headOption.map(_.toInt).getOrElse(200)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val n = nEntities.toLong * nPoints
     val df = spark.range(n).select(

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Panel
 import graft.functions.FeatureAggs
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-series soak for the collect-based typed aggregators: few
@@ -21,14 +20,7 @@ object SeriesSoak {
   def main(args: Array[String]): Unit = {
     val nEntities = args.headOption.map(_.toInt).getOrElse(64)
     val nPoints = args.drop(1).headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-series-soak")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val n = nEntities.toLong * nPoints
     val df = spark.range(n).select(

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak for nearDupGroups on both sides of the driver-union-find
@@ -19,14 +18,7 @@ object SoakUnionFind {
     val nChains = args.headOption.map(_.toInt).getOrElse(200000)
     val chainLen = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val starSize = args.drop(2).headOption.map(_.toInt).getOrElse(500000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-soak-uf")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // chains: node ids [c*chainLen, (c+1)*chainLen), edges i->i+1
     val chainEdges = spark.range(nChains.toLong * (chainLen - 1)).select(

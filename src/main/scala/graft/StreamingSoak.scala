@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingPanel
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,13 +29,7 @@ object StreamingSoak {
     val lshSec = if (args.length > 1) args(1).toInt else 600
     val semSec = if (args.length > 2) args(2).toInt else 120
     val lshTtlMs = if (args.length > 3) args(3).toLong else 0L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -569,10 +569,8 @@ object EliteDeep {
       val knnEc: ExecutionContext = knnPoolRef
         .map(ExecutionContext.fromExecutorService)
         .getOrElse(memberEc)
-      // operational telemetry for big-panel runs (the r11 soak triage
-      // tool) — or any run under GRAFT_ELITE_DEBUG (r14 profiling)
-      val eliteDebug = bigPanel || sys.env.contains("GRAFT_ELITE_DEBUG")
-      def logDone(kind: String, name: String, t0: Long): Unit = if (eliteDebug)
+      // operational telemetry for big-panel runs (the r11 soak triage tool)
+      def logDone(kind: String, name: String, t0: Long): Unit = if (bigPanel)
         System.err.println(f"[elite] $kind $name done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       def btBody(m: Member): (String, DataFrame) = {
         val t0 = System.nanoTime()

@@ -77,17 +77,6 @@ object EliteKnnBatch {
     }.toMap
   }
 
-  private val debug = sys.env.contains("GRAFT_KNN_BATCH_DEBUG")
-  @inline private def timed[T](what: String)(f: => T): T = {
-    if (!debug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[knnbatch] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-  }
-
   private def runBatch(p: Panel, timeCol: String, freq: String,
                        ms: Seq[MemberSpec],
                        splits: Seq[(DataFrame, DataFrame)],
@@ -138,7 +127,7 @@ object EliteKnnBatch {
     try {
       // one job: materializes the cached union AND yields the
       // per-context non-empty check predictRecursive makes per roll
-      val grpCounts = timed("union-materialize")(redUnion.groupBy("__grp").count().collect())
+      val grpCounts = redUnion.groupBy("__grp").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       withGrp.foreach { case (c, g) =>
         require(grpCounts.getOrElse(g, 0L) > 0L,
@@ -156,7 +145,7 @@ object EliteKnnBatch {
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val tails: Seq[(Int, StructType, Array[Row])] =
-        timed("tails")(Await.result(Future.sequence(withGrp.map { case (c, g) => Future {
+        Await.result(Future.sequence(withGrp.map { case (c, g) => Future {
           val keep = p.entityCols ++ (col("__cutoff") +:
             (1 to lags).map(l => col(s"${p.value}__lag_$l").cast("double")))
           val sel = KnnForecaster.queryTails(c.pT, timeCol, lags).select(keep: _*)
@@ -164,7 +153,7 @@ object EliteKnnBatch {
           KnnForecaster.guardExactEntities(collected.length.toLong,
             s"elite knn batch (${c.m.name}, split ${c.split})")
           (g, sel.schema, collected)
-        } }), Duration.Inf))
+        } }), Duration.Inf)
       // transform caches served both reads (union materialized above,
       // tails collected) — release before the roll
       ctxs.foreach(_.cachedT.foreach(_.unpersist(false)))
@@ -186,8 +175,7 @@ object EliteKnnBatch {
         // filter over the columnar cache — no Row conversion for them)
         val scan = if (active.length == ctxs.length) redUnion
                    else redUnion.filter(col("__grp").isin(active.map(Integer.valueOf): _*))
-        val stepAvg = timed(s"step-$h")(
-          KnnForecaster.heapPassMultiMerged(scan, qRows, lags, k))
+        val stepAvg = KnnForecaster.heapPassMultiMerged(scan, qRows, lags, k)
         active.foreach { g =>
           states(g) = states(g).zipWithIndex.map { case (s, i) =>
             // every query MUST predict (its group is non-empty by the
@@ -225,7 +213,7 @@ object EliteKnnBatch {
           .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
         c.inverts.reverse.foldLeft(out)((df, inv) => inv(df))
       }
-      timed("outputs")(Await.result(Future.sequence(ms.map { m => Future {
+      Await.result(Future.sequence(ms.map { m => Future {
         val mCtxs = withGrp.filter(_._1.m eq m)
         // Conformal.backtest's pred↔actual alignment, per split
         val btParts = mCtxs.filter(_._1.split >= 0).map { case (c, g) =>
@@ -250,7 +238,7 @@ object EliteKnnBatch {
         // member futures append concurrently — synchronize the buffer
         releases.synchronized { releases += bt; releases += full }
         m.name -> (bt, full)
-      } }), Duration.Inf))
+      } }), Duration.Inf)
     } finally redUnion.unpersist(blocking = false)
   }
 }

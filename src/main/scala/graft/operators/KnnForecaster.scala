@@ -364,9 +364,6 @@ object KnnForecaster {
         }
       }
     }.reduceByKey(mergeTopK(_, _, k)).collect()
-    if (sys.env.contains("GRAFT_KNN_BATCH_DEBUG"))
-      System.err.println(s"[knn-combine] driver received ${partials.length} qids, " +
-        s"${partials.map(_._2.length / 2).sum} candidate pairs (k=$k)")
     // mean of the k (distance, label)-smallest labels, summed ascending
     // — the arrays arrive merged, ascending and already capped at k
     val out = new java.util.HashMap[Long, Double]()

@@ -39,17 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object TreeBoost {
 
-  private val debug = sys.env.contains("GRAFT_TB_DEBUG")
-  @inline private def timed[T](what: String)(f: => T): T = {
-    if (!debug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[treeboost] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-  }
-
   /** One depth-2 tree: root split (1-based lag `fi`, threshold `thr`),
     * per-child splits (`fl`/`tl`, `fr`/`tr`) and the 4 leaf values
     * (already scaled by the learning rate). */
@@ -287,7 +276,7 @@ object TreeBoost {
       Seq(count(lit(1)), count(when(col(p.value) < 0, lit(1)))) ++
       (if (weight.isDefined) Seq(count(when(col("__wgt") < 0, lit(1)))) else Nil) ++
       (if (isQW) Seq(count(when(col("__wgt") > 1e9, lit(1)))) else Nil)
-    val mmRow = timed("minmax-pass")(train0.agg(mmAggs.head, mmAggs.tail: _*).collect()(0))
+    val mmRow = train0.agg(mmAggs.head, mmAggs.tail: _*).collect()(0)
     val nRows = mmRow.getLong(2 * lags)
     // loud label guard (ADVICE r9): LightGBM rejects negative labels
     // for poisson/tweedie; a negative target under a log link makes
@@ -376,7 +365,7 @@ object TreeBoost {
         else if (quantileExact) percentile(value, lit(alpha))
         else approx_percentile(value, lit(alpha), lit(100000))
       val b0 = if (objective == "quantile") {
-        val q = timed("base-quantile")(train.agg(qAgg(col(p.value))).collect()(0))
+        val q = train.agg(qAgg(col(p.value))).collect()(0)
         if (train ne train0) train0.unpersist(blocking = false)
         require(!q.isNullAt(0),
           "quantile base score is null (no positive-weight training rows)")
@@ -398,7 +387,7 @@ object TreeBoost {
             math.log(swy / sw)
         }
       } else {
-        val sumY = timed("base-sum")(train.agg(sum(col(p.value))).collect()(0).getDouble(0))
+        val sumY = train.agg(sum(col(p.value))).collect()(0).getDouble(0)
         if (train ne train0) train0.unpersist(blocking = false)
         objective match {
           case "l2" => sumY / nRows
@@ -523,7 +512,7 @@ object TreeBoost {
         } ++ (if (isQW) Seq(sum(when(le, wcq)), sum(wcq))
               else if (isW) Seq(sum(wc * r), sum(wc))
               else Seq(sum(r), count(lit(1))))
-        val rowA = timed("pass-A")(rf.agg(aggsA.head, aggsA.tail: _*).collect()(0))
+        val rowA = rf.agg(aggsA.head, aggsA.tail: _*).collect()(0)
         val stRaw = if (rowA.isNullAt(2 * cands.size)) 0.0
                     else rowA.getDouble(2 * cands.size)
         val nt = sz(rowA, 2 * cands.size + 1)
@@ -566,7 +555,7 @@ object TreeBoost {
           Seq(rTerm(gl && c), szTerm(gl && c),
               rTerm(gr && c), szTerm(gr && c))
         }
-        val rowB = timed("pass-B")(rfB.agg(aggsB.head, aggsB.tail: _*).collect()(0))
+        val rowB = rfB.agg(aggsB.head, aggsB.tail: _*).collect()(0)
         def statsB(off: Int) = cands.zipWithIndex.map { case ((i, k, t), ci) =>
           val c0 = if (rowB.isNullAt(4 * ci + off)) 0.0 else rowB.getDouble(4 * ci + off)
           val n0 = sz(rowB, 4 * ci + off + 1)

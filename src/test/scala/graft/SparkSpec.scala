@@ -39,19 +39,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // 4 MB Tungsten pages: the default scales to 64 MB at large
-      // heaps, exceeding half of G1's 32 MB max region size — every
-      // page then allocates as G1-humongous and GC time explodes
-      // (observed 10-20x slowdowns at 64g heaps)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the graded config (GraftSession) at a fixed 4 cores, so tests
+    // run the same codegen regime as Bench and Verify
+    val s = GraftSession.build(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,35 +1,39 @@
 package graft.functions
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{GraftRddBridge, RDD}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** A fit's training columns as one primitive block per partition, and
-  * the one-job-per-pass reduction that iterative fits
-  * ([[graft.operators.StumpBoost]], [[Logistic]]) and the multi-model
-  * closed-form fits ([[Ols.fitSets]], the censored forecaster) run over
-  * them.
+  * the reduction that iterative fits ([[graft.operators.StumpBoost]],
+  * [[Logistic]]) and the multi-model closed-form fits ([[Ols.fitSets]],
+  * the censored forecaster) run over them, pass by pass.
   *
-  * A pass is ONE RDD job with no Catalyst query: each task folds its
-  * rows — and, under a coalesce, its blocks in sequence — into one
-  * partial array from 0.0; the driver then merges the collected
-  * partials in partition-index order, also from 0.0. That is Spark's
-  * `Sum` exactly: the partial update is `coalesce(sum, 0) + x` over the
-  * partition's rows in order, the final merge adds the map outputs in
-  * map-index order, and a partition with no input (a null partial in
-  * SQL, a 0.0 here) changes nothing, because a sum that starts at 0.0
-  * is never −0.0. So every fitted double is bit-identical to the SQL
-  * aggregate the DuckDB oracle mirrors. `treeAggregate`/`reduce` are
-  * not used: their merge order follows task completion.
+  * A pass folds each partition's rows — and, under a coalesce, its
+  * blocks in sequence — into one partial array from 0.0, then merges
+  * the partials in partition-index order, also from 0.0. That is
+  * Spark's `Sum` exactly: the partial update is `coalesce(sum, 0) + x`
+  * over the partition's rows in order, the final merge adds the map
+  * outputs in map-index order, and a partition with no input (a null
+  * partial in SQL, a 0.0 here) changes nothing, because a sum that
+  * starts at 0.0 is never −0.0. So every fitted double is bit-identical
+  * to the SQL aggregate the DuckDB oracle mirrors. `treeAggregate`/
+  * `reduce` are not used: their merge order follows task completion.
+  *
+  * Where a pass runs: over unpersisted [[blocks]] it is one RDD job
+  * with no Catalyst query. A [[Persisted]] set's first pass is that
+  * job too, and materializes the cache; a later pass runs the same
+  * fold on the driver when the set's blocks fit under [[driverCap]]
+  * (the first pass fetched them), and is one job only past the cap.
   *
   * The blocks keep the layout `df.cache()` would have (same executed
   * plan, same partitions, same row order — [[GraftSqlBridge.cacheLayoutRows]]),
   * so a pass folds rows in the order a SQL `sum` over the cached frame
   * would (`FitKernelSpec` checks this against SQL-aggregate loops).
-  * Constants of a pass (β, stump thresholds) ride in the task closure.
-  * Callers unpersist persisted blocks in `finally`; a one-pass fit
+  * Constants of a pass (β, stump thresholds) ride in the fold's closure.
+  * Callers unpersist a persisted set in `finally`; a one-pass fit
   * ([[Ols.fitSets]]) reads unpersisted [[blocks]] and leaves nothing to
   * unpersist.
   */
@@ -90,31 +94,90 @@ object FitBlocks {
   /** Persist `cols` of the rows of `df` with no null or NaN in them (the
     * `na.drop(cols)` rule) as [[blocks]] (MEMORY_AND_DISK, the
     * `Dataset.cache()` level). Lazy: the first pass materializes it. */
-  def persist(df: DataFrame, cols: Seq[String]): RDD[Block] =
-    blocks(df, cols, cols).persist(StorageLevel.MEMORY_AND_DISK)
+  def persist(df: DataFrame, cols: Seq[String]): Persisted =
+    new Persisted(blocks(df, cols, cols).persist(StorageLevel.MEMORY_AND_DISK), null, false)
 
-  /** One job: every task folds its blocks into fresh `nSums` zeros and
-    * `nCounts` zero counts; the partials come back in partition-index
-    * order. The sums travel as raw bits: Java serialization writes a
-    * double through `doubleToLongBits`, which would turn the −NaN of
-    * `Inf − Inf` into the +NaN a SQL `sum` does not give. */
-  def partials(blocks: RDD[Block], nSums: Int, nCounts: Int)(
-      fold: (Block, Array[Double], Array[Long]) => Unit): Array[Partial] =
-    blocks.mapPartitions { it =>
-      val s = new Array[Double](nSums)
-      val c = new Array[Long](nCounts)
-      it.foreach(fold(_, s, c))
-      Iterator.single((s.map(java.lang.Double.doubleToRawLongBits), c))
-    }.collect().map { case (bits, c) =>
-      new Partial(bits.map(java.lang.Double.longBitsToDouble), c)
+  /** Bytes of block doubles a persisted set may bring to the driver:
+    * each partition of the materializing pass returns its blocks when
+    * they fit in `driverCap / numPartitions`. One constant, not a conf;
+    * specs set 0 (every pass one job) or `Long.MaxValue`. */
+  @volatile private[graft] var driverCap: Long = 32L << 20
+
+  /** The fold of one pass over one block: adds into the sums and counts. */
+  type Fold = (Block, Array[Double], Array[Long]) => Unit
+
+  /** A persisted block set of one fit (see [[persist]]); the fit calls
+    * [[unpersist]] in `finally`. Its first pass is the one job that
+    * materializes the blocks. When every partition's blocks fit in its
+    * share of [[driverCap]], that job also brings them to the driver,
+    * and every later pass runs the same fold there, with no job: fresh
+    * zeros per partition, a partition's blocks in order, the partials
+    * merged in partition-index order from 0.0 — the job's arithmetic in
+    * the job's order, so the same bits. Past the cap every pass is one
+    * job. The driver copies live in this handle only, never in a shared
+    * map: pooled fits run concurrently, each with its own set. */
+  final class Persisted private[FitBlocks] (rdd: RDD[Block],
+                                            private var local: Array[Array[Block]],
+                                            private var materialized: Boolean) {
+
+    def numPartitions: Int = if (local != null) local.length else rdd.getNumPartitions
+
+    /** One pass: the partials of every partition, in partition-index
+      * order (the first pass is a job; see the class doc for the rest). */
+    def partials(nSums: Int, nCounts: Int)(fold: Fold): Array[Partial] =
+      if (local != null) local.map(bs => foldPartition(bs.iterator, nSums, nCounts, fold))
+      else if (materialized) FitBlocks.partials(rdd, nSums, nCounts)(fold)
+      else {
+        materialized = true
+        val cap = driverCap
+        val (ps, bs) = pass(rdd, nSums, nCounts,
+          if (cap > 0L) cap / math.max(1, rdd.getNumPartitions) else -1L)(fold)
+        local = bs
+        ps
+      }
+
+    /** [[partials]] merged as in [[FitBlocks.sum]]. */
+    def sum(nSums: Int, nCounts: Int)(fold: Fold): Partial =
+      merge(partials(nSums, nCounts)(fold), nSums, nCounts)
+
+    /** These blocks in `parts` partitions, grouped as
+      * [[GraftRddBridge.coalesceCached]] groups the cached RDD. Only
+      * after the first pass: the grouping reads the cached blocks'
+      * locations. Not persisted itself; unpersist this set. */
+    def coalesce(parts: Int): Persisted = {
+      require(materialized, "coalesce a block set after its first pass")
+      if (local == null) new Persisted(GraftRddBridge.coalesceCached(rdd, parts), null, true)
+      else new Persisted(rdd,
+        GraftRddBridge.coalesceGroups(rdd, parts).map(_.flatMap(local(_))), true)
     }
 
-  /** [[partials]] merged by addition in partition-index order from 0.0
-    * — the `Sum`/`Count` result of the same fold. */
-  def sum(blocks: RDD[Block], nSums: Int, nCounts: Int)(
-      fold: (Block, Array[Double], Array[Long]) => Unit): Partial = {
+    def unpersist(): Unit = {
+      local = null
+      rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** Doubles as raw long bits on their way to the driver: Java
+    * serialization writes a double through `doubleToLongBits`, which
+    * would turn the −NaN of `Inf − Inf` into the +NaN a SQL `sum` does
+    * not give. */
+  private final class RawBits(xs: Array[Double]) extends Serializable {
+    private val bits = xs.map(java.lang.Double.doubleToRawLongBits)
+    def doubles: Array[Double] = bits.map(java.lang.Double.longBitsToDouble)
+  }
+
+  /** One partition's fold: its blocks in order into fresh zeros. */
+  private def foldPartition(blocks: Iterator[Block], nSums: Int, nCounts: Int,
+                            fold: Fold): Partial = {
+    val p = new Partial(new Array[Double](nSums), new Array[Long](nCounts))
+    blocks.foreach(fold(_, p.sums, p.counts))
+    p
+  }
+
+  /** Partials added in the given (partition-index) order from 0.0. */
+  private def merge(parts: Array[Partial], nSums: Int, nCounts: Int): Partial = {
     val out = new Partial(new Array[Double](nSums), new Array[Long](nCounts))
-    partials(blocks, nSums, nCounts)(fold).foreach { p =>
+    parts.foreach { p =>
       var j = 0
       while (j < nSums) { out.sums(j) += p.sums(j); j += 1 }
       j = 0
@@ -122,6 +185,34 @@ object FitBlocks {
     }
     out
   }
+
+  /** One job: every task folds its blocks into fresh `nSums` zeros and
+    * `nCounts` zero counts; the partials come back (as [[RawBits]]) in
+    * partition-index order. */
+  def partials(blocks: RDD[Block], nSums: Int, nCounts: Int)(fold: Fold): Array[Partial] =
+    pass(blocks, nSums, nCounts, -1L)(fold)._1
+
+  /** The job of [[partials]], whose tasks also return their blocks when
+    * these hold at most `share` bytes of doubles: the blocks of every
+    * partition, in partition-index order, if all came back, else null. */
+  private def pass(blocks: RDD[Block], nSums: Int, nCounts: Int, share: Long)(
+      fold: Fold): (Array[Partial], Array[Array[Block]]) = {
+    val out = blocks.mapPartitions { it =>
+      val bs = it.toArray
+      val p = foldPartition(bs.iterator, nSums, nCounts, fold)
+      val bytes = bs.map(b => 8L * b.n * b.cols.length).sum
+      // persisted blocks hold no NaN (the `na.drop` rule), so their
+      // doubles survive serialization bit for bit
+      Iterator.single((new RawBits(p.sums), p.counts, if (bytes <= share) bs else null))
+    }.collect()
+    (out.map { case (sums, c, _) => new Partial(sums.doubles, c) },
+      if (out.forall(_._3 != null)) out.map(_._3) else null)
+  }
+
+  /** [[partials]] merged by addition in partition-index order from 0.0
+    * — the `Sum`/`Count` result of the same fold. */
+  def sum(blocks: RDD[Block], nSums: Int, nCounts: Int)(fold: Fold): Partial =
+    merge(partials(blocks, nSums, nCounts)(fold), nSums, nCounts)
 
   /** Spark SQL's `x <= t` on doubles: NaN is greatest (so `x <= NaN`
     * holds for every x) and −0.0 equals 0.0. */

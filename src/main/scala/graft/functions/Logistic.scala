@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.rdd.{GraftRddBridge, RDD}
 import org.apache.spark.sql.DataFrame
 
 /** Logistic regression by IRLS / Newton on per-iteration moment sums —
@@ -9,15 +8,18 @@ import org.apache.spark.sql.DataFrame
   * driver-side sklearn fit over the collected reduction).
   *
   * Spark-native shape: the complete rows are persisted once as
-  * [[FitBlocks]]; iteration t is then ONE RDD job whose task kernel
-  * computes, per row, η = β₀ + Σ βⱼxⱼ (left fold), μ = σ(η), w = μ(1−μ)
-  * and r = y − μ, and accumulates the weighted normal moments X^T W X
-  * (upper triangle) and the gradient X^T (y − μ). β travels in the task
-  * closure; the driver merges the partials in Spark's `sum` order and
-  * takes the Newton step (a (p+1)-dim Cholesky). `iters` passes total,
-  * each O(p²) state per task: at 100 TB this is `iters` scans of the
-  * cached blocks, never a collected matrix, and typically fewer passes
-  * than LBFGS needs for the same tolerance.
+  * [[FitBlocks]]; iteration t is then ONE pass whose fold computes, per
+  * row, η = β₀ + Σ βⱼxⱼ (left fold), μ = σ(η), w = μ(1−μ) and r = y − μ,
+  * and accumulates the weighted normal moments X^T W X (upper triangle)
+  * and the gradient X^T (y − μ). β travels in the fold's closure; the
+  * partials merge in Spark's `sum` order and the driver takes the
+  * Newton step (a (p+1)-dim Cholesky). Under [[FitBlocks.driverCap]]
+  * the row-count pass brings the blocks to the driver and every
+  * iteration folds there; only past the cap is an iteration one RDD
+  * job. `iters` passes total, each O(p²) state per partition: at 100 TB
+  * this is `iters` scans of the cached blocks, never a collected
+  * matrix, and typically fewer passes than LBFGS needs for the same
+  * tolerance.
   *
   * A FIXED iteration count (no tolerance exit) keeps the update
   * sequence deterministic, so the DuckDB oracle
@@ -37,10 +39,10 @@ object Logistic {
     val blocks = FitBlocks.persist(df, featureCols :+ labelCol)
     try {
       // one job materializes the blocks and counts their rows
-      val n = FitBlocks.sum(blocks, 0, 1)((b, _, c) => c(0) += b.n).counts(0)
+      val n = blocks.sum(0, 1)((b, _, c) => c(0) += b.n).counts(0)
       if (n == 0) throw noRows(featureCols, labelCol)
       fitBlocks(blocks, p, n, lambda, iters)
-    } finally blocks.unpersist(blocking = false)
+    } finally blocks.unpersist()
   }
 
   /** The error of a logistic fit with no complete row. */
@@ -54,18 +56,18 @@ object Logistic {
     * features, column p the 0/1 label (later columns are not read).
     * Callers that fold more into their row-count pass (the censored
     * forecaster's regression) enter here. */
-  private[graft] def fitBlocks(blocks: RDD[FitBlocks.Block], p: Int, n: Long,
+  private[graft] def fitBlocks(blocks: FitBlocks.Persisted, p: Int, n: Long,
                                lambda: Double, iters: Int): (Double, Array[Double]) = {
     val d = p + 1
     // size the iteration loop's parallelism to the data (the GBT-fit
     // rule): `iters` sequential jobs over tiny partitions are pure
     // scheduling overhead, so target ~100k rows/partition (floor 1) —
-    // a 100 TB reduction still fans out to thousands of tasks
+    // a 100 TB reduction still fans out to thousands of tasks. A set
+    // under the driver cap folds the same groups on the driver, so the
+    // sums are the same bits on either side of the cap
     val parts = math.max(1L,
-      math.min(blocks.getNumPartitions.toLong, n / 100000L)).toInt
-    val rows =
-      if (parts < blocks.getNumPartitions) GraftRddBridge.coalesceCached(blocks, parts)
-      else blocks
+      math.min(blocks.numPartitions.toLong, n / 100000L)).toInt
+    val rows = if (parts < blocks.numPartitions) blocks.coalesce(parts) else blocks
     val tri = d * (d + 1) / 2
     val beta = new Array[Double](d)
     var t = 0
@@ -75,7 +77,7 @@ object Logistic {
       // triangle; slots tri..tri+d−1: Σ r·xᵢ — with x₀ = 1.0, the
       // products and their order as the SQL oracle generator writes
       // them; keep the two in lockstep
-      val m = FitBlocks.sum(rows, tri + d, 0) { (b, s, _) =>
+      val m = rows.sum(tri + d, 0) { (b, s, _) =>
         val x = new Array[Double](d)
         x(0) = 1.0
         val y = b.cols(p)

@@ -11,13 +11,21 @@ import org.apache.spark.sql.functions._
   * skewness and kurtosis Z-transforms are closed-form algebra over the
   * first four central moments, so the whole test (statistic AND
   * p-value: chi²(2df) survival = exp(−K²/2)) runs as one codegen'd
-  * aggregation per entity. No SciPy, no UDF.
+  * aggregation per entity and a few projections. No SciPy, no UDF.
   */
 object Evaluation {
 
   /** Per-entity D'Agostino-Pearson normality test: (skew, kurtosis,
     * k2_stat, p_value). Formulas follow the published test
-    * (D'Agostino 1971; Anscombe & Glynn 1983). */
+    * (D'Agostino 1971; Anscombe & Glynn 1983).
+    *
+    * Staged as consecutive selects — (n, skew, kurt), then (z1, z2),
+    * then k2, then the output — because fused into one projection the
+    * K² formula restates the n polynomials, skew and kurtosis many
+    * times and the aggregate's output method outgrows the JVM's 64 KB
+    * limit (that stage then runs interpreted). `CollapseProject` keeps
+    * the stages apart: it does not inline a non-cheap expression that
+    * is referenced twice. Same doubles as the fused form. */
   def normalityTest(p: Panel): DataFrame = {
     val d = p.df.withColumn("__mu", avg(p.x).over(p.we))
     val m = d.groupBy(p.entityCols: _*).agg(
@@ -26,8 +34,13 @@ object Evaluation {
       avg(pow(p.x - col("__mu"), 3)).as("m3"),
       avg(pow(p.x - col("__mu"), 4)).as("m4"))
     val n = col("n")
-    val skew = try_divide(col("m3"), pow(col("m2"), 1.5))
-    val kurt = try_divide(col("m4"), pow(col("m2"), 2))
+    def stage(df: DataFrame, cols: Column*): DataFrame =
+      df.select(p.entityCols ++ cols: _*)
+    val moments = stage(m, n,
+      try_divide(col("m3"), pow(col("m2"), 1.5)).as("skew"),
+      try_divide(col("m4"), pow(col("m2"), 2)).as("kurt"))
+    val skew = col("skew")
+    val kurt = col("kurt")
     // skewtest (D'Agostino 1971)
     val y = skew * sqrt((n + 1) * (n + 3) / (lit(6.0) * (n - 2)))
     val beta2 = lit(3.0) * (n * n + lit(27.0) * n - 70) * (n + 1) * (n + 3) /
@@ -49,7 +62,6 @@ object Evaluation {
       (lit(1.0) + x * sqrt(lit(2.0) / (aa - 4)))
     val z2 = ((lit(1.0) - lit(2.0) / (lit(9.0) * aa)) -
       signum(term) * pow(abs(term), lit(1.0) / 3)) / sqrt(lit(2.0) / (lit(9.0) * aa))
-    val k2 = z1 * z1 + z2 * z2
     // the z1/z2 chains divide by (n-2), (n-3) and sqrt(varb2) — for
     // n < 8 some divisor is exactly 0 and ANSI mode turns one short
     // entity into a job-killing DIVIDE_BY_ZERO (scipy's normaltest
@@ -57,10 +69,11 @@ object Evaluation {
     // the guarded branch never evaluates for short entities — they get
     // null stats instead.
     val nOk = n >= 8.0
-    m.select((p.entityCols ++ Seq(
-      skew.as("skew"), (kurt - 3).as("kurtosis"),
-      when(nOk, k2).as("k2_stat"),
-      when(nOk, exp(k2 * -0.5)).as("p_value"))): _*)
+    val zs = stage(moments, n, skew, kurt, when(nOk, z1).as("z1"), when(nOk, z2).as("z2"))
+    val k2 = stage(zs, n, skew, kurt, (col("z1") * col("z1") + col("z2") * col("z2")).as("k2"))
+    stage(k2, skew, (kurt - 3).as("kurtosis"),
+      when(nOk, col("k2")).as("k2_stat"),
+      when(nOk, exp(col("k2") * -0.5)).as("p_value"))
   }
 
   /** Ljung-Box Q statistic over lags 1..maxLags —

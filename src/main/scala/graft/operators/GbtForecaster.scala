@@ -115,7 +115,13 @@ object GbtForecaster {
 /** Zero-inflated / censored forecaster — forecasting/censored.py:
   * P(y > threshold) from a classifier × regression fit above the
   * threshold; prediction = p · ŷ_above (zero_inflated_model when
-  * threshold = 0, censored.py:96). */
+  * threshold = 0, censored.py:96).
+  *
+  * Both parts fit over one persisted [[graft.functions.FitBlocks]] set:
+  * one job materializes it and folds the regression's moments, then the
+  * six IRLS passes run on the driver under
+  * [[graft.functions.FitBlocks.driverCap]]; a pass is one job only past
+  * the cap. */
 object CensoredForecaster {
 
   final case class Model(pIntercept: Double, pWeights: Array[Double],
@@ -148,7 +154,7 @@ object CensoredForecaster {
       val d = lags + 1
       // one job materializes the blocks, counts their rows and folds the
       // moments of the rows with value > threshold (Spark's `>`)
-      val first = FitBlocks.sum(blocks, Ols.momentWidth(d), 1) { (b, s, c) =>
+      val first = blocks.sum(Ols.momentWidth(d), 1) { (b, s, c) =>
         c(0) += b.n
         val x = new Array[Double](d)
         x(0) = 1.0
@@ -169,6 +175,6 @@ object CensoredForecaster {
       val (pIntercept, pWeights) =
         Logistic.fitBlocks(blocks, lags, first.counts(0), lambda = 0.0, iters = 6)
       Model(pIntercept, pWeights, rIntercept, rWeights, lags, freq)
-    } finally blocks.unpersist(blocking = false)
+    } finally blocks.unpersist()
   }
 }

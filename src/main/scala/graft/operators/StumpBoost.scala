@@ -21,15 +21,18 @@ import org.apache.spark.sql.DataFrame
   * ([[graft.queries.OlsBacktestSql.fullStump]]).
   *
   * Execution: the reduction's lag and label columns are persisted once
-  * as [[graft.functions.FitBlocks]]; the min/max/Σy/n pass and every
-  * boosting round are then one RDD job each — the task kernel computes
-  * the row's residual, the left sum and count of every (feature,
-  * threshold) candidate, and Σr and n, and the driver merges the
-  * partials in the order Spark's `sum`/`min`/`max` would. No Catalyst
-  * query runs inside the loop. Per round: a scan of the cached blocks,
-  * a collected partial of ~2·lags·bins numbers per partition, and a
-  * model of `rounds` stumps that the recursive predict reads. No
-  * per-row state, no driver loop over entities.
+  * as [[graft.functions.FitBlocks]]; the min/max/Σy/n pass is the one
+  * job that materializes them, and every boosting round is then one
+  * pass — the fold computes the row's residual, the left sum and count
+  * of every (feature, threshold) candidate, and Σr and n, and the
+  * partials merge in the order Spark's `sum`/`min`/`max` would. Under
+  * [[graft.functions.FitBlocks.driverCap]] the first job brings the
+  * blocks to the driver and every round folds there, with no job;
+  * only past the cap is a round one job. No Catalyst query runs inside
+  * the loop. Per round: a scan of the blocks, a partial of
+  * ~2·lags·bins numbers per partition, and a model of `rounds` stumps
+  * that the recursive predict reads. No per-row state, no driver loop
+  * over entities.
   */
 object StumpBoost {
 
@@ -67,7 +70,7 @@ object StumpBoost {
       // one pass: exact per-feature min/max (no float-order drift) +
       // the base prediction sum(y)/n — the oracle's min/max/sum/count,
       // with `least`/`greatest` folds merged in partition order
-      val mm = FitBlocks.partials(blocks, 2 * lags + 1, 1) { (b, s, c) =>
+      val mm = blocks.partials(2 * lags + 1, 1) { (b, s, c) =>
         val x = b.cols
         var r = 0
         while (r < b.n) {
@@ -127,7 +130,7 @@ object StumpBoost {
         val sVl = stumps.map(_.vl).toArray
         val sVr = stumps.map(_.vr).toArray
         // slots 0..nc−1: left sum/count per candidate; slot nc: Σr, n
-        val tot = FitBlocks.sum(blocks, nc + 1, nc + 1) { (b, s, c) =>
+        val tot = blocks.sum(nc + 1, nc + 1) { (b, s, c) =>
           val x = b.cols
           val y = x(lags)
           var r = 0
@@ -170,6 +173,6 @@ object StumpBoost {
         stumps :+= Stump(bi, bt, vl, vr)
       }
       (b0, stumps)
-    } finally blocks.unpersist(blocking = false)
+    } finally blocks.unpersist()
   }
 }

@@ -365,8 +365,8 @@ object ConformalQueries {
                  round(exp(-(zs*zs + zk*zk)/2),6) AS p_value
           FROM z2""") {
       // full D'Agostino-Pearson normaltest (scipy semantics) as one
-      // codegen'd aggregation — closed-form Z-transforms, p = chi²(2df)
-      // survival = exp(−K²/2)
+      // codegen'd aggregation and staged projections — closed-form
+      // Z-transforms, p = chi²(2df) survival = exp(−K²/2)
       (s, dir) => r6(Evaluation.normalityTest(ev(s, dir)))
     },
 

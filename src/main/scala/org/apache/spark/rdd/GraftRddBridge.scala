@@ -18,6 +18,13 @@ object GraftRddBridge {
   def coalesceCached[T: ClassTag](rdd: RDD[T], parts: Int): RDD[T] =
     rdd.coalesce(parts, shuffle = false, Some(new CachedLocsCoalescer))
 
+  /** The parent partition indices of each partition of
+    * [[coalesceCached]]`(rdd, parts)`, in the order its tasks read
+    * them. */
+  def coalesceGroups[T: ClassTag](rdd: RDD[T], parts: Int): Array[Array[Int]] =
+    coalesceCached(rdd, parts).partitions
+      .map(_.asInstanceOf[CoalescedRDDPartition].parentsIndices)
+
   // runs on the driver only, but rides along when the RDD is serialized
   private final class CachedLocsCoalescer extends PartitionCoalescer with Serializable {
     override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] =

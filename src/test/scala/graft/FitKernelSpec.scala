@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * references), bit for bit: every stump's (feat, thr, vl, vr), b0 and
   * the IRLS β, on seeded frames with values on grid thresholds, gain
   * ties, ±Inf lags (NaN thresholds), −0.0, empty-side candidates,
-  * null/NaN rows and 1, 3 and 8 input partitions. */
+  * null/NaN rows and 1, 3 and 8 input partitions — each fit at driver
+  * cap 0 (one job per pass) and with no cap (the passes after the first
+  * on the driver). */
 class FitKernelSpec extends SparkSpec {
 
   /** The former `StumpBoost.fit` loop: one conditional-aggregation
@@ -149,13 +151,6 @@ class FitKernelSpec extends SparkSpec {
     assert(g.map(bits) == w.map(bits), s"$ctx β $g vs $w")
   }
 
-  /** Persistent RDDs before and after `f`: the kernels must leave none. */
-  private def noLeftovers[T](f: => T): T = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try f
-    finally assert(spark.sparkContext.getPersistentRDDs.keySet == before, "leftover blocks")
-  }
-
   private def frame(rows: Seq[Seq[java.lang.Double]], names: Seq[String], parts: Int): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row.fromSeq(r)), parts),
@@ -209,8 +204,8 @@ class FitKernelSpec extends SparkSpec {
       val bins = if (seed % 2 == 0) 8 else 4
       val eta = if (parts == 3) 0.5 else 0.3
       val want = refStump(df, lagCols, "y", rounds = 4, bins = bins, eta = eta)
-      val got = noLeftovers(StumpBoost.fitRows(df, lagCols, "y", 4, bins, eta))
-      assertSameStumps(got, want, s"$flavour/$parts")
+      atBothCaps(noLeftovers(StumpBoost.fitRows(df, lagCols, "y", 4, bins, eta)))
+        .foreach { case (cap, got) => assertSameStumps(got, want, s"$flavour/$parts/$cap") }
       // every candidate has an empty side: the stumps split at NaN
       if (flavour == "allinf") assert(want._2.forall(_.thr.isNaN), want)
     }
@@ -230,8 +225,10 @@ class FitKernelSpec extends SparkSpec {
       val p = p0.copy(df = p0.df.repartition(parts, col("entity")))
       val cols = (1 to 3).map(l => s"value__lag_$l")
       val want = refStump(Forecasters.makeReduction(p, 3), cols, "value", 5, 8, 0.3)
-      val m = noLeftovers(StumpBoost.fit(p, lags = 3, freq = "1i", rounds = 5, bins = 8, eta = 0.3))
-      assertSameStumps((m.b0, m.stumps), want, s"panel/$parts")
+      atBothCaps(noLeftovers(StumpBoost.fit(p, lags = 3, freq = "1i", rounds = 5, bins = 8,
+        eta = 0.3))).foreach { case (cap, m) =>
+        assertSameStumps((m.b0, m.stumps), want, s"panel/$parts/$cap")
+      }
     }
   }
 
@@ -298,8 +295,8 @@ class FitKernelSpec extends SparkSpec {
     } {
       val df = frame(irlsRows(seed, 400), xs :+ "y", parts)
       val want = refIrls(df, xs, "y", lambda)
-      val got = noLeftovers(Logistic.fitIrls(df, xs, "y", lambda = lambda))
-      assertSameBeta(got, want, s"$seed/$parts/λ=$lambda")
+      atBothCaps(noLeftovers(Logistic.fitIrls(df, xs, "y", lambda = lambda)))
+        .foreach { case (cap, got) => assertSameBeta(got, want, s"$seed/$parts/λ=$lambda/$cap") }
     }
   }
 
@@ -316,8 +313,8 @@ class FitKernelSpec extends SparkSpec {
       .drop("u")
     for (lambda <- Seq(0.0, 2.5)) {
       val want = refIrls(df, Seq("x1", "x2"), "y", lambda)
-      val got = noLeftovers(Logistic.fitIrls(df, Seq("x1", "x2"), "y", lambda = lambda))
-      assertSameBeta(got, want, s"250k/λ=$lambda")
+      atBothCaps(noLeftovers(Logistic.fitIrls(df, Seq("x1", "x2"), "y", lambda = lambda)))
+        .foreach { case (cap, got) => assertSameBeta(got, want, s"250k/λ=$lambda/$cap") }
     }
   }
 
@@ -337,15 +334,58 @@ class FitKernelSpec extends SparkSpec {
     assert(compiles == c0)
   }
 
+  test("a set with one partition past its share of the cap runs distributed, same bits") {
+    // partition 0 holds 900 rows, the others 20: at a cap of 4 × 1000
+    // bytes each partition's share is 1000 bytes — room for the small
+    // partitions' blocks (20 rows × 4 columns × 8 bytes = 640), not for
+    // partition 0's (28,800), so every pass is one job
+    val xs = Seq("x1", "x2", "x3")
+    def skewed(rows: Seq[Seq[java.lang.Double]]): DataFrame = {
+      val parts = Seq(rows.take(900)) ++ rows.drop(900).grouped(20).take(3)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(parts.map(_.map(r => Row.fromSeq(r))), 4)
+          .flatMap(identity),
+        StructType((xs :+ "y").map(StructField(_, DoubleType))))
+    }
+    val sdf = skewed(stumpRows(15L, 960, "grid"))
+    val idf = skewed(irlsRows(33L, 960))
+    val wantS = refStump(sdf, xs, "y", rounds = 4, bins = 8, eta = 0.3)
+    val wantL = refIrls(idf, xs, "y", 0.7)
+    val (jobsS, gotS) = withDriverCap(4000L)(jobsOf(noLeftovers(
+      StumpBoost.fitRows(sdf, xs, "y", 4, 8, 0.3))))
+    val (jobsL, gotL) = withDriverCap(4000L)(jobsOf(noLeftovers(
+      Logistic.fitIrls(idf, xs, "y", lambda = 0.7))))
+    assert(jobsS == 1 + 4 && jobsL == 1 + 6, s"jobs: stump $jobsS, IRLS $jobsL")
+    assertSameStumps(gotS, wantS, "skewed")
+    assertSameBeta(gotL, wantL, "skewed")
+  }
+
+  test("a small fit runs one job over its blocks: none per round or iteration") {
+    val xs = Seq("x1", "x2", "x3")
+    val sdf = frame(stumpRows(11L, 300, "grid"), lagCols :+ "y", 3)
+    val idf = frame(irlsRows(31L, 400), xs :+ "y", 3)
+    val (jobsS, _) = jobsOf(noLeftovers(StumpBoost.fitRows(sdf, lagCols, "y", 4, 8, 0.3)))
+    val (jobsL, _) = jobsOf(noLeftovers(Logistic.fitIrls(idf, xs, "y")))
+    assert(jobsS == 1 && jobsL == 1, s"jobs: stump $jobsS, IRLS $jobsL")
+    // past the cap: one more job per round and per iteration
+    val (capS, _) =
+      withDriverCap(0L)(jobsOf(noLeftovers(StumpBoost.fitRows(sdf, lagCols, "y", 4, 8, 0.3))))
+    val (capL, _) = withDriverCap(0L)(jobsOf(noLeftovers(Logistic.fitIrls(idf, xs, "y"))))
+    assert(capS == 1 + 4 && capL == 1 + 6, s"jobs at cap 0: stump $capS, IRLS $capL")
+  }
+
   test("empty frames fail with the reference's messages and leave no blocks") {
     val empty = frame(Seq(Seq[java.lang.Double](null, 1.0, 2.0, 3.0)), lagCols :+ "y", 3)
     val want = intercept[IllegalArgumentException](refStump(empty, lagCols, "y", 2, 4, 0.3))
-    val got = intercept[IllegalArgumentException](
-      noLeftovers(StumpBoost.fitRows(empty, lagCols, "y", 2, 4, 0.3)))
-    assert(got.getMessage == want.getMessage)
     val wantL = intercept[IllegalArgumentException](refIrls(empty, lagCols, "y", 0.0))
-    val gotL = intercept[IllegalArgumentException](
-      noLeftovers(Logistic.fitIrls(empty, lagCols, "y")))
-    assert(gotL.getMessage == wantL.getMessage)
+    // no persisted RDD and no cached frame after each error, on either
+    // side of the driver cap
+    atBothCaps {
+      val got = intercept[IllegalArgumentException](
+        noLeftovers(StumpBoost.fitRows(empty, lagCols, "y", 2, 4, 0.3)))
+      val gotL = intercept[IllegalArgumentException](
+        noLeftovers(Logistic.fitIrls(empty, lagCols, "y")))
+      (got.getMessage, gotL.getMessage)
+    }.foreach { case (cap, msgs) => assert(msgs == (want.getMessage, wantL.getMessage), cap) }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Ols
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** r15 optimization internals: scoped OLS moment sharing and the
@@ -36,25 +35,6 @@ class MomentSharingSpec extends SparkSpec {
       assert(sharedCd._1 == plainCd._1 &&
         sharedCd._2.sameElements(plainCd._2), "CD drifted under sharing")
     } finally d.unpersist(blocking = false)
-  }
-
-  /** The jobs `body` starts on this thread, and its result. */
-  private def jobsOf[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val group = s"moment-sharing-${System.nanoTime}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try {
-      val r = body
-      org.apache.spark.ListenerDrain(sc)
-      (n.get, r)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   test("a drift and a no-drift fit over one frame share one moment job") {

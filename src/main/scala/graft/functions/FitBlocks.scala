@@ -100,8 +100,11 @@ object FitBlocks {
   /** Bytes of block doubles a persisted set may bring to the driver:
     * each partition of the materializing pass returns its blocks when
     * they fit in `driverCap / numPartitions`. One constant, not a conf;
-    * specs set 0 (every pass one job) or `Long.MaxValue`. */
-  @volatile private[graft] var driverCap: Long = 32L << 20
+    * specs set 0 (every pass one job) or `Long.MaxValue`. 8 MiB is
+    * where the driver fold stopped beating one job per pass on 4 cores
+    * (SCALE.md, "the driver cap"): past it the driver copy is a speed
+    * loss, not only a memory cost. */
+  @volatile private[graft] var driverCap: Long = 8L << 20
 
   /** The fold of one pass over one block: adds into the sums and counts. */
   type Fold = (Block, Array[Double], Array[Long]) => Unit

@@ -278,8 +278,8 @@ object AutoForecast {
     * horizons) — still a per-k ranking signal across all entities.
     *
     * Unlike the generic [[autoModel]] sweep (one backtest per
-    * candidate), every split runs ONE distance pass with max(kGrid)
-    * heaps and every k is a rank cut over that shared ranking
+    * candidate), every split runs ONE corpus scan keeping max(kGrid)
+    * neighbors and every k averages a prefix of them
     * ([[KnnForecaster.predictOneStepMultiK]]) — the top-k set is a
     * prefix of the top-max(k) ranking, so the scores are bitwise the
     * per-candidate path's at |kGrid|× less corpus scanning. The
@@ -293,40 +293,35 @@ object AutoForecast {
     try {
     val splits = CrossValidation.expandingWindowSplit(p, testSize, nSplits, stepSize,
       Some(positioned))
-    // per split: shared ranking → one (k -> pred) map; join each to the
-    // split's actuals exactly like Conformal.backtest's horizon join.
-    // The multiK checkpoint is EAGER, so the splits must overlap as
-    // concurrent jobs (autoModel's future shape) or they serialize.
+    // per split: one scan → one (k -> pred) map; join each to the
+    // split's actuals exactly like Conformal.backtest's horizon join
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val perSplitR = Await.result(Future.sequence(splits.map { case (train, test) => Future {
-      val (preds, ranked) = KnnForecaster.predictOneStepMultiKReleasable(
+    val futures = splits.map { case (train, test) => Future {
+      val preds = KnnForecaster.predictOneStepMultiK(
         p.copy(df = train), timeCol, freq, lags, kGrid)
       val actual = test
         .withColumn("__h", row_number().over(
           Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols: _*)))
         .select((p.entityCols ++ Seq(col("__h"), p.x.as("__actual"))): _*)
-      (kGrid.map { k =>
+      kGrid.map { k =>
         val pred = preds(k)
           .withColumn("__h", row_number().over(
             Window.partitionBy(p.entityCols: _*).orderBy(col(timeCol))))
           .select((p.entityCols :+ col("__h") :+ col(p.value).as("__pred")): _*)
         k -> actual.join(pred, p.entity :+ "__h", "inner")
           .select((p.entityCols :+ col("__actual").as("actual") :+ col("__pred").as("pred")): _*)
-      }.toMap, ranked)
-    } }), Duration.Inf)
-    try {
-      val scored = kGrid.map { k =>
-        val bt = perSplitR.map(_._1(k)).reduce(_ unionByName _)
-        k -> meanScore(backtestScore(bt, p.entity), s"autoKnn(k=$k)")
-      }
-      scored.minBy(_._2)
-    // the per-split ranking checkpoints are consumed by the scored
-    // collects above — release them (and the positioned frame, outer
-    // finally) instead of pinning storage until GC
-    } finally perSplitR.foreach(_._2.unpersist(blocking = false))
-    } finally positioned.unpersist(blocking = false)
+      }.toMap
+    } }
+    // every split ends before the first failure is rethrown: none may
+    // still hold its persisted lag blocks when this call returns
+    val perSplit = futures.map(Await.ready(_, Duration.Inf)).map(_.value.get.get)
+    kGrid.map { k =>
+      val bt = perSplit.map(_(k)).reduce(_ unionByName _)
+      k -> meanScore(backtestScore(bt, p.entity), s"autoKnn(k=$k)")
+    }.minBy(_._2)
+    } finally EliteDeep.releaseCheckpoint(positioned)
   }
 
   /** auto_lightgbm (automl.py:191-229): lag sweep over expanding-window

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Panel
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,23 +10,22 @@ import org.apache.spark.sql.types._
   * family (elite.py:83-88 — knn / knn_scaled / knn_detrend_linear).
   *
   * The per-member path costs members × (nSplits · testSize + fh)
-  * bounded-heap corpus scans (each CV slice's recursive roll re-scans
-  * its reduction per horizon step — 39 scan jobs for the 3-member
+  * corpus scans (each CV slice's recursive roll re-scans its
+  * reduction per horizon step — 39 scan jobs for the 3-member
   * default). The scan is corpus-bound, not query-bound: one pass
   * serves any number of query groups at ~the same cost. So this
   * runner unions every (member × CV-slice) context's transformed
   * reduction into ONE cached frame tagged `__grp`, and each horizon
-  * step advances ALL active contexts with a single
-  * [[KnnForecaster.heapPassMulti]] scan + one rank-merge + one
-  * entity-sized collect — max(testSize, fh) scan jobs total.
+  * step advances ALL active contexts with one [[KnnForecaster.topK]]
+  * job (the group is `__grp`; the per-query top-k arrays merge
+  * distributed) — max(testSize, fh) scan jobs total.
   *
   * Semantics are exactly the per-member exact path's
   * ([[KnnForecaster.predictRecursive]] under [[Conformal.backtest]]
   * and [[ForecastPipeline]]): same slice construction
   * (expandingWindowSplit over one positioned frame), same per-slice
-  * transform fit/invert artifacts, same reduction/na.drop/queryTails
-  * construction per context, same ascending-lag distance fold,
-  * (distance, label) tie-break and top-k mean, same pred↔actual
+  * transform fit/invert artifacts, same corpus rule (`na.drop`) and
+  * query-state rule per context, same kernel, same pred↔actual
   * __h-join alignment. Only the JOB STRUCTURE changes.
   *
   * Exact-path only: the driver-mediated state roll is what
@@ -67,7 +66,7 @@ object EliteKnnBatch {
     releases += positioned
     val splits = CrossValidation.expandingWindowSplit(p, testSize, nSplits,
       stepSize, Some(positioned))
-    // heapPassMulti's inner fold is lags-wide and its heaps k-deep —
+    // the kernel's inner fold is lags-wide and its states k-deep —
     // members sharing (lags, k) share one scan; mixed-depth zoos run
     // one sub-batch per depth (each still collapses its own
     // nSplits·testSize + fh per-slice scans to max(testSize, fh))
@@ -110,11 +109,11 @@ object EliteKnnBatch {
     // coalesce the union: each branch's lag window leaves
     // numShufflePartitions partitions, so the raw union would carry
     // contexts × that many — hundreds of per-step scan tasks whose
-    // fixed cost (broadcast handling, heap bookkeeping, partial rows ∝
-    // partitions) dwarfs the distance arithmetic at bench scale.
-    // coalesce merges WITHIN branches first (group-locality kept, no
-    // shuffle), bounding both the task count and the collected
-    // partials at partitions × queries × k.
+    // fixed cost (broadcast handling, top-k state bookkeeping, partial
+    // arrays ∝ partitions) dwarfs the distance arithmetic at bench
+    // scale. coalesce merges WITHIN branches first (group-locality
+    // kept, no shuffle), bounding both the task count and the partial
+    // arrays the merge shuffles at partitions × queries × k.
     val nPart = spark.sessionState.conf.numShufflePartitions
     val redUnion = withGrp.map { case (c, g) =>
       Forecasters.makeReduction(c.pT, lags)
@@ -175,42 +174,31 @@ object EliteKnnBatch {
         // filter over the columnar cache — no Row conversion for them)
         val scan = if (active.length == ctxs.length) redUnion
                    else redUnion.filter(col("__grp").isin(active.map(Integer.valueOf): _*))
-        val stepAvg = KnnForecaster.heapPassMultiMerged(scan, qRows, lags, k)
+        val near = KnnForecaster.topK(KnnForecaster.corpus(
+          GraftSqlBridge.cacheLayoutRows(scan), lags, group = lags + 1), qRows, lags, k)
         active.foreach { g =>
           states(g) = states(g).zipWithIndex.map { case (s, i) =>
             // every query MUST predict (its group is non-empty by the
-            // count check above) — fail loud like predictRecursive's
-            // stepAvg(i) lookup, never roll a silent hole forward
+            // count check above) — fail loud, never roll a silent hole
+            // forward
             val qid = offsets(g) + i
-            require(stepAvg.containsKey(qid), s"knn batch step $h: query $qid " +
+            require(near.containsKey(qid), s"knn batch step $h: query $qid " +
               s"(${ctxs(g).m.name}, split ${ctxs(g).split}) produced no prediction")
-            val pr: Double = stepAvg.get(qid)
+            val pr = KnnForecaster.meanLabel(near.get(qid), k)
             preds(g)(h - 1)(i) = pr
             pr +: s.dropRight(1)
           }
         }
       }
-      // rebuild each context's prediction frame exactly as
-      // predictRecursive does (local 0-based qid within the group),
-      // then apply the slice-fitted inverts in reverse order
+      // each context's prediction frame as predictRecursive builds it
+      // (local 0-based query index within the group), then the
+      // slice-fitted inverts in reverse order
       def predFrame(c: Ctx, g: Int): DataFrame = {
         val (_, schema, collected) = tails(g)
-        val qMeta = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            collected.zipWithIndex.map { case (r, i) =>
-              Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
-            }.toIndexedSeq, 1),
-          StructType(schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-        val predRows = for { h <- 1 to c.steps; i <- collected.indices }
-          yield Row(i.toLong, h, preds(g)(h - 1)(i))
-        val predDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(predRows, 1),
-          StructType(Seq(StructField("__qid", LongType),
-            StructField("__h", IntegerType), StructField(p.value, DoubleType))))
-        val out = broadcast(qMeta)
-          .join(predDf, "__qid")
-          .withColumn(timeCol, Forecasters.futureTime(freq))
-          .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+        val out = KnnForecaster.forecastFrame(p, timeCol, freq,
+          schema.fields.take(nEntity + 1).toIndexedSeq,
+          collected.map(_.toSeq.take(nEntity + 1)).toIndexedSeq,
+          for { h <- 1 to c.steps; i <- collected.indices } yield (i, h, preds(g)(h - 1)(i)))
         c.inverts.reverse.foldLeft(out)((df, inv) => inv(df))
       }
       Await.result(Future.sequence(ms.map { m => Future {

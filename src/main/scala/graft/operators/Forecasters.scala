@@ -96,11 +96,14 @@ object Forecasters {
   /* NOTE on the tail-state scaffold (rn_desc window → collect_list →
    * sort_array → completeness filter) appearing here and in
    * GbtForecaster.predictRecursiveModel, LinearForecaster (direct /
-   * ensemble / exog) and KnnForecaster.queryTails: the copies are
-   * DELIBERATE — each site's completeness filter and carried columns
-   * differ subtly (null-state handling, __cutoff, extra lag columns),
-   * and a shared helper would have to parameterize all of it. Change
-   * one, check all. */
+   * ensemble / exog) and KnnForecaster.queryTails (the elite KNN
+   * batch, the IVF and LSH paths): the copies are DELIBERATE — each
+   * site's completeness filter and carried columns differ subtly
+   * (null-state handling, __cutoff, extra lag columns), and a shared
+   * helper would have to parameterize all of it. Change one, check
+   * all. The exact KNN one-step and recursive paths take the same
+   * state from the newest row of their lag window instead
+   * (KnnForecaster.Lagged: value and lag 1…L−1 not null). */
   def predictRecursiveLinear(p: Panel, timeCol: String, fh: Int, freq: String,
                              intercept: Double, weights: Array[Double]): DataFrame = {
     val lags = weights.length

@@ -2,28 +2,32 @@ package graft.operators
 
 import graft.core.Panel
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, VectorAssembler}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** KNN forecaster — forecasting/knn.py:22 (sklearn KNeighborsRegressor
   * over the AR-reduction matrix), re-expressed for a cluster.
   *
-  * Two physical strategies (SURVEY.md §7.5(8)):
+  * Every exact path runs ONE top-k kernel, [[topK]]: the queries
+  * (one lag state per entity) broadcast to every partition of the
+  * corpus, each partition keeps a bounded (distance, label) state per
+  * query, and the partition states merge distributed (`reduceByKey`)
+  * into each query's ascending k-smallest array. Exact neighbors,
+  * matching the reference's sklearn semantics.
   *
-  *  - [[predictOneStep]] (default): exact broadcast-KNN. The per-entity
-  *    query tails are small (one row per entity); they broadcast to
-  *    every partition of the distributed reduction matrix, each
-  *    partition keeps a bounded k-heap per query (mapPartitions — the
-  *    genuine per-partition imperative case), and the partial top-k
-  *    rows (numPartitions × entities × k) merge in one final
-  *    grouped top-k. Exact neighbors, matching the reference's sklearn
-  *    semantics; one narrow shuffle.
-  *
-  *  - [[predictOneStepLsh]]: bucketed random-projection LSH similarity
-  *    join for when the entity count itself is huge (query side too
-  *    big to broadcast) — the classic distributed ANN path.
+  *  - [[predictOneStep]] / [[predictOneStepMultiK]] /
+  *    [[predictRecursive]]: the corpus and the query states come from
+  *    one lag window over the panel ([[Lagged]]).
+  *  - [[predictOneStepIvf]]: the same kernel with the corpus rows
+  *    grouped by their nearest centroid cell.
+  *  - [[predictOneStepLsh]] / [[predictRecursiveIvf]]: bucketed
+  *    random-projection LSH and the distributed IVF roll, for entity
+  *    counts whose query side must not reach the driver.
   */
 object KnnForecaster {
 
@@ -46,170 +50,278 @@ object KnnForecaster {
       lit(math.round(fraction * 1e6))
   }
 
-  /** Exact one-step-ahead KNN prediction per entity (broadcast path). */
-  def predictOneStep(p: Panel, timeCol: String, freq: String, lags: Int, k: Int): DataFrame = {
-    val (ranked, qMeta) = neighborRanking(p, timeCol, lags, kHeap = k)
-    finishOneStep(p, timeCol, freq, ranked, qMeta, k)
-  }
+  /** Exact one-step-ahead KNN prediction per entity. */
+  def predictOneStep(p: Panel, timeCol: String, freq: String, lags: Int, k: Int): DataFrame =
+    predictOneStepMultiK(p, timeCol, freq, lags, Seq(k))(k)
 
-  /** One-step predictions for SEVERAL k values from ONE distance pass:
-    * the partition heaps keep max(ks) candidates and the merged
-    * ranking is materialized once (localCheckpoint — it is tiny:
-    * partitions × entities × max(ks) rows), so each k is just a rank
-    * cut + mean over the shared ranking. The top-k by distance is a
-    * prefix of the top-max(ks) ranking, so every k's result is
-    * bitwise the single-k path's. Powers the auto_knn sweep, where
-    * the generic per-candidate path would re-scan the corpus per k. */
+  /** One-step predictions for SEVERAL k values from ONE scan: the
+    * kernel keeps max(ks) candidates per query, ascending, and each k
+    * averages a prefix — the top-k by (distance, label) is a prefix of
+    * the top-max(ks), so every k's result is bitwise the single-k
+    * path's. Powers the auto_knn sweep. Jobs: the lag window's entity
+    * shuffle, the query collect, the scan. */
   def predictOneStepMultiK(p: Panel, timeCol: String, freq: String, lags: Int,
                            ks: Seq[Int]): Map[Int, DataFrame] = {
-    val (preds, _) = predictOneStepMultiKReleasable(p, timeCol, freq, lags, ks)
-    preds
-  }
-
-  /** [[predictOneStepMultiK]] plus the shared ranking checkpoint it
-    * pins, so sweep callers (auto_knn) can unpersist it once every
-    * k's result is consumed — checkpoint blocks otherwise linger
-    * until GC, against the repo's cache-release discipline. */
-  def predictOneStepMultiKReleasable(p: Panel, timeCol: String, freq: String,
-                                     lags: Int, ks: Seq[Int])
-      : (Map[Int, DataFrame], DataFrame) = {
     require(ks.nonEmpty, "predictOneStepMultiK needs at least one k")
-    val (ranked0, qMeta) = neighborRanking(p, timeCol, lags, kHeap = ks.max)
-    val ranked = ranked0.localCheckpoint(true)
-    (ks.map(k => k -> finishOneStep(p, timeCol, freq, ranked, qMeta, k)).toMap,
-      ranked)
+    val lagged = new Lagged(p, lags, timeCol, lit(true))
+    try {
+      val (queries, _) = lagged.queries()
+      guardExactEntities(queries.length.toLong, "knn predictOneStep")
+      val near = topK(lagged.blocks,
+        queries.zipWithIndex.map { case (q, i) => (i.toLong, 0, lagged.state(q)) },
+        lags, ks.max)
+      ks.map { k =>
+        // a query with no corpus row (empty corpus) gets no forecast
+        k -> lagged.forecast(freq, queries, queries.indices.collect {
+          case i if near.containsKey(i.toLong) => (i, 1, meanLabel(near.get(i.toLong), k))
+        })
+      }.toMap
+    } finally lagged.unpersist()
   }
 
-  /** Rank cut + per-query mean + meta join shared by the one-step
-    * paths. `ranked` must carry (__qid, __nn, __label) with __nn the
-    * global distance rank from a heap of size ≥ k. */
-  private def finishOneStep(p: Panel, timeCol: String, freq: String,
-                            ranked: DataFrame, qMeta: DataFrame, k: Int): DataFrame = {
-    val topk = ranked
-      .filter(col("__nn") <= k)
-      .groupBy("__qid").agg(avg(col("__label")).as(p.value))
-    broadcast(qMeta)
-      .join(topk, "__qid")
-      .withColumn("__h", lit(1))
+  /** RECURSIVE multi-horizon KNN — the reference's knn predicts any
+    * fh by rolling the state forward (forecasting/knn.py:22 via
+    * base/forecaster recursion): horizon h's query vector is
+    * (ŷ_{h−1}, …). The corpus is persisted once ([[Lagged]]) and
+    * every step is one [[topK]] job; the per-entity means (one
+    * double per entity per step) roll through the driver like the rest
+    * of the exact path. [[predictOneStep]] stays the fh=1 fast path. */
+  def predictRecursive(p: Panel, timeCol: String, freq: String, lags: Int,
+                       k: Int, fh: Int, corpusFraction: Double = 1.0): DataFrame = {
+    val lagged = new Lagged(p, lags, timeCol, corpusKeep(p.entityCols, corpusFraction))
+    try {
+      val (queries, nCorpus) = lagged.queries()
+      require(nCorpus > 0, s"knn recursive predict has no complete training rows (lags=$lags)")
+      guardExactEntities(queries.length.toLong, "knn predictRecursive")
+      var states = queries.map(lagged.state)
+      val preds = (1 to fh).flatMap { h =>
+        val near = topK(lagged.blocks, states.zipWithIndex.map { case (s, i) => (i.toLong, 0, s) },
+          lags, k)
+        // one group and a non-empty corpus: every query has neighbors
+        val step = states.indices.map(i => meanLabel(near.get(i.toLong), k))
+        states = states.zip(step).map { case (s, pr) => pr +: s.dropRight(1) }
+        step.zipWithIndex.map { case (pr, i) => (i, h, pr) }
+      }
+      lagged.forecast(freq, queries, preds)
+    } finally lagged.unpersist()
+  }
+
+  /** One window over `p.w` that both sides of an exact KNN read, as the
+    * `InternalRow`s `df.cache()` would hold
+    * ([[GraftSqlBridge.cacheLayoutRows]]; building it runs the entity
+    * shuffle once). Columns: lag 1…L, the value (label), a last-row
+    * flag, the corpus gate `keep`, the entity and the cutoff — the max
+    * time over the newest `lags` rows, as [[queryTails]] takes it.
+    *  - Corpus rows: no null or NaN in lag 1…L and the label (the
+    *    reduction's `na.drop` rule), and `keep` holds.
+    *  - Query rows: each entity's last row, when its value and lag
+    *    1…L−1 are not null (NaN passes) — [[queryTails]]' complete
+    *    state (value, lag 1, …, lag L−1).
+    * The rows become one [[Corpus]] per partition that also carries
+    * the partition's query rows, persisted: the query job materializes
+    * it and every scan reads it, so the window runs once. The caller
+    * unpersists in `finally`. */
+  private final class Lagged(p: Panel, lags: Int, timeCol: String, keep: Column) {
+    private val frame = p.df.select(
+      (1 to lags).map(l => lag(p.x, l).over(p.w).cast("double")) ++ Seq(
+        p.x.cast("double"),
+        lead(lit(1), 1).over(p.w).isNull,
+        keep) ++
+        p.entityCols :+
+        max(col(timeCol)).over(p.w.rowsBetween(1 - lags, Window.currentRow))
+          .as("__cutoff"): _*)
+    private val meta = frame.schema.fields.toIndexedSeq.drop(lags + 3)
+    val blocks: RDD[Corpus] = corpus(GraftSqlBridge.cacheLayoutRows(frame), lags,
+      keep = lags + 2, last = lags + 1).persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** One job: the query rows and the number of corpus rows. */
+    def queries(): (Array[InternalRow], Long) = {
+      val parts = blocks.map(b => (b.queries, b.n.toLong)).collect()
+      (parts.flatMap(_._1), parts.map(_._2).sum)
+    }
+
+    def unpersist(): Unit = blocks.unpersist(blocking = false)
+
+    /** A query row's state: (value, lag 1, …, lag L−1). */
+    def state(q: InternalRow): Array[Double] =
+      Array.tabulate(lags)(j => q.getDouble(if (j == 0) lags else j - 1))
+
+    /** The forecast frame of (query index, h, value) predictions. */
+    def forecast(freq: String, queries: Array[InternalRow],
+                 preds: Seq[(Int, Int, Double)]): DataFrame =
+      forecastFrame(p, timeCol, freq, meta, queries.toIndexedSeq.map(q =>
+        meta.zipWithIndex.map { case (f, j) =>
+          CatalystTypeConverters.convertToScala(q.get(lags + 3 + j, f.dataType), f.dataType)
+        }), preds)
+  }
+
+  /** The forecast frame: per (query index i, h, value) one row of the
+    * query's entity, its cutoff advanced h steps and the value. `meta`
+    * is (entity…, __cutoff) and `metaRows(i)` query i's values of it.
+    * The rows are one partition of an RDD
+    * ([[GraftSqlBridge.onePartitionFrame]]), not a local relation:
+    * Catalyst would fold a local relation into the caller's action. */
+  private[operators] def forecastFrame(p: Panel, timeCol: String, freq: String,
+                                       meta: Seq[StructField], metaRows: IndexedSeq[Seq[Any]],
+                                       preds: Seq[(Int, Int, Double)]): DataFrame =
+    GraftSqlBridge.onePartitionFrame(p.df.sparkSession,
+      preds.map { case (i, h, v) => Row.fromSeq(metaRows(i) :+ h :+ v) },
+      StructType(meta :+ StructField("__h", IntegerType) :+ StructField(p.value, DoubleType)))
       .withColumn(timeCol, Forecasters.futureTime(freq))
       .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
-  }
 
-  /** The broadcast-queries bounded-heap distance pass: returns the
-    * globally ranked neighbor frame (__qid, __dist, __label, __nn —
-    * __nn ordered by distance, heap size `kHeap` per partition) and
-    * the (entity…, __cutoff, __qid) meta frame. */
-  private def neighborRanking(p: Panel, timeCol: String, lags: Int,
-                              kHeap: Int): (DataFrame, DataFrame) = {
-    val k = kHeap
-    val spark = p.df.sparkSession
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l").toArray
-    val reduction = Forecasters.makeReduction(p, lags).na.drop(featureCols :+ p.value)
-      .select((featureCols.map(c => col(c).cast("double")).toIndexedSeq :+ col(p.value).cast("double").as("__label")): _*)
-    // ONE collect of the per-entity tails (this path already assumes
-    // they fit on the driver); the dense query id is simply the index
-    // in the collected array — no extra distributed pass, no global
-    // window. Entity + cutoff come back out of the same rows via a
-    // driver-built (entity, cutoff, qid) frame joined to the top-k.
-    val tails = queryTails(p, timeCol, lags)
-    val keep = p.entityCols ++ (col("__cutoff") +:
-      (1 to lags).map(l => col(s"${p.value}__lag_$l").cast("double")))
-    val nEntity = p.entityCols.length
-    val sel = tails.select(keep: _*)
-    // guard on the collected size (an extra count() job would recompute
-    // the tail window; the collect itself is survivable well past the
-    // cap — the per-pass scan is what the cap protects)
-    val collected = sel.collect()
-    guardExactEntities(collected.length.toLong, "knn predictOneStep")
-    val qRows = collected.zipWithIndex.map { case (r, i) =>
-      (i.toLong, Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j)))
+  /** A partition's corpus rows, row-major: lag j+1 of row r at
+    * `feats(r * lags + j)`, its label at `labels(r)`, its query group
+    * at `groups(r)` (null: every row is in group 0). Rows [0, n).
+    * `queries`: the partition's query rows, when asked for. */
+  private[operators] final class Corpus(val feats: Array[Double], val labels: Array[Double],
+                                        val groups: Array[Int], val n: Int,
+                                        val queries: Array[InternalRow])
+      extends Serializable
+
+  /** One [[Corpus]] per partition of `rows`, laid out as (lag 1, …,
+    * lag L, label, …) doubles: the rows that pass [[isCorpusRow]]
+    * (ordinal `keep` a boolean gate, -1 none), in row order. A row's
+    * group is the int at ordinal `group`, or its nearest of the
+    * centroid `cells`, or 0 when neither is given. With `last` ≥ 0
+    * the block also keeps a copy of each [[Lagged]] query row: `last`
+    * flags it, and its value and lag 1…L−1 are not null. */
+  private[operators] def corpus(rows: RDD[InternalRow], lags: Int, keep: Int = -1,
+                                group: Int = -1,
+                                cells: Array[Array[Double]] = null,
+                                last: Int = -1): RDD[Corpus] =
+    rows.mapPartitions { it =>
+      val grouped = group >= 0 || cells != null
+      var cap = 1024
+      var feats = new Array[Double](cap * lags)
+      var labels = new Array[Double](cap)
+      var groups = if (grouped) new Array[Int](cap) else null
+      var n = 0
+      val queries = Array.newBuilder[InternalRow]
+      it.foreach { r =>
+        if (last >= 0 && r.getBoolean(last) &&
+            (0 until lags - 1).forall(!r.isNullAt(_)) && !r.isNullAt(lags))
+          queries += r.copy()
+        if (isCorpusRow(r, lags, keep)) {
+          if (n == cap) {
+            cap *= 2
+            feats = java.util.Arrays.copyOf(feats, cap * lags)
+            labels = java.util.Arrays.copyOf(labels, cap)
+            if (grouped) groups = java.util.Arrays.copyOf(groups, cap)
+          }
+          val base = n * lags
+          var j = 0
+          while (j < lags) { feats(base + j) = r.getDouble(j); j += 1 }
+          labels(n) = r.getDouble(lags)
+          if (group >= 0) groups(n) = r.getInt(group)
+          else if (cells != null) groups(n) = nearestCell(feats, cells, base)
+          n += 1
+        }
+      }
+      Iterator.single(new Corpus(feats, labels, groups, n, queries.result()))
     }
-    val qMeta = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        collected.zipWithIndex.map { case (r, i) =>
-          Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
-        }.toIndexedSeq, 1),
-      StructType(sel.schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-    (heapPass(spark, reduction, qRows, lags, k), qMeta)
+
+  /** No null or NaN in lag 1…L and the label (the reduction's
+    * `na.drop` rule), and the boolean at `keep` holds (-1: no gate). */
+  private def isCorpusRow(r: InternalRow, lags: Int, keep: Int): Boolean = {
+    var j = 0
+    while (j <= lags) {
+      if (r.isNullAt(j) || r.getDouble(j).isNaN) return false
+      j += 1
+    }
+    keep < 0 || r.getBoolean(keep)
   }
 
-  /** One bounded-heap distance pass of `qRows` (qid, state[lags])
-    * against the (f1..flags, __label) `reduction`: per-partition
-    * top-k heaps per query, merged into the globally ranked
-    * (__qid, __dist, __label, __nn) frame. */
-  private def heapPass(spark: org.apache.spark.sql.SparkSession,
-                       reduction: DataFrame, qRows: Array[(Long, Array[Double])],
-                       lags: Int, k: Int): DataFrame = {
-    val bq = spark.sparkContext.broadcast(qRows)
-    // per-partition bounded top-k per query: rows are buffered into a
-    // row-major block and scanned QUERY-OUTER over primitive state
-    // (see [[scanRun]]) — the query vector and its k-th threshold stay
-    // register/L1-hot across the block instead of a boxed
-    // PriorityQueue head deref per (row × query) pair. The per-query
-    // (distance, label) multiset is identical to the former per-row
-    // heap kernel's (r14 measured: −25% process-CPU on fc_elite_knn).
-    val partials = reduction.rdd.mapPartitions { it =>
-      val qs = bq.value
+  /** The exact top-k kernel. `qRows` = (qid, group, state[lags]); a
+    * corpus row serves only its own group's queries. Returns, per qid,
+    * its k smallest (distance, label) pairs over the whole corpus,
+    * ascending, interleaved [d0, l0, d1, l1, …] — fewer than k when its
+    * group has fewer rows, no entry when it has none.
+    *
+    * Distance is the squared L2 folded over ascending lags from 0.0.
+    * Order is the total order `java.lang.Double.compare` on distance,
+    * then label (NaN greatest, −0.0 below 0.0): the pairs it ranks
+    * equal are identical, so the k smallest are one multiset whatever
+    * the partitioning or row order. A NaN distance (a NaN query state,
+    * or an infinite lag met by an infinite state) ranks last; an IEEE
+    * `<` test would admit no row once a NaN holds the k-th place.
+    *
+    * Each partition scans its rows in runs of at most [[Tile]] rows of
+    * one group, query-outer ([[scanRun]]): the query vector and its
+    * k-th threshold stay register/L1-hot across the run (r14: −25%
+    * process-CPU on fc_elite_knn against a per-row boxed heap). The
+    * query states allocate lazily, so a partition that holds one
+    * group's rows materializes only that group's. Each partition emits
+    * one ascending array per resident query, and a `reduceByKey` merge
+    * ([[mergeTopK]]) keeps the k smallest per qid executor-side, so the
+    * driver receives O(queries × k) doubles, not O(partitions ×
+    * queries × k). One job. */
+  private[operators] def topK(corpus: RDD[Corpus], qRows: Array[(Long, Int, Array[Double])],
+                              lags: Int, k: Int): java.util.HashMap[Long, Array[Double]] = {
+    val merged = corpus.mapPartitions { it =>
+      val qs = qRows
+      val byGrp: scala.collection.Map[Int, Array[Int]] =
+        qs.indices.toArray.groupBy(i => qs(i)._2)
+      val empty = Array.empty[Int]
       val nq = qs.length
       val dA = new Array[Array[Double]](nq)
       val lA = new Array[Array[Double]](nq)
       val cnt = new Array[Int](nq)
       val maxI = new Array[Int](nq)
-      var qa = 0
-      while (qa < nq) {
-        dA(qa) = new Array[Double](k); lA(qa) = new Array[Double](k); qa += 1
-      }
-      val B = 256
-      val featBuf = new Array[Double](B * lags)
-      val labBuf = new Array[Double](B)
-      var n = 0
-      def flush(): Unit = {
-        var qi = 0
-        while (qi < nq) {
-          val packed = scanRun(featBuf, labBuf, 0, n, lags, k, qs(qi)._2,
-            dA(qi), lA(qi), cnt(qi), maxI(qi))
-          cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-          qi += 1
+      it.foreach { b =>
+        var s = 0
+        while (s < b.n) {
+          val g = if (b.groups == null) 0 else b.groups(s)
+          var e = s + 1
+          while (e < b.n && e - s < Tile && (b.groups == null || b.groups(e) == g)) e += 1
+          val grpQs = byGrp.getOrElse(g, empty)
+          var gi = 0
+          while (gi < grpQs.length) {
+            val qi = grpQs(gi)
+            if (dA(qi) == null) { dA(qi) = new Array[Double](k); lA(qi) = new Array[Double](k) }
+            val packed = scanRun(b.feats, b.labels, s, e, lags, k, qs(qi)._3,
+              dA(qi), lA(qi), cnt(qi), maxI(qi))
+            cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
+            gi += 1
+          }
+          s = e
         }
-        n = 0
       }
-      it.foreach { row =>
-        val base = n * lags
-        var i = 0
-        while (i < lags) { featBuf(base + i) = row.getDouble(i); i += 1 }
-        labBuf(n) = row.getDouble(lags)
-        n += 1
-        if (n == B) flush()
+      (0 until nq).iterator.filter(dA(_) != null).map { qi =>
+        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi)
+        val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+        val packed = new Array[Double](2 * c)
+        var o = 0
+        while (o < c) { packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1 }
+        (qs(qi)._1, packed)
       }
-      if (n > 0) flush()
-      (0 until nq).iterator.flatMap { qi =>
-        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi); val qid = qs(qi)._1
-        (0 until c).iterator.map(j => Row(qid, d0(j), l0(j)))
-      }
-    }
-    val partialDf = spark.createDataFrame(partials, StructType(Seq(
-      StructField("__qid", LongType), StructField("__dist", DoubleType),
-      StructField("__label", DoubleType))))
-    // global rank merge per query (tiny: partitions × entities × k rows)
-    partialDf
-      .withColumn("__nn", row_number().over(
-        Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
+    }.reduceByKey(mergeTopK(_, _, k)).collect()
+    val out = new java.util.HashMap[Long, Array[Double]]()
+    merged.foreach { case (qid, a) => out.put(qid, a) }
+    out
   }
 
-  /** Max-heap ordering for the bounded k-heaps: lexicographic
-    * (distance, label), so tied-distance candidates resolve
-    * deterministically instead of by partition scheduling order. */
-  private val heapOrd: Ordering[(Double, Double)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering)
+  /** Rows per query-outer run of [[topK]]: 256 rows of 7 lags are 14 KB
+    * of features, inside L1. */
+  private val Tile = 256
 
-  /** Index of the lexicographic (distance, label) maximum of the k
-    * primitive state entries — `java.lang.Double.compare` is the same
-    * total order [[heapOrd]] ranked the boxed heap by (NaN greatest,
-    * −0.0 < 0.0). Ties keep the lowest index; tied entries are
-    * value-identical pairs, so which one a later admission overwrites
-    * cannot change the surviving multiset. */
-  @inline private def topKMaxIdx(d0: Array[Double], l0: Array[Double],
-                                 k: Int): Int = {
+  /** Mean of the labels of the first min(k, size) pairs of a [[topK]]
+    * array, summed ascending from 0.0 — what `avg` gives over the rows
+    * a `row_number() ≤ k` cut by (distance, label) keeps. */
+  private[operators] def meanLabel(a: Array[Double], k: Int): Double = {
+    val c = math.min(k, a.length / 2)
+    var s = 0.0
+    var j = 0
+    while (j < c) { s += a(2 * j + 1); j += 1 }
+    s / c
+  }
+
+  /** Index of the (distance, label) maximum of the k state entries
+    * under [[topK]]'s total order. Ties keep the lowest index; tied
+    * entries are identical pairs, so which one a later admission
+    * overwrites cannot change the surviving multiset. */
+  @inline private def topKMaxIdx(d0: Array[Double], l0: Array[Double], k: Int): Int = {
     var mi = 0; var i = 1
     while (i < k) {
       val c = java.lang.Double.compare(d0(i), d0(mi))
@@ -219,16 +331,12 @@ object KnnForecaster {
     mi
   }
 
-  /** Scan rows [s, e) of the row-major block buffer for ONE query's
-    * bounded top-k state (d0/l0 arrays of size k, `cnt0` entries so
-    * far, `maxI0` the max index once full). The admission test is the
-    * boxed kernel's exact IEEE comparison (`d < max || (d == max &&
-    * label < maxLabel)`) against the current k-th entry, and every
-    * admitted row's distance comes from the same complete
-    * ascending-lag fold — the surviving (distance, label) multiset is
-    * bit-identical to the former PriorityQueue kernel's. Returns the
-    * updated (cnt << 32) | maxI. */
-  @inline private def scanRun(featBuf: Array[Double], labBuf: Array[Double],
+  /** Scan rows [s, e) of a row-major corpus for ONE query's bounded
+    * top-k state (d0/l0 arrays of size k, `cnt0` entries so far,
+    * `maxI0` the max index once full). A row enters a full state when
+    * it ranks strictly below the current k-th entry in [[topK]]'s total
+    * order. Returns the updated (cnt << 32) | maxI. */
+  @inline private def scanRun(feats: Array[Double], labels: Array[Double],
                               s: Int, e: Int, lags: Int, k: Int,
                               q: Array[Double],
                               d0: Array[Double], l0: Array[Double],
@@ -240,147 +348,29 @@ object KnnForecaster {
     while (r < e) {
       val base = r * lags
       var d = 0.0; var j = 0
-      while (j < lags) { val t = featBuf(base + j) - q(j); d += t * t; j += 1 }
-      val label = labBuf(r)
+      while (j < lags) { val t = feats(base + j) - q(j); d += t * t; j += 1 }
+      val label = labels(r)
       if (c < k) {
         d0(c) = d; l0(c) = label; c += 1
         if (c == k) {
           mi = topKMaxIdx(d0, l0, k); thrD = d0(mi); thrL = l0(mi)
         }
-      } else if (d < thrD || (d == thrD && label < thrL)) {
-        d0(mi) = d; l0(mi) = label
-        mi = topKMaxIdx(d0, l0, k); thrD = d0(mi); thrL = l0(mi)
+      } else {
+        val cd = java.lang.Double.compare(d, thrD)
+        if (cd < 0 || (cd == 0 && java.lang.Double.compare(label, thrL) < 0)) {
+          d0(mi) = d; l0(mi) = label
+          mi = topKMaxIdx(d0, l0, k); thrD = d0(mi); thrL = l0(mi)
+        }
       }
       r += 1
     }
     (c.toLong << 32) | mi.toLong
   }
 
-  /** Multi-group twin of [[heapPass]]: corpus rows carry a trailing
-    * `__grp` int and serve ONLY their group's queries (`qRows` =
-    * (qid, grp, state)), so one scan advances every active
-    * (member × CV-slice) roll of the elite zoo's knn family at once —
-    * the scan cost is corpus-bound, and the per-row inner loop only
-    * runs over the row's own group's queries, so batching G rolls
-    * whose corpora union here costs ~1 scan of the union instead of G
-    * scans of the slices (and, decisively at bench scale, 1 Spark
-    * job per step instead of G jobs × a window-rank shuffle each).
-    * Identical distance fold, heap maintenance and (distance, label)
-    * tie-break as [[heapPass]]; qids must be globally unique across
-    * groups.
-    *
-    * Returns the per-query top-k MEAN directly. The per-partition
-    * bounded heaps are combined DISTRIBUTED (r15 — VERDICT r14 #3):
-    * each partition emits ONE heapOrd-ascending candidate array per
-    * resident query, a reduceByKey merge keeps the k smallest per qid
-    * executor-side, and the driver receives exactly O(queries × k)
-    * doubles — the former collect shipped O(partitions × queries × k)
-    * candidate tuples, the one hot-path driver volume that grew with
-    * CLUSTER size rather than data size. Top-k-of-union equals the
-    * merge of per-partition top-ks under the same total (distance,
-    * label) order (ties are value-identical pairs), and the final
-    * mean sums ascending — bit-identical to the window-rank form
-    * row_number().over(orderBy(dist, label)) ≤ k feeding avg. */
-  private[operators] def heapPassMultiMerged(
-      reduction: DataFrame, qRows: Array[(Long, Int, Array[Double])],
-      lags: Int, k: Int): java.util.HashMap[Long, Double] = {
-    val spark = reduction.sparkSession
-    val bq = spark.sparkContext.broadcast(qRows)
-    val partials = reduction.rdd.mapPartitions { it =>
-      val qs = bq.value
-      val byGrp: scala.collection.Map[Int, Array[Int]] =
-        qs.indices.toArray.groupBy(i => qs(i)._2)
-      val empty = Array.empty[Int]
-      // primitive top-k state, allocated LAZILY: a partition holds one
-      // group's rows, so only that group's state materializes (an
-      // eager fill allocated total-queries heaps in EVERY task —
-      // measured as a dominant per-step cost at 9 groups × 1500
-      // entities × 288 tasks). Rows buffer into a row-major block and
-      // each same-group RUN is scanned query-outer ([[scanRun]]): the
-      // query vector and its k-th threshold stay register/L1-hot
-      // across the run instead of a boxed heap-head deref per pair
-      // (r14: −25% process-CPU on fc_elite_knn). Row order per query
-      // is the iterator order either way, so the surviving multiset —
-      // and every tie-break — is bit-identical to the boxed kernel's.
-      val nq = qs.length
-      val dA = new Array[Array[Double]](nq)
-      val lA = new Array[Array[Double]](nq)
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      val B = 256
-      val featBuf = new Array[Double](B * lags)
-      val labBuf = new Array[Double](B)
-      val grpBuf = new Array[Int](B)
-      var n = 0
-      def flush(): Unit = {
-        var s = 0
-        while (s < n) {
-          val g = grpBuf(s)
-          var e = s + 1
-          while (e < n && grpBuf(e) == g) e += 1
-          val grpQs = byGrp.getOrElse(g, empty)
-          var gi = 0
-          while (gi < grpQs.length) {
-            val qi = grpQs(gi)
-            var d0 = dA(qi)
-            if (d0 == null) {
-              d0 = new Array[Double](k); dA(qi) = d0
-              lA(qi) = new Array[Double](k)
-            }
-            val packed = scanRun(featBuf, labBuf, s, e, lags, k, qs(qi)._3,
-              d0, lA(qi), cnt(qi), maxI(qi))
-            cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-            gi += 1
-          }
-          s = e
-        }
-        n = 0
-      }
-      it.foreach { row =>
-        val base = n * lags
-        var i = 0
-        while (i < lags) { featBuf(base + i) = row.getDouble(i); i += 1 }
-        labBuf(n) = row.getDouble(lags)
-        grpBuf(n) = row.getInt(lags + 1)
-        n += 1
-        if (n == B) flush()
-      }
-      if (n > 0) flush()
-      (0 until nq).iterator.flatMap { qi =>
-        val d0 = dA(qi)
-        if (d0 == null) Iterator.empty
-        else {
-          // ONE heapOrd-ascending interleaved [d0,l0,d1,l1,…] array per
-          // (partition, qid) — the unit the distributed combine merges
-          val c = cnt(qi); val l0 = lA(qi); val qid = qs(qi)._1
-          val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
-            Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
-          val packed = new Array[Double](2 * c)
-          var o = 0
-          while (o < c) {
-            packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1
-          }
-          Iterator((qid, packed))
-        }
-      }
-    }.reduceByKey(mergeTopK(_, _, k)).collect()
-    // mean of the k (distance, label)-smallest labels, summed ascending
-    // — the arrays arrive merged, ascending and already capped at k
-    val out = new java.util.HashMap[Long, Double]()
-    partials.foreach { case (qid, packed) =>
-      val c = packed.length / 2
-      var s = 0.0
-      var j = 0
-      while (j < c) { s += packed(2 * j + 1); j += 1 }
-      out.put(qid, s / c)
-    }
-    out
-  }
-
-  /** Merge two heapOrd-ascending interleaved (distance, label) arrays,
-    * keeping the k smallest — associative and commutative as a
-    * multiset operation (ties are value-identical pairs), so the
-    * reduceByKey combine order cannot change the result. */
+  /** Merge two ascending interleaved (distance, label) arrays, keeping
+    * the k smallest — associative and commutative as a multiset
+    * operation (ties are identical pairs), so the reduceByKey combine
+    * order cannot change the result. */
   private def mergeTopK(a: Array[Double], b: Array[Double], k: Int): Array[Double] = {
     val na = a.length / 2; val nb = b.length / 2
     val n = math.min(k, na + nb)
@@ -396,71 +386,6 @@ object KnnForecaster {
       o += 1
     }
     out
-  }
-
-  /** RECURSIVE multi-horizon KNN — the reference's knn predicts any
-    * fh by rolling the state forward (forecasting/knn.py:22 via
-    * base/forecaster recursion): horizon h's query vector is
-    * (ŷ_{h−1}, …) — one bounded-heap distance pass of the cached
-    * reduction per step, with the per-entity means (one double per
-    * entity per step) mediated through the driver like the rest of
-    * the broadcast-KNN path. fh sequential passes over ONE cached
-    * reduction; the per-step collected state is O(entities).
-    * [[predictOneStep]] stays the fh=1 fast path. */
-  def predictRecursive(p: Panel, timeCol: String, freq: String, lags: Int,
-                       k: Int, fh: Int, corpusFraction: Double = 1.0): DataFrame = {
-    val spark = p.df.sparkSession
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l").toArray
-    val reduction = Forecasters.makeReduction(p, lags)
-      .filter(corpusKeep(p.entityCols, corpusFraction))
-      .na.drop(featureCols :+ p.value)
-      .select((featureCols.map(c => col(c).cast("double")).toIndexedSeq :+
-        col(p.value).cast("double").as("__label")): _*)
-      .cache()
-    try {
-      require(reduction.limit(1).count() > 0,
-        s"knn recursive predict has no complete training rows (lags=$lags)")
-      val nEntity = p.entityCols.length
-      val tails = queryTails(p, timeCol, lags)
-      val keep = p.entityCols ++ (col("__cutoff") +:
-        (1 to lags).map(l => col(s"${p.value}__lag_$l").cast("double")))
-      val sel = tails.select(keep: _*)
-      val collected = sel.collect()
-      guardExactEntities(collected.length.toLong, "knn predictRecursive")
-      var states = collected.map(r =>
-        Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j)))
-      val preds = Array.ofDim[Double](fh, collected.length)
-      (1 to fh).foreach { h =>
-        val qRows = states.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-        val stepAvg = heapPass(spark, reduction, qRows, lags, k)
-          .filter(col("__nn") <= k)
-          .groupBy("__qid").agg(avg(col("__label")).as("__p"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        states = states.zipWithIndex.map { case (s, i) =>
-          val pr = stepAvg(i.toLong)
-          preds(h - 1)(i) = pr
-          pr +: s.dropRight(1)
-        }
-      }
-      // (qid, h, pred) is tiny — build it driver-side, attach the
-      // entity/cutoff meta, and derive timestamps the shared way
-      val qMeta = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          collected.zipWithIndex.map { case (r, i) =>
-            Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
-          }.toIndexedSeq, 1),
-        StructType(sel.schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-      val predRows = for { h <- 1 to fh; i <- collected.indices }
-        yield Row(i.toLong, h, preds(h - 1)(i))
-      val predDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(predRows, 1),
-        StructType(Seq(StructField("__qid", LongType), StructField("__h", IntegerType),
-          StructField(p.value, DoubleType))))
-      broadcast(qMeta)
-        .join(predDf, "__qid")
-        .withColumn(timeCol, Forecasters.futureTime(freq))
-        .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
-    } finally reduction.unpersist(blocking = false)
   }
 
   /** IVF-cell variant — the Spark-first analog of the reference's
@@ -479,21 +404,22 @@ object KnnForecaster {
     *    — query tails collect to the driver (provably complete via a
     *    cap+1-limited collect, never an unbounded one), the corpus is
     *    scanned ONCE with in-scan cell assignment against the
-    *    broadcast centroid matrix, one narrow top-k merge. The
-    *    bench/oracle path.
+    *    broadcast centroid matrix — the exact path's [[topK]] with the
+    *    cell as the group. The bench/oracle path.
     *  - past the cap: delegates to [[predictRecursiveIvf]] at fh = 1
     *    — the fully distributed (qid, state) roll where only the
     *    nCells × lags centroid sample ever touches the driver
     *    (soak-verified at 1M entities, SCALE.md r14).
     *
-    * Both strategies are bit-identical (same portable md5-tag
-    * centroid sample, ascending-lag left-fold, strict-< ascending
-    * argmin with ties → lowest cell, (distance, label) top-k order,
-    * ascending mean) — the fc_ann DuckDB oracle replicates either. */
+    * Both strategies are bit-identical wherever no distance is NaN
+    * (same portable md5-tag centroid sample, ascending-lag left-fold,
+    * strict-< ascending argmin with ties → lowest cell, (distance,
+    * label) top-k order, ascending mean) — the fc_ann DuckDB oracle
+    * replicates either. The distributed roll's k-buffers compare with
+    * IEEE `<`, so a NaN distance does not rank last there. */
   def predictOneStepIvf(p: Panel, timeCol: String, freq: String, lags: Int, k: Int,
                         nCells: Int, entityCountHint: Long = -1L): DataFrame = {
     val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
-    val spark = p.df.sparkSession
     // cap+1-limited collect: complete (length ≤ cap) proves every
     // tail is on the driver; length = cap+1 proves the panel is over
     // the cap without ever collecting it (clamp before the +1 — a
@@ -537,87 +463,24 @@ object KnnForecaster {
     // frame here
     require(centMat.nonEmpty,
       s"knn one-step IVF has no complete training rows (lags=$lags)")
-    // within-cell search uses the SAME bounded-heap partition scan as
-    // the exact path (corpus rows visit only their own cell's query
-    // group) — materializing the cell join + a global window sort
-    // instead was 25× slower under cell skew (one popular centroid
-    // makes the join quadratic-ish, while the scan stays one pass)
-    val corpus = red.select((featureCols.map(c => col(c).cast("double")) :+
-      col(p.value).cast("double").as("__label")): _*)
+    // within-cell search is the exact path's kernel with the cell as
+    // the group (corpus rows serve only their own cell's queries) —
+    // materializing the cell join + a global window sort instead was
+    // 25× slower under cell skew (one popular centroid makes the join
+    // quadratic-ish, while the scan stays one pass)
+    val corpusRows = GraftSqlBridge.cacheLayoutRows(red.select(
+      (featureCols.map(c => col(c).cast("double")) :+ col(p.value).cast("double")): _*))
     val nEntity = p.entity.length
     val qRows = collected.zipWithIndex.map { case (r, i) =>
       val feats = Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j))
       (i.toLong, nearestCell(feats, centMat), feats)
     }
-    val qMeta = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        collected.zipWithIndex.map { case (r, i) =>
-          Row.fromSeq(r.toSeq.take(nEntity + 1) :+ i.toLong)
-        }.toIndexedSeq, 1),
-      StructType(queries.schema.fields.take(nEntity + 1) :+ StructField("__qid", LongType)))
-    val bq = spark.sparkContext.broadcast(qRows)
-    val bc = spark.sparkContext.broadcast(centMat)
-    val partials = corpus.rdd.mapPartitions { it =>
-      val qs = bq.value
-      val cents = bc.value
-      // primitive per-query top-k state (the r14 scanRun conventions:
-      // same IEEE admission compare, same Double.compare max — the
-      // surviving multiset is bit-identical to the boxed heaps')
-      val nq = qs.length
-      val dA = Array.fill(nq)(new Array[Double](k))
-      val lA = Array.fill(nq)(new Array[Double](k))
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      // queries pre-grouped by cell: each training row visits ONLY its
-      // own cell's queries. The former flat scan with an inner cell
-      // guard still enumerated every (row × query) pair — O(rows ·
-      // entities) guard checks that put a 21-minute wall at 200k
-      // entities (KnnEntitySoak) on the path whose whole point is
-      // dodging that product. Same surviving pairs, ×nCells less work.
-      val byCell: scala.collection.Map[Int, Array[Int]] =
-        qs.indices.toArray.groupBy(i => qs(i)._2)
-      val empty = Array.empty[Int]
-      val feats = new Array[Double](lags)
-      val lab1 = new Array[Double](1)
-      it.foreach { row =>
-        var i = 0
-        while (i < lags) { feats(i) = row.getDouble(i); i += 1 }
-        lab1(0) = row.getDouble(lags)
-        // in-scan cell assignment against the broadcast centroid
-        // matrix — the shared [[nearestCell]] argmin (a top-level
-        // object method compiles to a static MODULE$ call, so the
-        // closure captures nothing). feats feeds scanRun directly —
-        // scanRun never mutates its block buffer (ADVICE r14: the old
-        // per-row arraycopy into a one-row staging buffer was dead
-        // work on the hot path).
-        val cellQs = byCell.getOrElse(nearestCell(feats, cents), empty)
-        var ci = 0
-        while (ci < cellQs.length) {
-          val qi = cellQs(ci)
-          val packed = scanRun(feats, lab1, 0, 1, lags, k, qs(qi)._3,
-            dA(qi), lA(qi), cnt(qi), maxI(qi))
-          cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-          ci += 1
-        }
-      }
-      (0 until nq).iterator.flatMap { qi =>
-        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi); val qid = qs(qi)._1
-        (0 until c).iterator.map(j => Row(qid, d0(j), l0(j)))
-      }
-    }
-    val partialDf = spark.createDataFrame(partials, StructType(Seq(
-      StructField("__qid", LongType), StructField("__dist", DoubleType),
-      StructField("__label", DoubleType))))
-    val topk = partialDf
-      .withColumn("__nn", row_number().over(
-        Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
-      .filter(col("__nn") <= k)
-      .groupBy("__qid").agg(avg(col("__label")).as(p.value))
-    broadcast(qMeta)
-      .join(topk, "__qid")
-      .withColumn("__h", lit(1))
-      .withColumn(timeCol, Forecasters.futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+    val near = topK(corpus(corpusRows, lags, cells = centMat), qRows, lags, k)
+    forecastFrame(p, timeCol, freq, queries.schema.fields.take(nEntity + 1).toIndexedSeq,
+      collected.map(_.toSeq.take(nEntity + 1)).toIndexedSeq,
+      collected.indices.collect {
+        case i if near.containsKey(i.toLong) => (i, 1, meanLabel(near.get(i.toLong), k))
+      })
   }
 
   /** RECURSIVE multi-horizon KNN over an IVF cell index — the scale
@@ -733,8 +596,8 @@ object KnnForecaster {
         val joined = corpus.join(q.hint("shuffle_hash"), Seq("__cell"))
           .select(col("__qid"), dExpr.as("__d"), col("__label"))
         // per-partition bounded k-buffers per query (memory ∝ queries
-        // in the partition, never pairs), then the exact path's tiny
-        // rank-merge: ≤ partitions-touched × queries × k rows. A qid's
+        // in the partition, never pairs), then a tiny rank-merge:
+        // ≤ partitions-touched × queries × k rows. A qid's
         // pairs normally live in one partition (cell co-location), but
         // the merge stays correct even if AQE ever splits a skewed one.
         val partialRdd = joined.rdd.mapPartitions { it =>
@@ -799,18 +662,19 @@ object KnnForecaster {
     } finally corpus.unpersist(blocking = false)
   }
 
-  /** Strict-< ascending argmin of squared L2 against the centroid
-    * matrix (ties → lowest cell — array_min(struct(d, c)) ordering; a
-    * NaN distance never wins). Top-level so task closures reference it
-    * through the module's static field instead of capturing an
-    * enclosing method frame. */
-  private[graft] def nearestCell(feats: Array[Double], cents: Array[Array[Double]]): Int = {
+  /** Strict-< ascending argmin of squared L2 between the centroids and
+    * the features at `feats(off)…` (ties → lowest cell —
+    * array_min(struct(d, c)) ordering; a NaN distance never wins).
+    * Top-level so task closures reference it through the module's
+    * static field instead of capturing an enclosing method frame. */
+  private[graft] def nearestCell(feats: Array[Double], cents: Array[Array[Double]],
+                                 off: Int = 0): Int = {
     var bestD = Double.PositiveInfinity; var bestC = 0
     var c = 0
     while (c < cents.length) {
       val cent = cents(c)
       var d = 0.0; var j = 0
-      while (j < feats.length) { val t = feats(j) - cent(j); d += t * t; j += 1 }
+      while (j < cent.length) { val t = feats(off + j) - cent(j); d += t * t; j += 1 }
       if (d < bestD) { bestD = d; bestC = c }
       c += 1
     }
@@ -902,11 +766,6 @@ object KnnForecaster {
       .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
   }
 
-  /** One row per entity: the newest lag-tail as lag columns + cutoff.
-    * No query id here — the broadcast path assigns one via
-    * zipWithIndex after the fact; a global row_number window would
-    * funnel the whole frame through a single partition, which the LSH
-    * (huge-entity) path must never do. */
   /** The exact broadcast path's scale assumption, made LOUD: it
     * collects one query row per entity to the driver and scans every
     * (training row × entity) pair per pass — O(rows · entities ·
@@ -927,6 +786,10 @@ object KnnForecaster {
         "buckets) at this scale, or raise KnnForecaster.maxExactEntities if " +
         "the driver is sized for it.")
 
+  /** One row per entity: the newest lag-tail as lag columns + cutoff.
+    * No query id here — callers index the collected rows; a global
+    * row_number window would funnel the whole frame through a single
+    * partition, which the LSH (huge-entity) path must never do. */
   private[operators] def queryTails(p: Panel, timeCol: String, lags: Int): DataFrame = {
     val tail = p.df
       .withColumn("__rn_desc", row_number().over(

@@ -1,9 +1,13 @@
 package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Access bridge for `private[sql]` classic-API internals: the
   * Column↔Expression conversion — the standard pattern for Spark
@@ -34,5 +38,18 @@ object GraftSqlBridge {
     val s = classic.SparkSession.getOrCloneSessionWithConfigsOff(session, off)
     session.artifactManager.withResources(
       s.withActive(s.sessionState.executePlan(ds.logicalPlan).toRdd))
+  }
+
+  /** Driver rows as a frame over one partition whose plan says so
+    * (`SinglePartition`): a global aggregate or a per-key window over
+    * it needs no exchange. A plain `createDataFrame` over the same RDD
+    * reports an unknown partitioning, so a hash of its rows costs a
+    * shuffle and a second job. */
+  def onePartitionFrame(session: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
+    classic.Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema),
+      s.sparkContext.parallelize(internal, 1), SinglePartition)(s))
   }
 }

@@ -58,10 +58,11 @@ class MomentSharingSpec extends SparkSpec {
   }
 
   test("batched-knn distributed combine equals the per-member exact roll") {
-    // EliteDeep's knn members route through EliteKnnBatch →
-    // heapPassMultiMerged (the reduceByKey combine); predictRecursive
-    // is the per-member exact roll (window-rank merge). Same panel,
-    // same (lags, k, fh) ⇒ bitwise-identical forecasts.
+    // EliteDeep's knn members route through EliteKnnBatch (one
+    // KnnForecaster.topK scan per step over the union of every
+    // context's reduction); predictRecursive is the per-member exact
+    // roll. Same panel, same (lags, k, fh) ⇒ bitwise-identical
+    // forecasts.
     val series = Seq(
       Seq(1.0, 3, 2, 5, 4, 6, 5, 8, 7, 9, 8, 11, 10, 12),
       Seq(2.0, 2, 4, 3, 6, 5, 7, 6, 9, 8, 10, 9, 12, 11),

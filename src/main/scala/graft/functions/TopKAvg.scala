@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Bounded top-k-mean aggregate: the mean label of the k smallest
   * (distance, label) pairs seen by the group, ordered lexicographically
@@ -19,8 +18,7 @@ import org.apache.spark.sql.functions.udaf
   * ObjectHashAggregate falls back to SORT-based aggregation past 128
   * distinct keys per task (spark.sql.objectHashAggregate.sortBased.
   * fallbackThreshold), which would sort the corpus-sized pair stream —
-  * measured as an executor OOM at 1M entities. The udaf form below
-  * remains correct (and map-side-combining) for modest group counts.
+  * measured as an executor OOM at 1M entities.
   *
   * Buffer layout: a sorted ascending interleaved array
   * [d0,l0, d1,l1, …] of at most k pairs. k is small (3-10), so O(k)
@@ -83,9 +81,4 @@ final class TopKAvgAgg(k: Int)
 
   override def bufferEncoder: Encoder[Array[Double]] = Encoders.kryo[Array[Double]]
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-}
-
-object TopKAvg {
-  /** Two-column (distance, label) UDAF form for DataFrame `agg`. */
-  def apply(k: Int) = udaf(new TopKAvgAgg(k), Encoders.product[(Double, Double)])
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Panel
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** AutoML-style model selection and the elite ensemble.
@@ -55,18 +55,15 @@ object AutoForecast {
     * PREFIX per entity, its lag matrix is exactly the full-data lag
     * matrix filtered to `__rn ≤ trainEnd` — so the lag windows, row
     * positions, and feature assembly are computed once and cached, and
-    * each split is a filter + one closed-form MLlib fit + flat
-    * per-horizon expressions (no per-split reduction recompute).
-    * Returns the same schema as [[Conformal.backtest]]. */
+    * each split is a filter + one closed-form fit + flat per-horizon
+    * expressions: [[PrefixBacktest.backtest]] with no transform and
+    * the OLS/ridge fit (drift=false: the no-intercept *_no_drift elite
+    * members). Returns the same schema as [[Conformal.backtest]]. */
   def backtestLinearPrefix(p: Panel, timeCol: String, lags: Int,
                            testSize: Int, nSplits: Int, stepSize: Int,
                            ridge: Double = 0.0,
                            preAssembled: Option[DataFrame] = None,
                            drift: Boolean = true): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
     // callers sweeping several lag counts can pass ONE positioned
     // >=max-lag frame (caller owns its cache lifecycle) — the smaller
     // candidates read their lag_1..lag_n columns from it unchanged
@@ -74,71 +71,17 @@ object AutoForecast {
       .withPosition(p.copy(df = Preprocess.lagKeepAll(p, 1 to lags)))
       .cache())
     try {
-    // the per-split OLS fits are independent actions over the shared
-    // cached frame — run them as CONCURRENT Spark jobs (the scheduler
-    // interleaves their stages; per-partition cache locks dedupe the
-    // first materialization) instead of serial driver turns
-    val splitFutures = (0 until nSplits).map { i => Future {
-      val cutoff = testSize + (nSplits - 1 - i) * stepSize
-      val trainEnd = col("__cnt") - cutoff
-      // closed-form one-pass OLS per split over the shared cached frame
-      // (drift=false: the no-intercept *_no_drift elite members)
-      val trainSlice = assembled.filter(col("__rn") <= trainEnd && col("__rn") > lags)
-      val (mIntercept, mWeights) =
-        if (drift) graft.functions.Ols.fit(trainSlice, featureCols, p.value, ridge)
-        else (0.0, graft.functions.Ols.fitNoDrift(trainSlice, featureCols, p.value, ridge))
-      // per-entity state at the split cutoff: values trainEnd..trainEnd−lags+1
-      val tailRows = assembled
-        .filter(col("__rn") > trainEnd - lags && col("__rn") <= trainEnd)
-        .withColumn("__rn_desc", trainEnd - col("__rn") + 1)
-      val state = tailRows.groupBy(p.entityCols: _*).agg(
-        collect_list(struct(col("__rn_desc"), p.x)).as("__s"))
-        .withColumn("__state", sort_array(col("__s")).getField(p.value))
-        // entities too short for this split's tail are dropped (ANSI
-        // element_at would throw on a short __state)
-        .filter(size(col("__state")) >= lags)
-      // closed-form per-horizon affine coefficients (as in
-      // Forecasters.predictRecursiveLinear)
-      val weights = mWeights
-      var a = Array.tabulate(lags, lags)((r, c) => if (r == c) 1.0 else 0.0)
-      var cvec = new Array[Double](lags)
-      val horizons = (1 to testSize).map { _ =>
-        val ah = Array.tabulate(lags)(j => weights.zipWithIndex.map { case (w, r) => w * a(r)(j) }.sum)
-        val bh = mIntercept + weights.zipWithIndex.map { case (w, r) => w * cvec(r) }.sum
-        a = ah +: a.dropRight(1); cvec = bh +: cvec.dropRight(1)
-        (ah, bh)
-      }
-      // StableConst, not lit: inlined fitted weights compiled a fresh
-      // projection class per (split, candidate, run) — see
-      // Forecasters.predictRecursiveLinear's r15 note
-      val predCols = horizons.map { case (ah, bh) =>
-        import graft.functions.StableConst.{double => sd}
-        ah.zipWithIndex.collect { case (w, j) if w != 0.0 => sd(w) * element_at(col("__state"), j + 1) }
-          .foldLeft(sd(bh): Column)(_ + _)
-      }
-      val pred = state.withColumn("__h", explode(sequence(lit(1), lit(testSize))))
-        .withColumn("__pred", element_at(array(predCols: _*), col("__h").cast("int")))
-        .select((p.entityCols :+ col("__h") :+ col("__pred")): _*)
-      val actual = assembled
-        .filter(col("__rn") > trainEnd && col("__rn") <= trainEnd + testSize)
-        .withColumn("__h", (col("__rn") - trainEnd).cast("int"))
-        .select((p.entityCols ++ Seq(col("__h"), col(timeCol), p.x.as("__actual"))): _*)
-      actual.join(pred, p.entity :+ "__h", "inner").withColumn("split", lit(i))
-    } }
-    val splits = Await.result(Future.sequence(splitFutures), Duration.Inf)
-    // eagerly materialize the (small: entities × testSize × nSplits)
-    // result so the big lag-matrix cache can be dropped NOW — a lag-grid
-    // sweep runs this once per candidate concurrently, and without the
-    // unpersist the caches for the whole sweep pile up. localCheckpoint
-    // blocks are reclaimed by the ContextCleaner when the frame is GC'd.
-    val out = splits.reduce(_ unionByName _)
-      .select((p.entityCols ++ Seq(col(timeCol), col("split"),
-        col("__actual").as("actual"), col("__pred").as("pred"))): _*)
-    // when the caller owns the lag-matrix cache (preAssembled) it stays
-    // hot past this call — return the lazy frame and skip the eager
-    // materialization barrier; the checkpoint is only needed to let the
-    // locally-built cache drop safely in the finally below
-    if (preAssembled.isEmpty) out.localCheckpoint(eager = true) else out
+      val out = PrefixBacktest.backtest(p, timeCol, lags, testSize, nSplits, stepSize,
+        assembled, PrefixBacktest.NoTransform, (df, fs, lb) =>
+          if (drift) graft.functions.Ols.fit(df, fs, lb, ridge)
+          else (0.0, graft.functions.Ols.fitNoDrift(df, fs, lb, ridge)))
+      // eagerly materialize the (small: entities × testSize × nSplits)
+      // result so the big lag-matrix cache can be dropped NOW — a
+      // lag-grid sweep runs this once per candidate concurrently, and
+      // without the unpersist the caches for the whole sweep pile up.
+      // When the caller owns the cache (preAssembled) it stays hot past
+      // this call: return the lazy frame, no materialization barrier.
+      if (preAssembled.isEmpty) out.localCheckpoint(eager = true) else out
     } finally if (preAssembled.isEmpty) assembled.unpersist(blocking = false)
   }
 

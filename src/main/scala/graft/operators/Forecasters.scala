@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Panel
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,7 +66,7 @@ object Forecasters {
     * arithmetic, never interval seconds (SURVEY.md §7.5(5)). */
   private val FreqPattern = """^(\d+)(mo|s|m|h|d|w|q|y|i)$""".r
 
-  private[operators] def futureTime(freq: String): org.apache.spark.sql.Column =
+  private[operators] def futureTime(freq: String): Column =
     freq.toLowerCase match {
       case FreqPattern(n, "i") => col("__cutoff") + col("__h") * n.toInt
       case FreqPattern(n, alias) =>
@@ -85,52 +85,127 @@ object Forecasters {
   def makeReduction(p: Panel, lags: Int): DataFrame =
     Preprocess.lag(p, 1 to lags)
 
-  /** Per-entity recursive linear AR predict with broadcast
-    * coefficients — SURVEY.md §7.5(1) plan A, in closed form: the
-    * recursion ŷ_{h} = b + w·state_{h-1} with state shift is affine in
-    * the INITIAL state, so the per-horizon coefficients (a_h, b_h) are
-    * iterated driver-side (O(fh·lags²) doubles — the companion-matrix
-    * power) and every horizon becomes one flat codegen-able expression
-    * over the lag-tail array. No recursive expression substitution
-    * (which would grow the plan exponentially in fh), no per-step job. */
-  /* NOTE on the tail-state scaffold (rn_desc window → collect_list →
-   * sort_array → completeness filter) appearing here and in
-   * GbtForecaster.predictRecursiveModel, LinearForecaster (direct /
-   * ensemble / exog) and KnnForecaster.queryTails (the elite KNN
-   * batch, the IVF and LSH paths): the copies are DELIBERATE — each
-   * site's completeness filter and carried columns differ subtly
-   * (null-state handling, __cutoff, extra lag columns), and a shared
-   * helper would have to parameterize all of it. Change one, check
-   * all. The exact KNN one-step and recursive paths take the same
-   * state from the newest row of their lag window instead
-   * (KnnForecaster.Lagged: value and lag 1…L−1 not null). */
-  def predictRecursiveLinear(p: Panel, timeCol: String, fh: Int, freq: String,
-                             intercept: Double, weights: Array[Double]): DataFrame = {
-    val lags = weights.length
-    val tail = p.df
+  /** End-of-panel tail state: one row per entity with at least `lags`
+    * rows, carrying the entity columns, `__cutoff` (the entity's max
+    * `timeCol`) and `__state`, its newest `lags` values newest-first
+    * (`__state(0)` = lag 1). An entity with fewer than `lags` rows is
+    * dropped (the reference's check_backtest_lengths): a short state
+    * would make `element_at` throw under ANSI. Elements may be null or
+    * NaN; a caller that cannot take a null element (an executor-side
+    * roll or a driver-side collect) passes its own condition on
+    * `__state` as `complete`, tested in the same filter (as a second
+    * filter Catalyst folds the `__state` projection into the aggregate,
+    * a different plan). */
+  private[operators] def tailState(p: Panel, timeCol: String, lags: Int,
+                                   complete: Column = lit(true)): DataFrame =
+    p.df
       .withColumn("__rn_desc", row_number().over(
         Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
       .filter(col("__rn_desc") <= lags)
-    // state array ordered newest-first: state(0) = lag 1. Entities with
-    // fewer than `lags` observations are DROPPED (like the reference's
-    // check_backtest_lengths): a short __state would make
-    // element_at(__state, j) throw under ANSI / go null otherwise.
-    val state0 = tail.groupBy(p.entityCols: _*).agg(
-      collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-      max(col(timeCol)).as("__cutoff"))
+      .groupBy(p.entityCols: _*).agg(
+        collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
+        max(col(timeCol)).as("__cutoff"))
+      .withColumn("__state", sort_array(col("__s")).getField(p.value))
+      .filter(size(col("__state")) >= lags && complete)
+      .drop("__s")
+
+  /** Tail state at a per-entity position over a positioned frame (one
+    * carrying `__rn`): per entity the values at rows
+    * `end − lags < __rn ≤ end` as `__state`, newest-first, plus the
+    * caller's `aggs` over the same rows; entities with fewer than
+    * `lags` such rows are dropped. Serves the prefix backtests (`end` =
+    * the split's train end) and [[FourierLinear.fitPredict]] (`end` =
+    * `__cnt`). */
+  private[operators] def prefixTailState(p: Panel, positioned: DataFrame, end: Column,
+                                         lags: Int, aggs: Column*): DataFrame =
+    positioned
+      .filter(col("__rn") > end - lags && col("__rn") <= end)
+      .withColumn("__rn_desc", end - col("__rn") + 1)
+      .groupBy(p.entityCols: _*).agg(
+        collect_list(struct(col("__rn_desc"), p.x)).as("__s"), aggs: _*)
       .withColumn("__state", sort_array(col("__s")).getField(p.value))
       .filter(size(col("__state")) >= lags)
       .drop("__s")
-    // affine representation: state_h = A·state_0 + c, row 0 = newest
+
+  /** `fh` forecast rows per entity of `df`: horizon `__h` takes element
+    * `__h` of the array `preds`, its time is `futureTime(freq)` from
+    * `__cutoff`; columns entity…, timeCol, value. */
+  private[operators] def horizonRows(df: DataFrame, p: Panel, timeCol: String, fh: Int,
+                                     freq: String, preds: Column): DataFrame =
+    df.withColumn("__h", explode(sequence(lit(1), lit(fh))))
+      .withColumn(p.value, element_at(preds, col("__h").cast("int")))
+      .withColumn(timeCol, futureTime(freq))
+      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+
+  /** The recursive linear AR map ŷ_h = b + w·state_{h−1} (state shifted
+    * by each prediction) is affine in the INITIAL state: returns
+    * (a_h, b_h) for h = 1..fh with ŷ_h = b_h + a_h·state_0, row 0 of the
+    * state the newest value. Iterated driver-side — O(fh·lags²) doubles,
+    * the companion-matrix power. */
+  private[operators] def affineHorizons(intercept: Double, weights: Array[Double],
+                                        fh: Int): IndexedSeq[(Array[Double], Double)] = {
+    val lags = weights.length
     var a = Array.tabulate(lags, lags)((i, j) => if (i == j) 1.0 else 0.0)
     var c = new Array[Double](lags)
-    val horizons = (1 to fh).map { _ =>
+    (1 to fh).map { _ =>
       val ah = Array.tabulate(lags)(j => weights.zipWithIndex.map { case (w, i) => w * a(i)(j) }.sum)
       val bh = intercept + weights.zipWithIndex.map { case (w, i) => w * c(i) }.sum
       a = ah +: a.dropRight(1)
       c = bh +: c.dropRight(1)
       (ah, bh)
     }
+  }
+
+  /** One horizon of [[affineHorizons]] as flat column algebra over the
+    * state elements `elem(1..lags)`: `b_h + Σ a_h(j)·elem(j)` folded
+    * from b_h in ascending j, zero coefficients skipped (a non-finite
+    * element under a zero coefficient leaves the sum alone). The
+    * coefficients ride through StableConst: as inlined literals every
+    * fit compiled a fresh Janino projection class per (dataset, fit),
+    * ~2-5 ms of compile plus C2 churn per fit across the fc_* family;
+    * same IEEE values, same fold order, shape-stable generated source. */
+  private[operators] def affineExpr(ah: Array[Double], bh: Double, elem: Int => Column): Column = {
+    import graft.functions.StableConst.{double => sd}
+    ah.zipWithIndex.collect { case (w, i) if w != 0.0 => sd(w) * elem(i + 1) }
+      .foldLeft(sd(bh): Column)(_ + _)
+  }
+
+  /** The recursive linear AR unroll as one lateral column per horizon:
+    * `__p{h} = b0 + Σ_j lagW(j)·s_h(j) + extra(h)…`, folded strictly
+    * left to right (b0, lag terms ascending j, then `extra(h)` in
+    * order), where s_h(j) is the earlier prediction `__p{h−j}` for
+    * j < h and the state element `elem(j − h + 1)` otherwise. Serves
+    * [[FourierLinear]] (its fourier terms as `extra`),
+    * [[PrefixBacktest.backtestFourier]], [[ExogLinear]] and
+    * [[ExogDowLinear]] (the horizon's exog contribution); the DuckDB
+    * oracles fold the same sequence. Coefficients through StableConst
+    * (see [[affineExpr]]). */
+  private[operators] def unrollRecursive(df: DataFrame, b0: Double, lagW: Array[Double],
+                                         fh: Int, elem: Int => Column)
+                                        (extra: Int => Seq[Column]): DataFrame = {
+    import graft.functions.StableConst.{double => sd}
+    (1 to fh).foldLeft(df) { (d, h) =>
+      val stateRef = (j: Int) => if (j < h) col(s"__p${h - j}") else elem(j - h + 1)
+      val terms = (1 to lagW.length).map(j => sd(lagW(j - 1)) * stateRef(j)) ++ extra(h)
+      d.withColumn(s"__p$h", terms.foldLeft(sd(b0): Column)(_ + _))
+    }
+  }
+
+  /** The `__p1..__p{fh}` columns of [[unrollRecursive]] as one array. */
+  private[operators] def unrolledPreds(fh: Int): Column =
+    array((1 to fh).map(h => col(s"__p$h")): _*)
+
+  /** Per-entity recursive linear AR predict with broadcast
+    * coefficients — SURVEY.md §7.5(1) plan A, in closed form: every
+    * horizon of [[affineHorizons]] becomes one flat codegen-able
+    * expression over the [[tailState]] array. No recursive expression
+    * substitution (which would grow the plan exponentially in fh), no
+    * per-step job. */
+  def predictRecursiveLinear(p: Panel, timeCol: String, fh: Int, freq: String,
+                             intercept: Double, weights: Array[Double]): DataFrame = {
+    val lags = weights.length
+    val state0 = tailState(p, timeCol, lags)
+    val horizons = affineHorizons(intercept, weights, fh)
     // Two physical forms of the same affine map:
     //  - unrolled literal terms (zero weights skipped), fully
     //    codegen'd — every oracle-gated shape (fh ≤ 3, lags ≤ 14)
@@ -145,20 +220,11 @@ object Forecasters {
     //    initial-b ascending-j association, evaluated per entity row
     //    (this frame is ONE ROW PER ENTITY, so the HOF's interpreted
     //    evaluation is free and nothing row-scale ever sees it).
-    // fitted coefficients ride through StableConst (r15): as inlined
-    // literals every fit compiled a FRESH Janino projection class per
-    // (dataset, fit) — unwarmable, ~2-5 ms compile + C2 churn per fit
-    // across the whole fc_* family every bench run. Same IEEE values,
-    // same fold order; only the generated source becomes shape-stable.
-    val predsCol: org.apache.spark.sql.Column =
-      if (fh.toLong * lags <= 700) {
-        import graft.functions.StableConst.{double => sd}
-        val preds = horizons.map { case (ah, bh) =>
-          ah.zipWithIndex.collect { case (w, i) if w != 0.0 => sd(w) * element_at(col("__state"), i + 1) }
-            .foldLeft(sd(bh): org.apache.spark.sql.Column)(_ + _)
-        }
-        array(preds: _*)
-      } else {
+    val predsCol: Column =
+      if (fh.toLong * lags <= 700)
+        array(horizons.map { case (ah, bh) =>
+          affineExpr(ah, bh, j => element_at(col("__state"), j)) }: _*)
+      else {
         val aFlat = typedLit(horizons.flatMap(_._1.toSeq))
         val bArr = typedLit(horizons.map(_._2))
         // zero weights are SKIPPED (acc passes through), matching the
@@ -173,10 +239,6 @@ object Forecasters {
                 .otherwise(acc + w * element_at(col("__state"), j))
             }))
       }
-    state0.withColumn("__preds", predsCol)
-      .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-      .withColumn(p.value, element_at(col("__preds"), col("__h").cast("int")))
-      .withColumn(timeCol, futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+    horizonRows(state0.withColumn("__preds", predsCol), p, timeCol, fh, freq, col("__preds"))
   }
 }

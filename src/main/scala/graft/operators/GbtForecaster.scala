@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -69,23 +68,11 @@ object GbtForecaster {
       p: Panel, timeCol: String, fh: Int, freq: String, lags: Int,
       step: Array[Double] => Double): DataFrame = {
     val spark = p.df.sparkSession
-    val tail = p.df
-      .withColumn("__rn_desc", row_number().over(
-        Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
-      .filter(col("__rn_desc") <= lags)
-    val state0 = tail.groupBy(p.entityCols: _*).agg(
-      collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-      max(col(timeCol)).as("__cutoff"))
-      .withColumn("__state", sort_array(col("__s")).getField(p.value))
-      .drop("__s")
-      // entities shorter than lags have no complete state — drop them,
-      // like the linear family's tail filter (and the oracle's
-      // longEnough condition); an undersized array would index past
-      // its end inside step() on the executor. A state CONTAINING a
-      // null is equally incomplete: getSeq[Double] would unbox it to a
-      // fabricated 0.0 lag and forecast from it silently
-      .filter(size(col("__state")) === lags &&
-        !exists(col("__state"), v => v.isNull))
+    // a state CONTAINING a null is incomplete here: getSeq[Double]
+    // would unbox it to a fabricated 0.0 lag and forecast from it
+    // silently (short entities already dropped by tailState)
+    val state0 = Forecasters.tailState(p, timeCol, lags,
+      complete = !exists(col("__state"), v => v.isNull))
     val slim = state0.select((p.entityCols :+ col("__cutoff") :+ col("__state")): _*)
     val outSchema = StructType(slim.schema.dropRight(1)
       :+ StructField("__preds", ArrayType(DoubleType)))
@@ -103,12 +90,8 @@ object GbtForecaster {
       }
       Row.fromSeq(row.toSeq.dropRight(1) :+ preds.toSeq)
     }
-    val preds = spark.createDataFrame(predRows, outSchema)
-    preds
-      .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-      .withColumn(p.value, element_at(col("__preds"), col("__h").cast("int")))
-      .withColumn(timeCol, Forecasters.futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+    Forecasters.horizonRows(spark.createDataFrame(predRows, outSchema),
+      p, timeCol, fh, freq, col("__preds"))
   }
 }
 

@@ -791,19 +791,11 @@ object KnnForecaster {
     * row_number window would funnel the whole frame through a single
     * partition, which the LSH (huge-entity) path must never do. */
   private[operators] def queryTails(p: Panel, timeCol: String, lags: Int): DataFrame = {
-    val tail = p.df
-      .withColumn("__rn_desc", row_number().over(
-        Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
-      .filter(col("__rn_desc") <= lags)
-    val state = tail.groupBy(p.entityCols: _*).agg(
-      collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-      max(col(timeCol)).as("__cutoff"))
-      .withColumn("__state", sort_array(col("__s")).getField(p.value))
-      // a complete state also means NO null elements — collect_list
-      // keeps structs whose value field is null, and a null would NPE
-      // the driver-side getDouble on the collected tails
-      .filter(size(col("__state")) >= lags &&
-        !exists(col("__state"), x => x.isNull))
+    // a complete state also means NO null elements — collect_list
+    // keeps structs whose value field is null, and a null would NPE
+    // the driver-side getDouble on the collected tails
+    val state = Forecasters.tailState(p, timeCol, lags,
+      complete = !exists(col("__state"), x => x.isNull))
     (1 to lags).foldLeft(state) { (d, l) =>
       d.withColumn(s"${p.value}__lag_$l", element_at(col("__state"), l))
     }

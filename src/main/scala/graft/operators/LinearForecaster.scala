@@ -116,36 +116,21 @@ object LinearForecaster {
 /** One (intercept, weights-over-tail) pair per horizon step. */
 final case class DirectLinearModel(
     models: Seq[(Double, Array[Double])], lags: Int, freq: String) {
-  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
   def predict(p: Panel, timeCol: String, fh: Int): DataFrame = {
     require(fh <= models.length, s"fitted for ${models.length} horizons")
-    val tail = p.df
-      .withColumn("__rn_desc", row_number().over(
-        Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
-      .filter(col("__rn_desc") <= lags)
-    // entities with < lags observations are dropped (short __state
-    // would make element_at throw under ANSI), mirroring the
-    // reference's check_backtest_lengths
-    val state0 = tail.groupBy(p.entityCols: _*).agg(
-      collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-      max(col(timeCol)).as("__cutoff"))
-      .withColumn("__state", sort_array(col("__s")).getField(p.value))
-      .filter(size(col("__state")) >= lags)
-      .drop("__s")
-    // StableConst, not lit — fresh-class note at
-    // Forecasters.predictRecursiveLinear (r15)
+    // each horizon's model scores the same tail: Σ w·state, then + b0
+    // (the oracle's association; every weight kept, zeros included),
+    // coefficients through StableConst (see Forecasters.affineExpr)
     val preds = models.take(fh).map { case (b0, w) =>
       import graft.functions.StableConst.{double => sd}
       w.zipWithIndex.map { case (wc, i) => sd(wc) * element_at(col("__state"), i + 1) }
         .reduce(_ + _) + sd(b0)
     }
-    state0.withColumn("__preds", array(preds: _*))
-      .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-      .withColumn(p.value, element_at(col("__preds"), col("__h").cast("int")))
-      .withColumn(timeCol, Forecasters.futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+    val state0 = Forecasters.tailState(p, timeCol, lags)
+    Forecasters.horizonRows(state0.withColumn("__preds", array(preds: _*)),
+      p, timeCol, fh, freq, col("__preds"))
   }
 }
 
@@ -184,15 +169,9 @@ object FourierLinear {
                  sp: Int, K: Int, ridge: Double, fh: Int,
                  l1Ratio: Double = 0.0, cdSweeps: Int = 40): DataFrame = {
     require(K < sp, s"fourier K must be < sp (got K=$K, sp=$sp)")
-    val pos = CrossValidation.withPosition(
-      p.copy(df = Preprocess.lagKeepAll(p, 1 to lags)))
-    val coef = ((col("__rn") - 1) % sp).cast("double") / lit(sp.toDouble)
-    val withF = (1 to K).foldLeft(pos) { (d, k) =>
-      d.withColumn(s"__fc_$k", cos(lit(2 * math.Pi * k) * coef))
-        .withColumn(s"__fs_$k", sin(lit(2 * math.Pi * k) * coef))
-    }
-    val fNames = (1 to K).flatMap(k => Seq(s"__fc_$k", s"__fs_$k"))
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l") ++ fNames
+    val withF = withFourier(CrossValidation.withPosition(
+      p.copy(df = Preprocess.lagKeepAll(p, 1 to lags))), K, sp)
+    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l") ++ fourierNames(K)
     // l1Ratio > 0: the lasso/elastic-net fourier members — same
     // dispatch as LinearForecaster.fit (CD on the identical moments)
     val (b0, w) =
@@ -203,43 +182,43 @@ object FourierLinear {
         graft.functions.Ols.elasticNetCD(
           withF.filter(col("__rn") > lags), featureCols, p.value,
           alpha = ridge, l1Ratio = l1Ratio, sweeps = cdSweeps)
-    val lagW = w.take(lags)
-    val fW = w.drop(lags)
     // per-entity tail state (newest lags values), train length n, cutoff
-    val tail = withF.filter(col("__rn") > col("__cnt") - lags)
-      .withColumn("__rn_desc", col("__cnt") - col("__rn") + 1)
-    val state = tail.groupBy(p.entityCols: _*).agg(
-      collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-      max(col(timeCol)).as("__cutoff"),
-      max(col("__cnt")).as("__n"))
-      .withColumn("__state", sort_array(col("__s")).getField(p.value))
-      .filter(size(col("__state")) >= lags)
-      .drop("__s")
-    // fitted coefficients through StableConst (r15, fresh-class note
-    // at Forecasters.predictRecursiveLinear); 2πk stays a literal
-    val unrolled = (1 to fh).foldLeft(state) { (d, h) =>
-      import graft.functions.StableConst.{double => sd}
-      val stateRef = (j: Int) =>
-        if (j < h) col(s"__p${h - j}") else element_at(col("__state"), j - h + 1)
-      val posH = ((col("__n") - 1 + h) % sp).cast("double") / lit(sp.toDouble)
-      val terms: Seq[Column] =
-        (1 to lags).map(j => sd(lagW(j - 1)) * stateRef(j)) ++
-          (1 to K).flatMap(k => Seq(
-            sd(fW(2 * (k - 1))) * cos(lit(2 * math.Pi * k) * posH),
-            sd(fW(2 * k - 1)) * sin(lit(2 * math.Pi * k) * posH)))
-      d.withColumn(s"__p$h", terms.foldLeft(sd(b0): Column)(_ + _))
+    val state = Forecasters.prefixTailState(p, withF, col("__cnt"), lags,
+      max(col(timeCol)).as("__cutoff"), max(col("__cnt")).as("__n"))
+    val unrolled = Forecasters.unrollRecursive(state, b0, w.take(lags), fh,
+      j => element_at(col("__state"), j))(h => fourierTerms(w.drop(lags), K, sp, col("__n"), h))
+    Forecasters.horizonRows(unrolled, p, timeCol, fh, freq, Forecasters.unrolledPreds(fh))
+  }
+
+  /** The fourier features `__fc_k`/`__fs_k`, k = 1..K, of each row of a
+    * positioned frame: cos/sin(2πk · coef), coef = ((__rn − 1) mod sp)/sp
+    * over the 0-based position. */
+  private[operators] def withFourier(df: DataFrame, K: Int, sp: Int): DataFrame = {
+    val coef = ((col("__rn") - 1) % sp).cast("double") / lit(sp.toDouble)
+    (1 to K).foldLeft(df) { (d, k) =>
+      d.withColumn(s"__fc_$k", cos(lit(2 * math.Pi * k) * coef))
+        .withColumn(s"__fs_$k", sin(lit(2 * math.Pi * k) * coef))
     }
-    unrolled
-      .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-      .withColumn(p.value,
-        element_at(array((1 to fh).map(h => col(s"__p$h")): _*), col("__h").cast("int")))
-      .withColumn(timeCol, Forecasters.futureTime(freq))
-      .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+  }
+
+  /** [[withFourier]]'s column names in the moment order (cos, sin per k). */
+  private[operators] def fourierNames(K: Int): Seq[String] =
+    (1 to K).flatMap(k => Seq(s"__fc_$k", s"__fs_$k"))
+
+  /** Horizon h's fourier terms for an entity of train length `n`: the
+    * cos/sin pairs k-ascending at position n − 1 + h, weights `fW`
+    * through StableConst, the 2πk factors structural literals. */
+  private[operators] def fourierTerms(fW: Array[Double], K: Int, sp: Int, n: Column,
+                                      h: Int): Seq[Column] = {
+    import graft.functions.StableConst.{double => sd}
+    val posH = ((n - 1 + h) % sp).cast("double") / lit(sp.toDouble)
+    (1 to K).flatMap(k => Seq(
+      sd(fW(2 * (k - 1))) * cos(lit(2 * math.Pi * k) * posH),
+      sd(fW(2 * k - 1)) * sin(lit(2 * math.Pi * k) * posH)))
   }
 }
 
 object ExogLinear {
-  import org.apache.spark.sql.Column
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
@@ -250,16 +229,7 @@ object ExogLinear {
     /** `xFuture`: one row per (entity, future time) carrying
       * `exogCols`, at least fh rows per entity in time order. */
     def predict(p: Panel, timeCol: String, fh: Int, xFuture: DataFrame): DataFrame = {
-      val tail = p.df
-        .withColumn("__rn_desc", row_number().over(
-          Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
-        .filter(col("__rn_desc") <= lags)
-      val state0 = tail.groupBy(p.entityCols: _*).agg(
-        collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-        max(col(timeCol)).as("__cutoff"))
-        .withColumn("__state", sort_array(col("__s")).getField(p.value))
-        .filter(size(col("__state")) >= lags)
-        .drop("__s")
+      val state0 = Forecasters.tailState(p, timeCol, lags)
       // per-entity exog contribution per horizon: c_h = Σ exogW·x(t+h),
       // one groupBy over the first fh future rows per entity
       val hw = Window.partitionBy(p.entityCols: _*).orderBy(col(timeCol))
@@ -279,20 +249,9 @@ object ExogLinear {
       // silent null forecasts for the missing horizons
       val joined = state0.join(contribs, p.entity)
         .filter(size(col("__cs")) >= fh)
-      val unrolled = (1 to fh).foldLeft(joined) { (d, h) =>
-        import graft.functions.StableConst.{double => sd}
-        val stateRef = (j: Int) =>
-          if (j < h) col(s"__p${h - j}") else element_at(col("__state"), j - h + 1)
-        val ph = (1 to lags).foldLeft(sd(intercept): Column)((acc, j) =>
-          acc + sd(lagW(j - 1)) * stateRef(j)) + element_at(col("__cs"), h)
-        d.withColumn(s"__p$h", ph)
-      }
-      unrolled
-        .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-        .withColumn(p.value,
-          element_at(array((1 to fh).map(h => col(s"__p$h")): _*), col("__h").cast("int")))
-        .withColumn(timeCol, Forecasters.futureTime(freq))
-        .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+      val unrolled = Forecasters.unrollRecursive(joined, intercept, lagW, fh,
+        j => element_at(col("__state"), j))(h => Seq(element_at(col("__cs"), h)))
+      Forecasters.horizonRows(unrolled, p, timeCol, fh, freq, Forecasters.unrolledPreds(fh))
     }
   }
 
@@ -318,8 +277,6 @@ object ExogLinear {
   * cutoff makes the exog term entity-dependent — it cannot fold into
   * driver-side scalar coefficients like the pure-lag recursion). */
 object ExogDowLinear {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
   // day-of-week convention: (epochSeconds div 86400 + 3) mod 7 →
@@ -330,37 +287,19 @@ object ExogDowLinear {
                          dowW: Array[Double], lags: Int, freq: String) {
     def predict(p: Panel, timeCol: String, fh: Int): DataFrame = {
       require(freq == "1d", "calendar-exog model is daily")
-      val tail = p.df
-        .withColumn("__rn_desc", row_number().over(
-          Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
-        .filter(col("__rn_desc") <= lags)
-      val state0 = tail.groupBy(p.entityCols: _*).agg(
-        collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-        max(col(timeCol)).as("__cutoff"))
-        .withColumn("__state", sort_array(col("__s")).getField(p.value))
-        .filter(size(col("__state")) >= lags)
+      val state0 = Forecasters.tailState(p, timeCol, lags)
         .withColumn("__cd", expr("CAST(__cutoff AS LONG) div 86400"))
-        .drop("__s")
       // one lateral column per horizon: earlier horizons' predictions
       // roll into the state, the horizon's day-of-week picks its dummy
-      val unrolled = (1 to fh).foldLeft(state0) { (d, h) =>
+      val unrolled = Forecasters.unrollRecursive(state0, intercept, lagW, fh,
+        j => element_at(col("__state"), j)) { h =>
         import graft.functions.StableConst.{double => sd}
-        val stateRef = (j: Int) =>
-          if (j < h) col(s"__p${h - j}") else element_at(col("__state"), j - h + 1)
         val dw = pmod(col("__cd") + h + 3, lit(7))
-        val contrib = (1 to 6).foldLeft(when(lit(false), 0.0)) { (c, k) =>
+        Seq((1 to 6).foldLeft(when(lit(false), 0.0)) { (c, k) =>
           c.when(dw === k, sd(dowW(k - 1)))
-        }.otherwise(0.0)
-        val ph = (1 to lags).foldLeft(sd(intercept): Column)((acc, j) =>
-          acc + sd(lagW(j - 1)) * stateRef(j)) + contrib
-        d.withColumn(s"__p$h", ph)
+        }.otherwise(0.0))
       }
-      unrolled
-        .withColumn("__h", explode(sequence(lit(1), lit(fh))))
-        .withColumn(p.value,
-          element_at(array((1 to fh).map(h => col(s"__p$h")): _*), col("__h").cast("int")))
-        .withColumn(timeCol, Forecasters.futureTime(freq))
-        .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
+      Forecasters.horizonRows(unrolled, p, timeCol, fh, freq, Forecasters.unrolledPreds(fh))
     }
   }
 

@@ -103,16 +103,91 @@ object PrefixBacktest {
 
   /** Expanding-window backtest over the caller's shared positioned lag
     * frame (columns: entity…, timeCol, value, value__lag_1..≥lags,
-    * __rn, __cnt — [[AutoForecast.backtestLinearPrefix]]'s contract).
-    * `fit(df, featureCols, labelCol)` is any closed-form/CD linear fit
-    * returning (intercept, weights); it sees the TRANSFORMED slice.
-    * Returns the [[Conformal.backtest]] schema. */
+    * __rn, __cnt — `CrossValidation.withPosition` over
+    * `Preprocess.lagKeepAll`). `fit(df, featureCols, labelCol)` is any
+    * closed-form/CD linear fit returning (intercept, weights); it sees
+    * the TRANSFORMED slice. Each horizon is the closed-form affine
+    * map of [[Forecasters.affineHorizons]] in TRANSFORMED space,
+    * inverted per horizon. Returns the [[Conformal.backtest]] schema. */
   def backtest(p: Panel, timeCol: String, lags: Int,
                testSize: Int, nSplits: Int, stepSize: Int,
                sharedLag: DataFrame,
                transform: SliceTransform,
                fit: (DataFrame, Seq[String], String) => (Double, Array[Double]))
+      : DataFrame =
+    splits(p, timeCol, lags, testSize, nSplits, stepSize, sharedLag, transform, fit)(
+      identity, Nil, (state, _) => state) { (state, b0, w, txElem) =>
+      (state, Forecasters.affineHorizons(b0, w, testSize)
+        .map { case (ah, bh) => Forecasters.affineExpr(ah, bh, txElem) })
+    }
+
+  /** Prefix-shared expanding-window backtest for the AR + FOURIER
+    * member families (elite.py:104-164's *_fourier /
+    * *_scaled_fourier / *_detrend_linear_fourier) — the last
+    * per-split lag-rebuild family in the zoo after round 11.
+    *
+    * Why prefix-sharing extends to fourier: the fourier features are
+    * pure functions of the per-entity 0-based position — coef(rn) =
+    * ((rn−1) mod sp)/sp — and on a PREFIX slice the slice's positions
+    * EQUAL the shared frame's `__rn`, so the slice's design matrix is
+    * the shared lag frame filtered to `__rn ≤ cnt − cutoff` with the
+    * fourier columns added as position expressions. No member ever
+    * re-shuffles the panel into lags per split (the generic
+    * [[Conformal.backtest]] path ran a full
+    * [[FourierLinear.fitPredict]] — lagKeepAll Window + positioned
+    * checkpoint — per member × split).
+    *
+    * Arithmetic contract: the train features, the fit moments and the
+    * predict unroll ([[Forecasters.unrollRecursive]] with
+    * [[FourierLinear.fourierTerms]]) are [[FourierLinear.fitPredict]]'s
+    * EXACT expressions and fold order (b0, lag terms ascending, cos/sin
+    * pairs k-ascending; posH = ((n−1+h) mod sp)/sp with n the slice
+    * length = cnt − cutoff), with the affine transforms applied
+    * inline to label/lag/state values exactly as [[backtest]] does —
+    * so results match the materialize-then-fit pipeline path to the
+    * moment sums' sub-ULP partition-order drift, which the rd6 oracle
+    * round absorbs like every moment-based member. */
+  def backtestFourier(p: Panel, timeCol: String, lags: Int, sp: Int, k: Int,
+                      testSize: Int, nSplits: Int, stepSize: Int,
+                      sharedLag: DataFrame,
+                      transform: SliceTransform,
+                      fit: (DataFrame, Seq[String], String) => (Double, Array[Double]))
       : DataFrame = {
+    require(k < sp, s"fourier K must be < sp (got K=$k, sp=$sp)")
+    // train slice + fourier position columns (slice __rn == shared
+    // __rn on a prefix); the fourier features are position functions,
+    // NOT transformed — on the pipeline path they're computed from the
+    // transformed panel's positions, which equal the raw positions
+    val withF = (slice: DataFrame) => FourierLinear.withFourier(slice, k, sp)
+    // the slice length n = cnt − cutoff places each horizon's terms
+    val withN = (state: DataFrame, cutoff: Int) =>
+      state.withColumn("__nF", (col("__cnt") - lit(cutoff)).cast("long"))
+    splits(p, timeCol, lags, testSize, nSplits, stepSize, sharedLag, transform, fit)(
+      withF, FourierLinear.fourierNames(k), withN) { (state, b0, w, txElem) =>
+      val unrolled = Forecasters.unrollRecursive(state, b0, w.take(lags), testSize, txElem)(
+        h => FourierLinear.fourierTerms(w.drop(lags), k, sp, col("__nF"), h))
+      (unrolled, (1 to testSize).map(h => col(s"__p$h")))
+    }
+  }
+
+  /** The per-split scaffold both backtests share. Per split (run as
+    * concurrent Spark jobs): the slice's transform artifacts, the
+    * transformed train slice (`features` adds the caller's extra
+    * feature columns `extraFeats` to the raw slice first) and its fit,
+    * the raw tail state at the cutoff (carrying `__cnt`, then the
+    * caller's `stateCols(state, cutoff)`, then the artifacts joined),
+    * `predict(state, b0, weights, txElem)` → (frame,
+    * per-horizon transformed-space predictions over it), the inverse
+    * transform per horizon, and the actual rows joined on
+    * (entity, horizon). */
+  private def splits(p: Panel, timeCol: String, lags: Int,
+                     testSize: Int, nSplits: Int, stepSize: Int,
+                     sharedLag: DataFrame, transform: SliceTransform,
+                     fit: (DataFrame, Seq[String], String) => (Double, Array[Double]))
+                    (features: DataFrame => DataFrame, extraFeats: Seq[String],
+                     stateCols: (DataFrame, Int) => DataFrame)
+                    (predict: (DataFrame, Double, Array[Double], Int => Column)
+                      => (DataFrame, Seq[Column])): DataFrame = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -127,7 +202,7 @@ object PrefixBacktest {
       // fit over the slice's transformed reduction — same rows the
       // per-slice pipeline trained on (warmup rows excluded, residual
       // nulls na.dropped inside the fit)
-      val slice0 = sharedLag.filter(col("__rn") <= trainEnd && col("__rn") > lags)
+      val slice0 = features(sharedLag.filter(col("__rn") <= trainEnd && col("__rn") > lags))
       // the artifact frame is O(entities) × a few doubles — BROADCAST
       // it explicitly: at 1M entities (~40 MB) it exceeds the 10 MB
       // auto-broadcast threshold and the planner falls back to a
@@ -147,44 +222,20 @@ object PrefixBacktest {
             tx(col(featureCols(k - 1)), (col("__rn") - lit(1) - lit(k)).cast("double"))))
           (jd, (1 to lags).map(k => s"__tf_$k"), "__ty")
       }
-      val (mIntercept, mWeights) = fit(trainSlice, featsT, labelT)
+      val (b0, w) = fit(trainSlice, featsT ++ extraFeats, labelT)
       // per-entity RAW tail state at the cutoff (transform applied
-      // inline below — per-entity affine, so element j of the sorted
-      // state sits at 0-based position cnt − cutoff − j)
-      val tailRows = sharedLag
-        .filter(col("__rn") > trainEnd - lags && col("__rn") <= trainEnd)
-        .withColumn("__rn_desc", trainEnd - col("__rn") + 1)
-      val state0 = tailRows.groupBy(p.entityCols: _*).agg(
-        collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-        max(col("__cnt")).as("__cnt"))
-        .withColumn("__state", sort_array(col("__s")).getField(p.value))
-        .filter(size(col("__state")) >= lags)
+      // inline — per-entity affine, so element j of the sorted state
+      // sits at 0-based position cnt − cutoff − j)
+      val state0 = stateCols(Forecasters.prefixTailState(p, sharedLag, trainEnd, lags,
+        max(col("__cnt")).as("__cnt")), cutoff)
       val state = art.map(a => state0.join(broadcast(a), p.entity))
         .getOrElse(state0)
       def txElem(j: Int): Column =
         tx(element_at(col("__state"), j),
           (col("__cnt") - lit(cutoff) - lit(j)).cast("double"))
-      // closed-form per-horizon affine coefficients in TRANSFORMED
-      // space (as in Forecasters.predictRecursiveLinear /
-      // backtestLinearPrefix), inverted per horizon
-      def inv(c: Column, h: Int): Column = invExpr(transform)(c, h)
-      val weights = mWeights
-      var a = Array.tabulate(lags, lags)((r, c) => if (r == c) 1.0 else 0.0)
-      var cvec = new Array[Double](lags)
-      val horizons = (1 to testSize).map { _ =>
-        val ah = Array.tabulate(lags)(j => weights.zipWithIndex.map { case (w, r) => w * a(r)(j) }.sum)
-        val bh = mIntercept + weights.zipWithIndex.map { case (w, r) => w * cvec(r) }.sum
-        a = ah +: a.dropRight(1); cvec = bh +: cvec.dropRight(1)
-        (ah, bh)
-      }
-      // StableConst, not lit — see Forecasters.predictRecursiveLinear's
-      // r15 note (inlined fitted weights = fresh Janino class per fit)
-      val predCols = horizons.zipWithIndex.map { case ((ah, bh), h0) =>
-        import graft.functions.StableConst.{double => sd}
-        inv(ah.zipWithIndex.collect { case (w, j) if w != 0.0 => sd(w) * txElem(j + 1) }
-          .foldLeft(sd(bh): Column)(_ + _), h0 + 1)
-      }
-      val pred = state.withColumn("__h", explode(sequence(lit(1), lit(testSize))))
+      val (predFrame, preds) = predict(state, b0, w, txElem)
+      val predCols = preds.zipWithIndex.map { case (c, h0) => invExpr(transform)(c, h0 + 1) }
+      val pred = predFrame.withColumn("__h", explode(sequence(lit(1), lit(testSize))))
         .withColumn("__pred", element_at(array(predCols: _*), col("__h").cast("int")))
         .select((p.entityCols :+ col("__h") :+ col("__pred")): _*)
       val actual = sharedLag
@@ -193,123 +244,8 @@ object PrefixBacktest {
         .select((p.entityCols ++ Seq(col("__h"), col(timeCol), p.x.as("__actual"))): _*)
       actual.join(pred, p.entity :+ "__h", "inner").withColumn("split", lit(i))
     } }
-    val splits = Await.result(Future.sequence(splitFutures), Duration.Inf)
-    splits.reduce(_ unionByName _)
-      .select((p.entityCols ++ Seq(col(timeCol), col("split"),
-        col("__actual").as("actual"), col("__pred").as("pred"))): _*)
-  }
-
-  /** Prefix-shared expanding-window backtest for the AR + FOURIER
-    * member families (elite.py:104-164's *_fourier /
-    * *_scaled_fourier / *_detrend_linear_fourier) — the last
-    * per-split lag-rebuild family in the zoo after round 11.
-    *
-    * Why prefix-sharing extends to fourier: the fourier features are
-    * pure functions of the per-entity 0-based position — coef(rn) =
-    * ((rn−1) mod sp)/sp — and on a PREFIX slice the slice's positions
-    * EQUAL the shared frame's `__rn`, so the slice's design matrix is
-    * the shared lag frame filtered to `__rn ≤ cnt − cutoff` with the
-    * fourier columns added as position expressions. No member ever
-    * re-shuffles the panel into lags per split (the generic
-    * [[Conformal.backtest]] path ran a full
-    * [[FourierLinear.fitPredict]] — lagKeepAll Window + positioned
-    * checkpoint — per member × split).
-    *
-    * Arithmetic contract: the train features, the fit moments and the
-    * predict unroll replicate [[FourierLinear.fitPredict]]'s EXACT
-    * expressions and fold order (b0, lag terms ascending, cos/sin
-    * pairs k-ascending; posH = ((n−1+h) mod sp)/sp with n the slice
-    * length = cnt − cutoff), with the affine transforms applied
-    * inline to label/lag/state values exactly as [[backtest]] does —
-    * so results match the materialize-then-fit pipeline path to the
-    * moment sums' sub-ULP partition-order drift, which the rd6 oracle
-    * round absorbs like every moment-based member. */
-  def backtestFourier(p: Panel, timeCol: String, lags: Int, sp: Int, k: Int,
-                      testSize: Int, nSplits: Int, stepSize: Int,
-                      sharedLag: DataFrame,
-                      transform: SliceTransform,
-                      fit: (DataFrame, Seq[String], String) => (Double, Array[Double]))
-      : DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    require(k < sp, s"fourier K must be < sp (got K=$k, sp=$sp)")
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
-    val fNames = (1 to k).flatMap(j => Seq(s"__fc_$j", s"__fs_$j"))
-    val splitFutures = (0 until nSplits).map { i => Future {
-      val cutoff = testSize + (nSplits - 1 - i) * stepSize
-      val trainEnd = col("__cnt") - cutoff
-      val art = sliceArtifacts(p, sharedLag, transform, trainEnd)
-      def tx(c: Column, idx: Column): Column = txExpr(transform)(c, idx)
-      // train slice + fourier position columns (FourierLinear's coef
-      // expression verbatim — slice __rn == shared __rn on a prefix)
-      val coef = ((col("__rn") - 1) % sp).cast("double") / lit(sp.toDouble)
-      val slice0 = sharedLag.filter(col("__rn") <= trainEnd && col("__rn") > lags)
-      val withF = (1 to k).foldLeft(slice0) { (d, j) =>
-        d.withColumn(s"__fc_$j", cos(lit(2 * math.Pi * j) * coef))
-          .withColumn(s"__fs_$j", sin(lit(2 * math.Pi * j) * coef))
-      }
-      // the fourier features are position functions, NOT transformed —
-      // on the pipeline path they're computed from the transformed
-      // panel's positions, which equal the raw positions
-      val (trainSlice, featsT, labelT) = transform match {
-        case NoTransform => (withF, featureCols, p.value)
-        case _ =>
-          val j0 = withF.join(broadcast(art.get), p.entity)
-            .withColumn("__ty", tx(p.x, (col("__rn") - lit(1)).cast("double")))
-          val jd = (1 to lags).foldLeft(j0)((d, l) => d.withColumn(s"__tf_$l",
-            tx(col(featureCols(l - 1)), (col("__rn") - lit(1) - lit(l)).cast("double"))))
-          (jd, (1 to lags).map(l => s"__tf_$l"), "__ty")
-      }
-      val (b0, w) = fit(trainSlice, featsT ++ fNames, labelT)
-      val lagW = w.take(lags)
-      val fW = w.drop(lags)
-      // per-entity RAW tail state at the cutoff + slice length __n
-      val tailRows = sharedLag
-        .filter(col("__rn") > trainEnd - lags && col("__rn") <= trainEnd)
-        .withColumn("__rn_desc", trainEnd - col("__rn") + 1)
-      val state0 = tailRows.groupBy(p.entityCols: _*).agg(
-        collect_list(struct(col("__rn_desc"), p.x)).as("__s"),
-        max(col("__cnt")).as("__cnt"))
-        .withColumn("__state", sort_array(col("__s")).getField(p.value))
-        .filter(size(col("__state")) >= lags)
-        .withColumn("__nF", (col("__cnt") - lit(cutoff)).cast("long"))
-      // broadcast the bounded artifact frame (see backtest's comment)
-      val state = art.map(a => state0.join(broadcast(a), p.entity))
-        .getOrElse(state0)
-      def txElem(j: Int): Column =
-        tx(element_at(col("__state"), j),
-          (col("__cnt") - lit(cutoff) - lit(j)).cast("double"))
-      // FourierLinear.fitPredict's recursion unroll verbatim, with
-      // state elements transform-applied inline
-      // fitted coefficients through StableConst (r15, fresh-class note
-      // at Forecasters.predictRecursiveLinear); the 2πj factors are
-      // structural and stay literals
-      val unrolled = (1 to testSize).foldLeft(state) { (d, h) =>
-        import graft.functions.StableConst.{double => sd}
-        val stateRef = (j: Int) =>
-          if (j < h) col(s"__p${h - j}") else txElem(j - h + 1)
-        val posH = ((col("__nF") - 1 + h) % sp).cast("double") / lit(sp.toDouble)
-        val terms: Seq[Column] =
-          (1 to lags).map(j => sd(lagW(j - 1)) * stateRef(j)) ++
-            (1 to k).flatMap(j => Seq(
-              sd(fW(2 * (j - 1))) * cos(lit(2 * math.Pi * j) * posH),
-              sd(fW(2 * j - 1)) * sin(lit(2 * math.Pi * j) * posH)))
-        d.withColumn(s"__p$h", terms.foldLeft(sd(b0): Column)(_ + _))
-      }
-      val predCols = (1 to testSize).map(h => invExpr(transform)(col(s"__p$h"), h))
-      val pred = unrolled
-        .withColumn("__h", explode(sequence(lit(1), lit(testSize))))
-        .withColumn("__pred", element_at(array(predCols: _*), col("__h").cast("int")))
-        .select((p.entityCols :+ col("__h") :+ col("__pred")): _*)
-      val actual = sharedLag
-        .filter(col("__rn") > trainEnd && col("__rn") <= trainEnd + testSize)
-        .withColumn("__h", (col("__rn") - trainEnd).cast("int"))
-        .select((p.entityCols ++ Seq(col("__h"), col(timeCol), p.x.as("__actual"))): _*)
-      actual.join(pred, p.entity :+ "__h", "inner").withColumn("split", lit(i))
-    } }
-    val splits = Await.result(Future.sequence(splitFutures), Duration.Inf)
-    splits.reduce(_ unionByName _)
+    Await.result(Future.sequence(splitFutures), Duration.Inf)
+      .reduce(_ unionByName _)
       .select((p.entityCols ++ Seq(col(timeCol), col("split"),
         col("__actual").as("actual"), col("__pred").as("pred"))): _*)
   }

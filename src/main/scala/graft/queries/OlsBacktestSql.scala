@@ -15,8 +15,10 @@ object OlsBacktestSql {
 
   /** Recursive AR prediction for horizon h over solution columns
     * a_0..a_<lags> and tail columns t1..t<lags>: state(j) = p_{h-j}
-    * for j < h (earlier horizons), else t_{j-h+1}. Mirrors the
-    * foldLeft(bh)(+) order of predictRecursiveLinear. */
+    * for j < h (earlier horizons), else t_{j-h+1}. Folds from the
+    * intercept in ascending j, the order of
+    * graft.operators.Forecasters.affineExpr (predictRecursiveLinear
+    * and the prefix backtests). */
   private def predExpr(h: Int, lags: Int, drift: Boolean = true): String = {
     // drift=false (no-intercept fit): the Cholesky solution names
     // a_0..a_{lags-1} for f1..f<lags> and there is no intercept term
@@ -270,7 +272,9 @@ object OlsBacktestSql {
     * usual plus the fourier terms at the FUTURE position tn − 1 + h
     * (tn = train length, carried on the tail row). Strict left fold:
     * a_0, lag terms ascending, cos/sin pairs k-ascending — matching
-    * FourierLinear.fitPredict's foldLeft. */
+    * the fold of graft.operators.Forecasters.unrollRecursive over
+    * FourierLinear.fourierTerms (FourierLinear.fitPredict and
+    * PrefixBacktest.backtestFourier). */
   private def predExprFourier(h: Int, lags: Int, sp: Int, kTerms: Int): String = {
     val lagTerms = (1 to lags).map { j =>
       val s = if (j < h) s"p${h - j}" else s"t${j - h + 1}"

@@ -182,6 +182,64 @@ class ForecastSpec extends SparkSpec {
     assert(tbOut.select("entity").distinct().collect().map(_.getLong(0)).toSet == Set(0L))
   }
 
+  test("tail state per family: a short entity drops; a null or NaN among the newest lags values") {
+    import spark.implicits._
+    import graft.operators.{CensoredForecaster, GbtForecaster, KnnForecaster, StumpBoost}
+    val (lags, fh) = (4, 3)
+    val day = (t: Int) => new java.sql.Timestamp((86400L * 19000 + t * 86400L) * 1000)
+    def series(e: Long): Seq[Double] =
+      (0 until 40).map(t => 10.0 + 0.1 * e + 0.05 * t + 3.0 * math.sin((t + e) / 3.0))
+    // fits see two clean entities; predicts see them plus entity 1 (2
+    // rows < lags), 2 (newest value null) and 3 (newest value NaN)
+    def rows(e: Long, vs: Seq[Option[Double]]) =
+      vs.zipWithIndex.map { case (v, t) => (e, day(t), v, 1.0 + (t % 5) / 4.0) }
+    val clean = Seq(0L, 4L).flatMap(e => rows(e, series(e).map(Some(_))))
+    val odd = rows(1L, Seq(Some(5.0), Some(6.0))) ++
+      rows(2L, series(2L).map(Some(_)).updated(39, None)) ++
+      rows(3L, series(3L).map(Some(_)).updated(39, Some(Double.NaN)))
+    def mkPanel(rs: Seq[(Long, java.sql.Timestamp, Option[Double], Double)]) =
+      graft.core.Panel(rs.toDF("entity", "ts", "value", "x1"), Seq("entity"), Seq("ts"), "value")
+    val train = mkPanel(clean)
+    val test = mkPanel(clean ++ odd)
+    val xf = Seq(0L, 1L, 2L, 3L, 4L).flatMap(e =>
+      (0 until fh).map(h => (e, day(40 + h), 1.0))).toDF("entity", "ts", "x1")
+    // entity -> forecast values in time order
+    def byEntity(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Option[Double]]] =
+      df.orderBy("entity", "ts").collect().toSeq.groupBy(_.getLong(0)).map { case (e, rs) =>
+        e -> rs.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+      }
+    // the linear family keeps a state with a null or NaN element: every
+    // horizon of entity 2 is null and every horizon of entity 3 NaN
+    val linear = Seq(
+      "recursive" -> LinearForecaster.fit(train, lags, "1d").predict(test, "ts", fh),
+      "direct" -> LinearForecaster.fitDirect(train, lags, fh, "1d").predict(test, "ts", fh),
+      "exog" -> ExogLinear.fit(train, lags, "1d", Seq("x1")).predict(test, "ts", fh, xf),
+      "exog dow" -> ExogDowLinear.fit(train, lags, "1d", "ts").predict(test, "ts", fh))
+    linear.foreach { case (name, df) =>
+      val out = byEntity(df)
+      assert(out.keySet == Set(0L, 2L, 3L, 4L), name)
+      assert(out.values.forall(_.length == fh), name)
+      assert(out(2L).forall(_.isEmpty), s"$name: ${out(2L)}")
+      assert(out(3L).forall(_.exists(_.isNaN)), s"$name: ${out(3L)}")
+      assert(out(0L).forall(_.exists(v => !v.isNaN)), name)
+    }
+    // the executor-side rolls and the KNN query tails drop a state with
+    // a null element; a NaN element passes
+    val rolled = Seq(
+      "gbt" -> GbtForecaster.fit(train, lags, "1d", maxIter = 2, maxDepth = 2)
+        .predict(test, "ts", fh),
+      "stump" -> StumpBoost.fit(train, lags, "1d", rounds = 2, bins = 4).predict(test, "ts", fh),
+      "censored" -> CensoredForecaster.fit(train, lags, "1d").predict(test, "ts", fh))
+    rolled.foreach { case (name, df) =>
+      val out = byEntity(df)
+      assert(out.keySet == Set(0L, 3L, 4L), name)
+      assert(out.values.forall(_.length == fh), name)
+    }
+    assert(byEntity(rolled(2)._2)(3L).forall(_.exists(_.isNaN)), "censored NaN state")
+    val knn = byEntity(KnnForecaster.predictOneStepIvf(test, "ts", "1d", lags, k = 2, nCells = 2))
+    assert(knn.keySet == Set(0L, 3L, 4L) && knn.values.forall(_.length == 1), knn)
+  }
+
   test("snaive drops entities shorter than sp instead of cycling a fabricated period") {
     import spark.implicits._
     // entity 0: 10 points; entity 1: 4 points < sp=7

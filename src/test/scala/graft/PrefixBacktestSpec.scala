@@ -1,8 +1,9 @@
 package graft
 
 import graft.core.Panel
-import graft.operators.{Conformal, CrossValidation, ForecastPipeline,
-  LinearForecaster, Preprocess, PrefixBacktest}
+import graft.operators.{AutoForecast, Conformal, CrossValidation, ForecastPipeline,
+  Forecasters, FourierLinear, LinearForecaster, LinearForecasterModel, Preprocess,
+  PrefixBacktest}
 import org.apache.spark.sql.DataFrame
 
 /** PrefixBacktest's core claim: for the per-entity AFFINE transforms
@@ -16,6 +17,7 @@ import org.apache.spark.sql.DataFrame
 class PrefixBacktestSpec extends SparkSpec {
 
   private val (lags, testSize, nSplits, stepSize, sweeps) = (4, 5, 2, 5, 8)
+  private val (sp, kTerms) = (7, 2)
 
   private def mk(): Panel = {
     def s(seed: Int, n: Int, slope: Double) = {
@@ -101,5 +103,42 @@ class PrefixBacktestSpec extends SparkSpec {
       generic.filter(generic("entity") === 1 && generic("pred").isNotNull).count())
     assertSame(pfx.filter(pfx("pred").isNotNull),
       generic.filter(generic("pred").isNotNull))
+  }
+
+  private def fourierBt(p: Panel, t: PrefixBacktest.SliceTransform,
+                        alpha: Double, l1Ratio: Double): DataFrame =
+    PrefixBacktest.backtestFourier(p, "t", lags, sp, kTerms, testSize, nSplits,
+      stepSize, sharedLag(p), t, linFit(alpha, l1Ratio))
+
+  test("backtestFourier NoTransform matches the generic per-slice FourierLinear refit") {
+    val p = mk()
+    val generic = Conformal.backtest(p, "t", testSize, nSplits, stepSize,
+      (tr, h) => FourierLinear.fitPredict(tr, "t", "1i", lags, sp, kTerms, 0.1, h,
+        0.5, sweeps))
+    assertSame(fourierBt(p, PrefixBacktest.NoTransform, 0.1, 0.5), generic)
+  }
+
+  test("backtestFourier DetrendT matches the generic per-slice detrend + FourierLinear refit") {
+    val p = mk()
+    val generic = Conformal.backtest(p, "t", testSize, nSplits, stepSize,
+      (tr, h) => ForecastPipeline.fit(tr, "t", Seq(ForecastPipeline.detrendLinearStep),
+        pT => (tc, hh) => FourierLinear.fitPredict(pT, tc, "1i", lags, sp, kTerms,
+          0.0, hh, 0.0, sweeps)).predict("t", h))
+    assertSame(fourierBt(p, PrefixBacktest.DetrendT, 0.0, 0.0), generic)
+  }
+
+  test("backtestLinearPrefix (drift and no drift) matches the generic linear refit") {
+    val p = mk()
+    val featureCols = (1 to lags).map(l => s"value__lag_$l")
+    val drift = Conformal.backtest(p, "t", testSize, nSplits, stepSize,
+      (tr, h) => LinearForecaster.fit(tr, lags, "1i", 0.1).predict(tr, "t", h))
+    assertSame(AutoForecast.backtestLinearPrefix(p, "t", lags, testSize, nSplits,
+      stepSize, ridge = 0.1), drift)
+    val noDrift = Conformal.backtest(p, "t", testSize, nSplits, stepSize,
+      (tr, h) => LinearForecasterModel(0.0, graft.functions.Ols.fitNoDrift(
+        Forecasters.makeReduction(tr, lags), featureCols, tr.value, 0.1), lags, "1i")
+        .predict(tr, "t", h))
+    assertSame(AutoForecast.backtestLinearPrefix(p, "t", lags, testSize, nSplits,
+      stepSize, ridge = 0.1, drift = false), noDrift)
   }
 }

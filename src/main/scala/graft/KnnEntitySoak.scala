@@ -22,6 +22,21 @@ object KnnEntitySoak {
       val t0 = System.nanoTime(); val r = f
       println(f"[knnsoak] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
+    // times `f` and prints the peak JVM heap seen while it runs. Local
+    // mode shares one JVM between driver and executors, so the peak is
+    // the whole pipeline's working set, an upper bound on any driver
+    // share.
+    def peakHeap(l: String)(f: => Any): Unit = {
+      val rt = Runtime.getRuntime
+      @volatile var peak = 0L
+      @volatile var done = false
+      val sampler = new Thread(() => while (!done) {
+        peak = math.max(peak, rt.totalMemory - rt.freeMemory); Thread.sleep(200)
+      })
+      sampler.setDaemon(true); sampler.start()
+      try t(l)(f) finally done = true
+      println(f"[knnsoak] peak JVM heap ${peak / 1e9}%.2f GB (driver+executors share it in local mode)")
+    }
     graft.operators.KnnForecaster.maxExactEntities = Int.MaxValue
     val skipExact = args.contains("--ivf-only") || args.contains("--recursive-only") ||
       args.contains("--onestep-1m")
@@ -52,26 +67,17 @@ object KnnEntitySoak {
     }
     // the distributed recursive roll at 1M entities: the point is the
     // STRUCTURE — no entity-scale collect or broadcast anywhere in the
-    // per-step plan (states live in a checkpointed distributed frame;
+    // per-step plan (the states live in a persisted RDD keyed by cell;
     // only the nCells×lags centroid matrix crosses the driver), so
-    // heap stays flat in fh. Local mode shares one JVM between driver
-    // and executors, so the peak below is the whole pipeline's working
-    // set, an upper bound on any driver share.
+    // heap stays flat in fh
     if (args.contains("--recursive") || args.contains("--recursive-only")) {
       val e = 1000000; val len = 12; val fh = 3; val cells = 3162
       val p = mkPanel(e, len)
       p.df.cache().count()
-      val rt = Runtime.getRuntime
-      @volatile var peak = 0L
-      val sampler = new Thread(() => while (true) {
-        peak = math.max(peak, rt.totalMemory - rt.freeMemory); Thread.sleep(200)
-      })
-      sampler.setDaemon(true); sampler.start()
-      t(s"ivf recursive E=$e fh=$fh (rows=${e * len}, cells=$cells)") {
+      peakHeap(s"ivf recursive E=$e fh=$fh (rows=${e * len}, cells=$cells)") {
         graft.operators.KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags = 7,
           k = 5, fh = fh, nCells = cells).rdd.count()
       }
-      println(f"[knnsoak] peak JVM heap ${peak / 1e9}%.2f GB (driver+executors share it in local mode)")
       p.df.unpersist(blocking = true)
     }
     // one-step IVF at 1M entities (r14: predictOneStepIvf now delegates
@@ -81,17 +87,10 @@ object KnnEntitySoak {
       val e = 1000000; val len = 12; val cells = 3162
       val p = mkPanel(e, len)
       p.df.cache().count()
-      val rt = Runtime.getRuntime
-      @volatile var peak = 0L
-      val sampler = new Thread(() => while (true) {
-        peak = math.max(peak, rt.totalMemory - rt.freeMemory); Thread.sleep(200)
-      })
-      sampler.setDaemon(true); sampler.start()
-      t(s"ivf ONE-STEP E=$e (rows=${e * len}, cells=$cells)") {
+      peakHeap(s"ivf ONE-STEP E=$e (rows=${e * len}, cells=$cells)") {
         graft.operators.KnnForecaster.predictOneStepIvf(p, "t", "1i", lags = 7,
           k = 5, nCells = cells).rdd.count()
       }
-      println(f"[knnsoak] peak JVM heap ${peak / 1e9}%.2f GB (driver+executors share it in local mode)")
       p.df.unpersist(blocking = true)
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Panel
+import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, VectorAssembler}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
@@ -13,21 +14,23 @@ import org.apache.spark.storage.StorageLevel
 /** KNN forecaster — forecasting/knn.py:22 (sklearn KNeighborsRegressor
   * over the AR-reduction matrix), re-expressed for a cluster.
   *
-  * Every exact path runs ONE top-k kernel, [[topK]]: the queries
-  * (one lag state per entity) broadcast to every partition of the
-  * corpus, each partition keeps a bounded (distance, label) state per
-  * query, and the partition states merge distributed (`reduceByKey`)
-  * into each query's ascending k-smallest array. Exact neighbors,
-  * matching the reference's sklearn semantics.
+  * Every exact and IVF path runs ONE top-k scan, [[nearest]]: each
+  * partition of the corpus keeps a bounded (distance, label) state per
+  * query and emits each query's ascending k-smallest array. Exact
+  * neighbors, matching the reference's sklearn semantics.
   *
   *  - [[predictOneStep]] / [[predictOneStepMultiK]] /
-  *    [[predictRecursive]]: the corpus and the query states come from
-  *    one lag window over the panel ([[Lagged]]).
-  *  - [[predictOneStepIvf]]: the same kernel with the corpus rows
-  *    grouped by their nearest centroid cell.
-  *  - [[predictOneStepLsh]] / [[predictRecursiveIvf]]: bucketed
-  *    random-projection LSH and the distributed IVF roll, for entity
-  *    counts whose query side must not reach the driver.
+  *    [[predictRecursive]]: [[topK]] — the queries (one lag state per
+  *    entity) ride to every partition, and the partition states merge
+  *    distributed (`reduceByKey`). The corpus and the query states come
+  *    from one lag window over the panel ([[Lagged]]).
+  *  - [[predictOneStepIvf]]: [[topK]] with the corpus rows grouped by
+  *    their nearest centroid cell.
+  *  - [[predictRecursiveIvf]]: the distributed IVF roll, for entity
+  *    counts whose query side must not reach the driver — each query
+  *    meets its whole cell in one partition, so nothing merges.
+  *  - [[predictOneStepLsh]]: bucketed random-projection LSH, ranked by
+  *    a window over MLlib's `approxSimilarityJoin` pairs.
   */
 object KnnForecaster {
 
@@ -238,6 +241,29 @@ object KnnForecaster {
     * ascending, interleaved [d0, l0, d1, l1, …] — fewer than k when its
     * group has fewer rows, no entry when it has none.
     *
+    * Each partition runs [[nearest]] over its blocks, and a
+    * `reduceByKey` merge ([[mergeTopK]]) keeps the k smallest per qid
+    * executor-side, so the driver receives O(queries × k) doubles, not
+    * O(partitions × queries × k). One job. */
+  private[operators] def topK(corpus: RDD[Corpus], qRows: Array[(Long, Int, Array[Double])],
+                              lags: Int, k: Int): java.util.HashMap[Long, Array[Double]] = {
+    val merged = corpus.mapPartitions { it =>
+      val qs = qRows
+      val near = nearest(it, qs, lags, k)
+      qs.indices.iterator.filter(near(_) != null).map(qi => (qs(qi)._1, near(qi)))
+    }.reduceByKey(mergeTopK(_, _, k)).collect()
+    val out = new java.util.HashMap[Long, Array[Double]]()
+    merged.foreach { case (qid, a) => out.put(qid, a) }
+    out
+  }
+
+  /** One partition's share of the top-k: per index of `qRows` (qid,
+    * group, state[lags]), the k smallest (distance, label) pairs among
+    * the rows of `blocks` in its group, ascending and interleaved as
+    * [[topK]] returns them, or null when the partition holds none.
+    * [[topK]] and the distributed IVF roll ([[predictRecursiveIvf]])
+    * run it in every task.
+    *
     * Distance is the squared L2 folded over ascending lags from 0.0.
     * Order is the total order `java.lang.Double.compare` on distance,
     * then label (NaN greatest, −0.0 below 0.0): the pairs it ranks
@@ -246,70 +272,63 @@ object KnnForecaster {
     * or an infinite lag met by an infinite state) ranks last; an IEEE
     * `<` test would admit no row once a NaN holds the k-th place.
     *
-    * Each partition scans its rows in runs of at most [[Tile]] rows of
-    * one group, query-outer ([[scanRun]]): the query vector and its
-    * k-th threshold stay register/L1-hot across the run (r14: −25%
-    * process-CPU on fc_elite_knn against a per-row boxed heap). The
-    * query states allocate lazily, so a partition that holds one
-    * group's rows materializes only that group's. Each partition emits
-    * one ascending array per resident query, and a `reduceByKey` merge
-    * ([[mergeTopK]]) keeps the k smallest per qid executor-side, so the
-    * driver receives O(queries × k) doubles, not O(partitions ×
-    * queries × k). One job. */
-  private[operators] def topK(corpus: RDD[Corpus], qRows: Array[(Long, Int, Array[Double])],
-                              lags: Int, k: Int): java.util.HashMap[Long, Array[Double]] = {
-    val merged = corpus.mapPartitions { it =>
-      val qs = qRows
-      val byGrp: scala.collection.Map[Int, Array[Int]] =
-        qs.indices.toArray.groupBy(i => qs(i)._2)
-      val empty = Array.empty[Int]
-      val nq = qs.length
-      val dA = new Array[Array[Double]](nq)
-      val lA = new Array[Array[Double]](nq)
-      val cnt = new Array[Int](nq)
-      val maxI = new Array[Int](nq)
-      it.foreach { b =>
-        var s = 0
-        while (s < b.n) {
-          val g = if (b.groups == null) 0 else b.groups(s)
-          var e = s + 1
-          while (e < b.n && e - s < Tile && (b.groups == null || b.groups(e) == g)) e += 1
-          val grpQs = byGrp.getOrElse(g, empty)
-          var gi = 0
-          while (gi < grpQs.length) {
-            val qi = grpQs(gi)
-            if (dA(qi) == null) { dA(qi) = new Array[Double](k); lA(qi) = new Array[Double](k) }
-            val packed = scanRun(b.feats, b.labels, s, e, lags, k, qs(qi)._3,
-              dA(qi), lA(qi), cnt(qi), maxI(qi))
-            cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
-            gi += 1
-          }
-          s = e
+    * The rows are scanned in runs of at most [[Tile]] rows of one group,
+    * query-outer ([[scanRun]]): the query vector and its k-th threshold
+    * stay register/L1-hot across the run (r14: −25% process-CPU on
+    * fc_elite_knn against a per-row boxed heap). The query states
+    * allocate lazily, so a partition that holds one group's rows
+    * materializes only that group's. */
+  private def nearest(blocks: Iterator[Corpus], qRows: Array[(Long, Int, Array[Double])],
+                      lags: Int, k: Int): Array[Array[Double]] = {
+    val byGrp: scala.collection.Map[Int, Array[Int]] =
+      qRows.indices.toArray.groupBy(i => qRows(i)._2)
+    val empty = Array.empty[Int]
+    val nq = qRows.length
+    val dA = new Array[Array[Double]](nq)
+    val lA = new Array[Array[Double]](nq)
+    val cnt = new Array[Int](nq)
+    val maxI = new Array[Int](nq)
+    blocks.foreach { b =>
+      var s = 0
+      while (s < b.n) {
+        val g = if (b.groups == null) 0 else b.groups(s)
+        var e = s + 1
+        while (e < b.n && e - s < Tile && (b.groups == null || b.groups(e) == g)) e += 1
+        val grpQs = byGrp.getOrElse(g, empty)
+        var gi = 0
+        while (gi < grpQs.length) {
+          val qi = grpQs(gi)
+          if (dA(qi) == null) { dA(qi) = new Array[Double](k); lA(qi) = new Array[Double](k) }
+          val packed = scanRun(b.feats, b.labels, s, e, lags, k, qRows(qi)._3,
+            dA(qi), lA(qi), cnt(qi), maxI(qi))
+          cnt(qi) = (packed >>> 32).toInt; maxI(qi) = packed.toInt
+          gi += 1
         }
+        s = e
       }
-      (0 until nq).iterator.filter(dA(_) != null).map { qi =>
+    }
+    Array.tabulate(nq) { qi =>
+      if (dA(qi) == null) null
+      else {
         val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi)
         val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
           Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
         val packed = new Array[Double](2 * c)
         var o = 0
         while (o < c) { packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1 }
-        (qs(qi)._1, packed)
+        packed
       }
-    }.reduceByKey(mergeTopK(_, _, k)).collect()
-    val out = new java.util.HashMap[Long, Array[Double]]()
-    merged.foreach { case (qid, a) => out.put(qid, a) }
-    out
+    }
   }
 
-  /** Rows per query-outer run of [[topK]]: 256 rows of 7 lags are 14 KB
+  /** Rows per query-outer run of [[nearest]]: 256 rows of 7 lags are 14 KB
     * of features, inside L1. */
   private val Tile = 256
 
   /** Mean of the labels of the first min(k, size) pairs of a [[topK]]
     * array, summed ascending from 0.0 — what `avg` gives over the rows
     * a `row_number() ≤ k` cut by (distance, label) keeps. */
-  private[operators] def meanLabel(a: Array[Double], k: Int): Double = {
+  private[graft] def meanLabel(a: Array[Double], k: Int): Double = {
     val c = math.min(k, a.length / 2)
     var s = 0.0
     var j = 0
@@ -318,7 +337,7 @@ object KnnForecaster {
   }
 
   /** Index of the (distance, label) maximum of the k state entries
-    * under [[topK]]'s total order. Ties keep the lowest index; tied
+    * under [[nearest]]'s total order. Ties keep the lowest index; tied
     * entries are identical pairs, so which one a later admission
     * overwrites cannot change the surviving multiset. */
   @inline private def topKMaxIdx(d0: Array[Double], l0: Array[Double], k: Int): Int = {
@@ -334,8 +353,8 @@ object KnnForecaster {
   /** Scan rows [s, e) of a row-major corpus for ONE query's bounded
     * top-k state (d0/l0 arrays of size k, `cnt0` entries so far,
     * `maxI0` the max index once full). A row enters a full state when
-    * it ranks strictly below the current k-th entry in [[topK]]'s total
-    * order. Returns the updated (cnt << 32) | maxI. */
+    * it ranks strictly below the current k-th entry in [[nearest]]'s
+    * total order. Returns the updated (cnt << 32) | maxI. */
   @inline private def scanRun(feats: Array[Double], labels: Array[Double],
                               s: Int, e: Int, lags: Int, k: Int,
                               q: Array[Double],
@@ -371,7 +390,7 @@ object KnnForecaster {
     * the k smallest — associative and commutative as a multiset
     * operation (ties are identical pairs), so the reduceByKey combine
     * order cannot change the result. */
-  private def mergeTopK(a: Array[Double], b: Array[Double], k: Int): Array[Double] = {
+  private[graft] def mergeTopK(a: Array[Double], b: Array[Double], k: Int): Array[Double] = {
     val na = a.length / 2; val nb = b.length / 2
     val n = math.min(k, na + nb)
     val out = new Array[Double](2 * n)
@@ -391,8 +410,8 @@ object KnnForecaster {
   /** IVF-cell variant — the Spark-first analog of the reference's
     * Lance IVF ANN regressor (forecasting/lance.py:40-101): assign
     * every training row and every query tail to its nearest of
-    * `nCells` sampled centroid rows (squared L2, ties → lowest cell),
-    * then search ONLY the query's cell.
+    * `nCells` sampled centroid rows (squared L2, ties → lowest cell,
+    * [[ivfIndex]]), then search ONLY the query's cell.
     *
     * TWO physical strategies behind one semantics (r14 — the r13
     * verdict's perf-weak item asked for a loud cap + redirect on the
@@ -407,19 +426,14 @@ object KnnForecaster {
     *    broadcast centroid matrix — the exact path's [[topK]] with the
     *    cell as the group. The bench/oracle path.
     *  - past the cap: delegates to [[predictRecursiveIvf]] at fh = 1
-    *    — the fully distributed (qid, state) roll where only the
-    *    nCells × lags centroid sample ever touches the driver
-    *    (soak-verified at 1M entities, SCALE.md r14).
+    *    — the fully distributed roll where only the nCells × lags
+    *    centroid sample ever touches the driver (soak-verified at 1M
+    *    entities, SCALE.md r14).
     *
-    * Both strategies are bit-identical wherever no distance is NaN
-    * (same portable md5-tag centroid sample, ascending-lag left-fold,
-    * strict-< ascending argmin with ties → lowest cell, (distance,
-    * label) top-k order, ascending mean) — the fc_ann DuckDB oracle
-    * replicates either. The distributed roll's k-buffers compare with
-    * IEEE `<`, so a NaN distance does not rank last there. */
+    * Both strategies run [[nearest]] on the same cells, so they are
+    * bit-identical — the fc_ann DuckDB oracle replicates either. */
   def predictOneStepIvf(p: Panel, timeCol: String, freq: String, lags: Int, k: Int,
                         nCells: Int, entityCountHint: Long = -1L): DataFrame = {
-    val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
     // cap+1-limited collect: complete (length ≤ cap) proves every
     // tail is on the driver; length = cap+1 proves the panel is over
     // the cap without ever collecting it (clamp before the +1 — a
@@ -439,43 +453,23 @@ object KnnForecaster {
     val collected = queries.limit(cap + 1).collect()
     if (collected.length > cap)
       return predictRecursiveIvf(p, timeCol, freq, lags, k, fh = 1, nCells = nCells)
-    // reduction WITH per-entity position (the deterministic row tag the
-    // portable centroid sample orders by)
-    val red = CrossValidation
-      .withPosition(p.copy(df = Preprocess.lagKeepAll(p, 1 to lags)))
-      .filter(col("__rn") > lags)
-      // complete rows only, like predictOneStep's reduction: a null
-      // value/lag would NPE row.getDouble in the centroid collect and
-      // the partition scan
-      .na.drop((1 to lags).map(l => s"${p.value}__lag_$l") :+ p.value)
-    val tag = md5(concat_ws("_",
-      (p.entityCols :+ col("__rn")).map(_.cast("string")): _*).cast("binary"))
-    val centMat = red
-      .select((p.entityCols :+ col("__rn") :+ tag.as("__tag")) ++
-        featureCols.map(c => col(c).cast("double")): _*)
-      .orderBy((col("__tag") +: (p.entityCols :+ col("__rn"))): _*)
-      .limit(nCells)
-      .collect()
-      .map(r => Array.tabulate(lags)(j => r.getDouble(p.entity.length + 2 + j)))
     // guard parity with the over-cap twin predictRecursiveIvf (ADVICE
     // r14): zero complete training rows must fail loud on BOTH sides
     // of the maxExactEntities boundary, not silently return an empty
     // frame here
-    require(centMat.nonEmpty,
-      s"knn one-step IVF has no complete training rows (lags=$lags)")
+    val (corpusRows, centMat) = ivfIndex(p, lags, nCells, lit(true), "one-step IVF")
     // within-cell search is the exact path's kernel with the cell as
     // the group (corpus rows serve only their own cell's queries) —
     // materializing the cell join + a global window sort instead was
     // 25× slower under cell skew (one popular centroid makes the join
     // quadratic-ish, while the scan stays one pass)
-    val corpusRows = GraftSqlBridge.cacheLayoutRows(red.select(
-      (featureCols.map(c => col(c).cast("double")) :+ col(p.value).cast("double")): _*))
     val nEntity = p.entity.length
     val qRows = collected.zipWithIndex.map { case (r, i) =>
       val feats = Array.tabulate(lags)(j => r.getDouble(nEntity + 1 + j))
       (i.toLong, nearestCell(feats, centMat), feats)
     }
-    val near = topK(corpus(corpusRows, lags, cells = centMat), qRows, lags, k)
+    val near = topK(corpus(GraftSqlBridge.cacheLayoutRows(corpusRows), lags, cells = centMat),
+      qRows, lags, k)
     forecastFrame(p, timeCol, freq, queries.schema.fields.take(nEntity + 1).toIndexedSeq,
       collected.map(_.toSeq.take(nEntity + 1)).toIndexedSeq,
       collected.indices.collect {
@@ -483,48 +477,20 @@ object KnnForecaster {
       })
   }
 
-  /** RECURSIVE multi-horizon KNN over an IVF cell index — the scale
-    * path for the elite zoo's knn members past [[maxExactEntities]]
-    * (the exact path's O(rows × entities × lags) per pass is the KNN
-    * family's scale-killer; measured 373 s of the 543 s full-zoo wall
-    * at 10k entities, EliteSoak). Same centroid construction as
-    * [[predictOneStepIvf]] (portable md5-tag sample, strict-< ascending
-    * argmin); the corpus's cell assignment is computed ONCE into a
-    * `__cell` column, hash-partitioned by cell and cached, so the fh
-    * per-step probes reuse that partitioning — the corpus never moves
-    * again.
-    *
-    * FULLY DISTRIBUTED state roll (unlike [[predictRecursive]], whose
-    * driver-mediated roll is what [[maxExactEntities]] caps): the
-    * per-entity lag state lives in a distributed (qid, state[lags])
-    * frame. Each horizon step (a) re-assigns every state to its
-    * nearest cell (broadcast centroid matrix — the only state that
-    * ever touches the driver is the nCells × lags centroid sample),
-    * (b) joins states to the cell-partitioned corpus (only the
-    * entity-sized state side shuffles), (c) reduces the streamed
-    * (corpus-row × query) pairs in-partition through bounded
-    * [[graft.functions.TopKAvgAgg]] k-buffers — pairs never hit a
-    * shuffle, only O(partitions × entities × k) candidate rows do —
-    * and (d) shifts the state with the step's prediction. Per-step frames are
-    * eagerly localCheckpoint-ed (entity-sized) and the previous step's
-    * state is released, so driver AND executor memory stay flat in fh.
-    * Semantics are bit-identical to the exact roll restricted to the
-    * query's cell: same ascending-lag distance fold, same
-    * (distance, label) top-k order, same ascending-order mean.
-    * Reference: forecasting/knn.py:22 + base recursion _ar.py:216-270,
-    * IVF analog forecasting/lance.py:40-101. */
-  def predictRecursiveIvf(p: Panel, timeCol: String, freq: String, lags: Int,
-                          k: Int, fh: Int, nCells: Int,
-                          corpusFraction: Double = 1.0): DataFrame = {
-    val spark = p.df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
+  /** The IVF index's inputs. Corpus: the complete reduction rows (no
+    * null or NaN in lag 1…L or the value — a null would NPE the
+    * centroid collect and the partition scan) that pass the gate
+    * `keep`, as (lag 1…L, label) doubles. Centroids: the first `nCells`
+    * corpus rows by an md5 tag of (entity, position) — a portable
+    * sample the fc_ann DuckDB oracle replicates. Fails, naming `what`,
+    * when no corpus row exists. Jobs: the centroid collect. */
+  private def ivfIndex(p: Panel, lags: Int, nCells: Int, keep: Column,
+                       what: String): (DataFrame, Array[Array[Double]]) = {
     val featureCols = (1 to lags).map(l => s"${p.value}__lag_$l")
-    // the fraction gate precedes the centroid sample, preserving the
-    // sampled-from-corpus invariant (queried cells stay non-empty)
     val red = CrossValidation
       .withPosition(p.copy(df = Preprocess.lagKeepAll(p, 1 to lags)))
       .filter(col("__rn") > lags)
-      .filter(corpusKeep(p.entityCols, corpusFraction))
+      .filter(keep)
       .na.drop(featureCols :+ p.value)
     val tag = md5(concat_ws("_",
       (p.entityCols :+ col("__rn")).map(_.cast("string")): _*).cast("binary"))
@@ -536,130 +502,107 @@ object KnnForecaster {
       .limit(nCells)
       .collect()
       .map(r => Array.tabulate(lags)(j => r.getDouble(nEntity + 2 + j)))
-    require(centMat.nonEmpty,
-      s"knn recursive IVF has no complete training rows (lags=$lags)")
-    val bcCents = spark.sparkContext.broadcast(centMat)
-    // corpus with its cell materialized once (fh passes reuse it);
-    // sampled-from-corpus centroids guarantee every queried cell is
-    // non-empty (a query assigns to cell c only under the same
-    // strict-< argmin that sends c's own centroid row there)
-    val corpusSchema = StructType(
-      (1 to lags).map(l => StructField(s"__f$l", DoubleType)) ++
-        Seq(StructField("__label", DoubleType), StructField("__cell", IntegerType)))
-    val corpusRdd = red.select((featureCols.map(c => col(c).cast("double")) :+
-        col(p.value).cast("double")): _*).rdd.mapPartitions { it =>
-      val cents = bcCents.value
-      it.map { row =>
-        val feats = Array.tabulate(cents(0).length)(row.getDouble)
-        Row.fromSeq(feats.toIndexedSeq :+ row.getDouble(feats.length) :+
-          nearestCell(feats, cents))
-      }
+    require(centMat.nonEmpty, s"knn $what has no complete training rows (lags=$lags)")
+    (red.select((featureCols.map(c => col(c).cast("double")) :+
+      col(p.value).cast("double")): _*), centMat)
+  }
+
+  /** RECURSIVE multi-horizon KNN over an IVF cell index — the scale
+    * path for the elite zoo's knn members past [[maxExactEntities]]
+    * (the exact path's O(rows × entities × lags) per pass is the KNN
+    * family's scale-killer; measured 373 s of the 543 s full-zoo wall
+    * at 10k entities, EliteSoak). Same cells as [[predictOneStepIvf]]
+    * ([[ivfIndex]]).
+    *
+    * FULLY DISTRIBUTED state roll (unlike [[predictRecursive]], whose
+    * driver-mediated roll is what [[maxExactEntities]] caps): only the
+    * nCells × lags centroid matrix reaches the driver. The corpus rows
+    * are keyed by their cell once, hash-partitioned by it and sorted by
+    * it within each partition, and persisted as [[Corpus]] blocks whose
+    * groups are the cells: a cell is one run of one partition. The
+    * per-entity (meta, state, predictions) records live in an RDD. Each
+    * horizon step keys them by their new cell under the same
+    * partitioner (only this entity-sized side shuffles), zips them with
+    * the blocks and runs [[nearest]]; a query's whole cell is in its
+    * partition, so its top-k is complete there. The same task takes
+    * the step's [[meanLabel]] and shifts the state, and fails if a
+    * query's cell holds no corpus row — sampled-from-corpus centroids
+    * rule that out (a state lands in cell c only under the same
+    * strict-< argmin that sends c's own centroid row there). Each step
+    * is persisted and the previous one released once it has
+    * materialized, so memory stays flat in fh; the output is built
+    * eagerly and every intermediate released. The same kernel, cells
+    * and mean as [[predictOneStepIvf]]: at fh = 1 the two agree bit
+    * for bit, and at nCells = 1 the roll is [[predictRecursive]].
+    * Jobs: the centroid collect, the corpus and query-tail shuffles,
+    * one per step and the output.
+    * Reference: forecasting/knn.py:22 + base recursion _ar.py:216-270,
+    * IVF analog forecasting/lance.py:40-101. */
+  def predictRecursiveIvf(p: Panel, timeCol: String, freq: String, lags: Int,
+                          k: Int, fh: Int, nCells: Int,
+                          corpusFraction: Double = 1.0): DataFrame = {
+    // the fraction gate precedes the centroid sample, preserving the
+    // sampled-from-corpus invariant (queried cells stay non-empty)
+    val (corpusRows, cents) = ivfIndex(p, lags, nCells,
+      corpusKeep(p.entityCols, corpusFraction), "recursive IVF")
+    val tails = queryTails(p, timeCol, lags).select((p.entityCols :+ col("__cutoff") :+
+      slice(col("__state"), 1, lags).cast("array<double>")): _*)
+    val meta = tails.schema.fields.toIndexedSeq.dropRight(1)
+    // the (entity…, cutoff) values of a state record's row
+    val metaOf = (m: InternalRow) => meta.indices.map(j => m.get(j, meta(j).dataType))
+    var states = GraftSqlBridge.cacheLayoutRows(tails).map { r =>
+      val m = r.copy()
+      (m, m.getArray(meta.length).toDoubleArray(), Array.emptyDoubleArray)
     }
-    val corpus = spark.createDataFrame(corpusRdd, corpusSchema)
-      .repartition(nPart, col("__cell")).cache()
+    val byCell = new HashPartitioner(p.df.sparkSession.sessionState.conf.numShufflePartitions)
+    val blocks = GraftSqlBridge.cacheLayoutRows(corpusRows).map { r =>
+      val row = Array.tabulate(lags + 1)(r.getDouble)
+      (nearestCell(row, cents), row)
+    }.repartitionAndSortWithinPartitions(byCell)
+      .mapPartitions(it => Iterator.single(cellBlock(it, lags)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      corpus.count() // materialize the index before the sequential passes
-      // distributed query base: one row per entity with its lag state
-      // as an array column. monotonically_increasing_id is the query
-      // key — unique (not dense), stable once checkpointed. This frame
-      // is pinned for the method's lifetime (the final meta join reads
-      // it); it is entity-sized, never collected.
-      val base = queryTails(p, timeCol, lags)
-        .select((p.entityCols :+ col("__cutoff") :+
-          slice(col("__state"), 1, lags).as("__state")): _*)
-        .withColumn("__qid", monotonically_increasing_id())
-        .localCheckpoint(true)
-      val assignCellUdf = udf((s: Seq[Double]) =>
-        nearestCell(s.toArray, bcCents.value))
-      // ascending-lag left fold of squared diffs — the exact path's
-      // d += t*t loop, as a codegen'd column expression
-      val dExpr = (1 to lags).map { l =>
-        val t = col(s"__f$l") - element_at(col("__state"), l); t * t
-      }.reduce(_ + _)
-      // bounded-pair maintenance shared with the aggregate form; used
-      // imperatively here because a groupBy-udaf over the pair stream
-      // trips ObjectHashAggregate's sort-based fallback past 128 keys
-      // per task — which SORTS the corpus-sized pair stream (measured:
-      // OOM at 1M entities × 5M corpus rows under an 8g heap)
-      val topk = new graft.functions.TopKAvgAgg(k)
-      val partialSchema = StructType(Seq(
-        StructField("__qid", LongType), StructField("__dist", DoubleType),
-        StructField("__label", DoubleType)))
-      var states = base.select(col("__qid"), col("__state"))
-      val spFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val stepPreds = (1 to fh).map { h =>
-        val q = states.withColumn("__cell", assignCellUdf(col("__state")))
-        // states side shuffles by __cell (entity-sized); corpus side
-        // reuses its cached partitioning. shuffle_hash keeps Spark
-        // from broadcasting an entity-scale build side through the
-        // driver — the exact anti-pattern this path exists to avoid.
-        val joined = corpus.join(q.hint("shuffle_hash"), Seq("__cell"))
-          .select(col("__qid"), dExpr.as("__d"), col("__label"))
-        // per-partition bounded k-buffers per query (memory ∝ queries
-        // in the partition, never pairs), then a tiny rank-merge:
-        // ≤ partitions-touched × queries × k rows. A qid's
-        // pairs normally live in one partition (cell co-location), but
-        // the merge stays correct even if AQE ever splits a skewed one.
-        val partialRdd = joined.rdd.mapPartitions { it =>
-          val acc = new java.util.HashMap[java.lang.Long, Array[Double]]()
-          it.foreach { row =>
-            val qid = java.lang.Long.valueOf(row.getLong(0))
-            val b = acc.get(qid)
-            acc.put(qid, topk.reduce(
-              if (b == null) Array.emptyDoubleArray else b,
-              (row.getDouble(1), row.getDouble(2))))
+      (1 to fh).foreach { h =>
+        val prev = states
+        states = blocks.zipPartitions(
+          prev.map(s => (nearestCell(s._2, cents), s)).partitionBy(byCell)) { (bs, it) =>
+          val qs = it.toArray
+          val near = nearest(bs, qs.map { case (c, (_, s, _)) => (0L, c, s) }, lags, k)
+          qs.indices.iterator.map { i =>
+            val (c, (m, s, preds)) = qs(i)
+            require(near(i) != null, s"knn recursive IVF step $h: cell $c holds no corpus " +
+              s"row for entity ${metaOf(m).dropRight(1).mkString(", ")}")
+            val pr = meanLabel(near(i), k)
+            (m, pr +: s.dropRight(1), preds :+ pr)
           }
-          import scala.jdk.CollectionConverters._
-          acc.entrySet().iterator().asScala.flatMap { e =>
-            val b = e.getValue
-            (0 until b.length / 2).iterator.map(j =>
-              Row(e.getKey.longValue(), b(2 * j), b(2 * j + 1)))
-          }
-        }
-        val sp = spark.createDataFrame(partialRdd, partialSchema)
-          .withColumn("__nn", row_number().over(
-            Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
-          .filter(col("__nn") <= k)
-          .groupBy("__qid").agg(avg(col("__label")).as("__p"))
-          .localCheckpoint(true)
-        spFrames += sp
-        // loud invariant (ADVICE r9): every entity must produce a
-        // step prediction, or the inner join below would silently
-        // drop it from ALL remaining horizons. Guaranteed today by
-        // sampled-from-corpus centroids (queried cells are non-empty);
-        // if a future centroid-sampling change breaks that, fail here
-        // instead of shrinking the forecast panel. Both frames are
-        // entity-sized and already materialized — the counts are cheap.
-        val (nStates, nPreds) = (states.count(), sp.count())
-        require(nPreds == nStates,
-          s"knn recursive roll step $h: ${nStates - nPreds} of $nStates " +
-            "entities produced no prediction (empty candidate cell?)")
-        val next = states.join(sp, "__qid")
-          .select(col("__qid"),
-            concat(array(col("__p")), slice(col("__state"), 1, lags - 1)).as("__state"))
-          .localCheckpoint(true)
-        // the previous step's state frame is no longer referenced by
-        // anything unmaterialized — release its checkpoint blocks now
-        // (base stays pinned; h=1's states is a mere projection of it)
-        if (h > 1) EliteDeep.releaseCheckpoint(states)
-        states = next
-        sp.select(col("__qid"), lit(h).as("__h"), col("__p").as(p.value))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        try states.count() finally prev.unpersist(blocking = false)
       }
-      if (fh > 0) EliteDeep.releaseCheckpoint(states)
-      val predsAll = stepPreds.reduce(_ unionAll _)
-      val out = base.select((p.entityCols :+ col("__cutoff") :+ col("__qid")): _*)
-        .join(predsAll, "__qid")
+      GraftSqlBridge.rowsFrame(p.df.sparkSession,
+        states.flatMap { case (m, _, preds) =>
+          preds.indices.map(i => InternalRow.fromSeq(metaOf(m) :+ (i + 1) :+ preds(i)))
+        },
+        StructType(meta :+ StructField("__h", IntegerType) :+ StructField(p.value, DoubleType)))
         .withColumn(timeCol, Forecasters.futureTime(freq))
         .select((p.entityCols ++ Seq(col(timeCol), col(p.value))): _*)
-        // eager result (entities × fh rows) so every intermediate
-        // checkpoint can be RELEASED here instead of pinning
-        // 2·fh+1 entity-sized block sets until the ContextCleaner
-        // happens to GC them (EliteDeep's r7 lesson; the elite zoo
-        // calls this once per knn member per CV split past the cap)
         .localCheckpoint(true)
-      (base +: spFrames.toSeq).foreach(EliteDeep.releaseCheckpoint)
-      out
-    } finally corpus.unpersist(blocking = false)
+    } finally {
+      states.unpersist(blocking = false)
+      blocks.unpersist(blocking = false)
+    }
+  }
+
+  /** One partition's (cell, lag 1…L + label) rows as a [[Corpus]] whose
+    * groups are the cells, in row order. */
+  private def cellBlock(rows: Iterator[(Int, Array[Double])], lags: Int): Corpus = {
+    val feats = Array.newBuilder[Double]
+    val labels = Array.newBuilder[Double]
+    val groups = Array.newBuilder[Int]
+    rows.foreach { case (c, r) =>
+      feats.addAll(r, 0, lags); labels += r(lags); groups += c
+    }
+    val g = groups.result()
+    new Corpus(feats.result(), labels.result(), g, g.length, Array.empty)
   }
 
   /** Strict-< ascending argmin of squared L2 between the centroids and

@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition,
+  UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
@@ -46,10 +47,15 @@ object GraftSqlBridge {
     * reports an unknown partitioning, so a hash of its rows costs a
     * shuffle and a second job. */
   def onePartitionFrame(session: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
-    val s = session.asInstanceOf[classic.SparkSession]
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-    val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
-    classic.Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema),
-      s.sparkContext.parallelize(internal, 1), SinglePartition)(s))
+    rowsFrame(session, session.sparkContext.parallelize(
+      rows.map(r => toCatalyst(r).asInstanceOf[InternalRow]), 1), schema, SinglePartition)
+  }
+
+  /** Catalyst rows of `schema` as a frame, without a conversion pass. */
+  def rowsFrame(session: SparkSession, rows: RDD[InternalRow], schema: StructType,
+                partitioning: Partitioning = UnknownPartitioning(0)): DataFrame = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema), rows, partitioning)(s))
   }
 }

@@ -3,27 +3,29 @@ package graft
 import graft.core.Panel
 import graft.operators.{AutoForecast, CrossValidation, Forecasters, KnnForecaster, Preprocess}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.util.Random
 
-/** The one exact top-k kernel ([[KnnForecaster.topK]]) behind
-  * `predictOneStep`, `predictOneStepMultiK`, `predictRecursive` and
-  * `predictOneStepIvf`, against the path it replaced (kept below as the
-  * reference: a second window for the query tails, per-partition
-  * bounded heaps over the reduction's external rows, then a
+/** The one top-k kernel ([[KnnForecaster.topK]] and the per-partition
+  * scan it shares with the distributed IVF roll) behind
+  * `predictOneStep`, `predictOneStepMultiK`, `predictRecursive`,
+  * `predictOneStepIvf` and `predictRecursiveIvf`, against the paths it
+  * replaced (kept below as the reference: a second window for the query
+  * tails, per-partition bounded heaps or k-buffers, then a
   * `row_number` rank merge, `avg` and a join back to the query meta),
   * bit for bit — on seeded panels with equal-distance ties between
   * different labels, −0.0, null and NaN values, entities shorter than
   * `lags`, k larger than the corpus, and 1, 3 and 8 partitions.
   *
-  * A NaN in a query state makes every distance NaN. The old heaps
-  * compared distances with IEEE `<`, so they stopped admitting rows
-  * once full and kept whichever rows each partition met first; the
-  * kernel ranks NaN last in a total order. For those queries the
-  * reference is the rank over every (query, corpus row) pair, which
+  * A NaN in a query state makes every distance NaN. The old heaps and
+  * k-buffers compared distances with IEEE `<`, so they stopped
+  * admitting rows once full and kept whichever rows each partition met
+  * first; the kernel ranks NaN last in a total order. For those queries
+  * the reference is the rank over every (query, corpus row) pair, which
   * does not depend on the partitioning. */
 class KnnKernelSpec extends SparkSpec {
 
@@ -71,9 +73,8 @@ class KnnKernelSpec extends SparkSpec {
   private object Old {
     def featureCols: Seq[String] = (1 to lags).map(l => s"value__lag_$l")
 
-    /** The former `KnnForecaster.queryTails`, collected: (entity,
-      * cutoff, state). */
-    def tails(p: Panel): Array[(Int, Int, Array[Double])] = {
+    /** The former `KnnForecaster.queryTails`: (entity, cutoff, state). */
+    def tailFrame(p: Panel): DataFrame = {
       val tail = p.df
         .withColumn("__rn_desc", row_number().over(
           Window.partitionBy(p.entityCols: _*).orderBy(p.orderCols.map(_.desc): _*)))
@@ -83,9 +84,10 @@ class KnnKernelSpec extends SparkSpec {
         .withColumn("__state", sort_array(col("__s")).getField(p.value))
         .filter(size(col("__state")) >= lags && !exists(col("__state"), x => x.isNull))
         .select(col("entity"), col("__cutoff"), col("__state"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     }
+
+    def tails(p: Panel): Array[(Int, Int, Array[Double])] =
+      tailFrame(p).collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
 
     /** The former reduction: lag frame, `na.drop`, (lags…, label). */
     def reduction(p: Panel): DataFrame =
@@ -156,8 +158,9 @@ class KnnKernelSpec extends SparkSpec {
       } finally red.unpersist(blocking = false)
     }
 
-    /** The former `predictOneStepIvf` under the entity cap. */
-    def ivf(p: Panel, k: Int, nCells: Int): Seq[(Int, Int, Long)] = {
+    /** The former IVF index: the complete reduction rows as (lag 1…L,
+      * label) and the md5-tag centroid sample. */
+    def ivfIndex(p: Panel, nCells: Int): (DataFrame, Array[Array[Double]]) = {
       val red = CrossValidation
         .withPosition(p.copy(df = Preprocess.lagKeepAll(p, 1 to lags)))
         .filter(col("__rn") > lags)
@@ -170,14 +173,78 @@ class KnnKernelSpec extends SparkSpec {
         .orderBy((col("__tag") +: (p.entityCols :+ col("__rn"))): _*)
         .limit(nCells).collect()
         .map(r => Array.tabulate(lags)(j => r.getDouble(3 + j)))
+      (red.select((featureCols.map(c => col(c).cast("double")) :+
+        col(p.value).cast("double")): _*), cents)
+    }
+
+    /** The former `predictOneStepIvf` under the entity cap. */
+    def ivf(p: Panel, k: Int, nCells: Int): Seq[(Int, Int, Long)] = {
+      val (corpus, cents) = ivfIndex(p, nCells)
       val ts = tails(p)
-      val m = topKAvg(spark, red.select((featureCols.map(c => col(c).cast("double")) :+
-          col(p.value).cast("double")): _*),
+      val m = topKAvg(spark, corpus,
         ts.zipWithIndex.map { case (q, i) =>
           (i.toLong, KnnForecaster.nearestCell(q._3, cents), q._3) }, k, cents)
       ts.indices.collect { case i if m.contains(i.toLong) =>
         (ts(i)._1, ts(i)._2 + 1, java.lang.Double.doubleToRawLongBits(m(i.toLong)))
       }.sorted
+    }
+
+    /** The former distributed `predictRecursiveIvf`: the corpus keyed by
+      * cell in a cached frame hash-partitioned by it; per step each
+      * state's cell by a udf, a `shuffle_hash` join of the states to the
+      * corpus, per-partition [[KnnKernelSpec.kBuffer]]s per query id, a `row_number`
+      * rank merge, `avg`, and a join back to shift the states; at the
+      * end a join of every step to the query meta. */
+    def recursiveIvf(p: Panel, k: Int, fh: Int, nCells: Int): Seq[(Int, Int, Long)] = {
+      val (rows, cents) = ivfIndex(p, nCells)
+      val n = lags
+      val corpus = spark.createDataFrame(rows.rdd.map { r =>
+          val f = Array.tabulate(n)(r.getDouble)
+          Row.fromSeq(f.toSeq :+ r.getDouble(n) :+ KnnForecaster.nearestCell(f, cents))
+        }, StructType((1 to lags).map(l => StructField(s"__f$l", DoubleType)) ++
+          Seq(StructField("__label", DoubleType), StructField("__cell", IntegerType))))
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("__cell")).cache()
+      try {
+        val base = tailFrame(p)
+          .withColumn("__state", slice(col("__state"), 1, lags))
+          .withColumn("__qid", monotonically_increasing_id())
+          .localCheckpoint(true)
+        val cell = udf((s: Seq[Double]) => KnnForecaster.nearestCell(s.toArray, cents))
+        val dist = (1 to lags).map { l =>
+          val t = col(s"__f$l") - element_at(col("__state"), l); t * t
+        }.reduce(_ + _)
+        var states = base.select(col("__qid"), col("__state"))
+        val steps = (1 to fh).map { h =>
+          val pairs = corpus.join(states.withColumn("__cell", cell(col("__state")))
+              .hint("shuffle_hash"), Seq("__cell"))
+            .select(col("__qid"), dist.as("__d"), col("__label"))
+          val partial = pairs.rdd.mapPartitions { it =>
+            val acc = scala.collection.mutable.LinkedHashMap.empty[Long, Array[Double]]
+            it.foreach { r =>
+              acc(r.getLong(0)) = KnnKernelSpec.kBuffer(acc.getOrElse(r.getLong(0), Array.emptyDoubleArray),
+                r.getDouble(1), r.getDouble(2), k)
+            }
+            acc.iterator.flatMap { case (q, b) =>
+              (0 until b.length / 2).map(j => Row(q, b(2 * j), b(2 * j + 1)))
+            }
+          }
+          val sp = spark.createDataFrame(partial, StructType(Seq(StructField("__qid", LongType),
+              StructField("__dist", DoubleType), StructField("__label", DoubleType))))
+            .withColumn("__nn", row_number().over(
+              Window.partitionBy("__qid").orderBy(col("__dist"), col("__label"))))
+            .filter(col("__nn") <= k)
+            .groupBy("__qid").agg(avg(col("__label")).as("__p"))
+            .localCheckpoint(true)
+          states = states.join(sp, "__qid")
+            .select(col("__qid"),
+              concat(array(col("__p")), slice(col("__state"), 1, lags - 1)).as("__state"))
+            .localCheckpoint(true)
+          sp.select(col("__qid"), lit(h).as("__h"), col("__p"))
+        }
+        base.join(steps.reduce(_ unionAll _), "__qid")
+          .collect().map(r => (r.getInt(1), r.getInt(2) + r.getInt(4),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(5)))).toSeq.sorted
+      } finally corpus.unpersist(blocking = false)
     }
   }
 
@@ -266,6 +333,57 @@ class KnnKernelSpec extends SparkSpec {
     }
   }
 
+  test("predictRecursiveIvf equals the old distributed roll bit for bit") {
+    for (seed <- Seq(13L, 14L); parts <- Seq(1, 3, 8); nCells <- Seq(1, 4)) atPartitions(parts) {
+      val p = seeded(seed, nEnt = 29, holes = true)
+      val got = bits(KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags, k = 3, fh = 3,
+        nCells = nCells))
+      assert(got.nonEmpty)
+      assert(got == Old.recursiveIvf(p, k = 3, fh = 3, nCells = nCells),
+        s"seed $seed, $parts partitions, $nCells cells")
+    }
+  }
+
+  test("with NaN query states the IVF roll ranks NaN last like the exact paths") {
+    val p = seeded(15L, nEnt = 23, holes = true, nanTails = true)
+    assert(Old.tails(p).count(_._3.exists(_.isNaN)) > 0, "the panel must hold NaN query states")
+    Seq(1, 3, 8).foreach { parts =>
+      atPartitions(parts) {
+        assert(bits(KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags, k = 3, fh = 3,
+          nCells = 1)) == bits(KnnForecaster.predictRecursive(p, "t", "1i", lags, k = 3, fh = 3)),
+          s"nCells 1, $parts partitions")
+        assert(bits(KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags, k = 3, fh = 1,
+          nCells = 4)) == bits(KnnForecaster.predictOneStepIvf(p, "t", "1i", lags, k = 3,
+          nCells = 4)), s"fh 1, $parts partitions")
+      }
+    }
+  }
+
+  test("mergeTopK keeps the k smallest by (distance, label) whatever the split, " +
+    "and meanLabel sums them ascending") {
+    def packed(xs: Seq[(Double, Double)]): Array[Double] =
+      xs.sortBy(identity)(Ordering.Tuple2(Ordering.Double.TotalOrdering,
+        Ordering.Double.TotalOrdering)).flatMap { case (d, l) => Seq(d, l) }.toArray
+    def rawBits(a: Array[Double]): Seq[Long] = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val xs = Seq((5.0, 50.0), (1.0, 10.0), (Double.NaN, 0.0), (1.0, 3.0), (4.0, 40.0),
+      (2.0, 20.0), (1.0, -0.0), (3.0, 30.0))
+    val k = 3
+    // k smallest, distance ties broken by label (−0.0 below 3.0), NaN last
+    val whole = packed(xs).take(2 * k)
+    assert(rawBits(whole) == rawBits(Array(1.0, -0.0, 1.0, 3.0, 1.0, 10.0)))
+    for (order <- Seq(xs, xs.reverse); cut <- 0 to xs.length) {
+      val (a, b) = order.splitAt(cut)
+      assert(rawBits(KnnForecaster.mergeTopK(packed(a), packed(b), k)) == rawBits(whole),
+        s"split at $cut")
+    }
+    // fewer than k pairs average what exists
+    assert(KnnForecaster.meanLabel(packed(Seq((2.0, 8.0), (1.0, 4.0))), 5) == 6.0)
+    // the sum runs in ascending (distance, label) order from 0.0: any
+    // other order of these labels rounds to 0.0
+    assert(KnnForecaster.meanLabel(packed(Seq((1.0, 1e16), (2.0, -1e16), (3.0, 1.0))), 3) ==
+      1.0 / 3)
+  }
+
   test("predictOneStep runs at most 5 jobs, its output action included") {
     val p = seeded(11L, nEnt = 23, holes = true)
     KnnForecaster.predictOneStep(p, "t", "1i", lags, 3).collect()
@@ -274,12 +392,33 @@ class KnnKernelSpec extends SparkSpec {
     assert(jobs <= 5, s"$jobs jobs")
   }
 
+  test("predictRecursiveIvf runs at most fh + 6 jobs, its output action included") {
+    val p = seeded(16L, nEnt = 23, holes = true)
+    val fh = 3
+    def roll() = KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags, k = 3, fh = fh,
+      nCells = 4).collect()
+    roll()
+    val (jobs, rows) = jobsOf(roll())
+    assert(rows.nonEmpty)
+    assert(jobs <= fh + 6, s"$jobs jobs")
+  }
+
   test("predictRecursive and autoKnn leave nothing cached, also when they throw") {
     val p = seeded(12L, nEnt = 17, holes = true)
     noLeftovers(KnnForecaster.predictRecursive(p, "t", "1i", lags, k = 3, fh = 3).collect())
     val e = intercept[IllegalArgumentException](noLeftovers(
       KnnForecaster.predictRecursive(panel(Seq(1.0, 2.0)), "t", "1i", lags, k = 3, fh = 2)))
     assert(e.getMessage.contains("no complete training rows"), e.getMessage)
+    // the IVF roll: only the returned frame's own checkpoint remains
+    noLeftovers {
+      val out = KnnForecaster.predictRecursiveIvf(p, "t", "1i", lags, k = 3, fh = 3, nCells = 4)
+      assert(out.collect().nonEmpty)
+      out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.foreach(_.unpersist(false))
+    }
+    val ivf = intercept[IllegalArgumentException](noLeftovers(KnnForecaster.predictRecursiveIvf(
+      panel(Seq(1.0, 2.0)), "t", "1i", lags, k = 3, fh = 2, nCells = 4)))
+    assert(ivf.getMessage.contains("knn recursive IVF has no complete training rows"),
+      ivf.getMessage)
     val signal = (0 until 40).map(t => Seq(1.0, 5.0, 9.0, 5.0)(t % 4))
     noLeftovers(AutoForecast.autoKnn(panel(signal, signal.map(_ + 1)), "t", "1i", lags = 4,
       kGrid = Seq(1, 3), testSize = 2, nSplits = 2, stepSize = 2))
@@ -292,5 +431,22 @@ class KnnKernelSpec extends SparkSpec {
         panel(signal, signal.map(_ + 1)), "t", "1i", lags = 4,
         kGrid = Seq(1, 3), testSize = 2, nSplits = 2, stepSize = 2)))
     } finally KnnForecaster.maxExactEntities = saved
+  }
+}
+
+object KnnKernelSpec {
+  /** The former `TopKAvgAgg.reduce`: a sorted interleaved buffer of at
+    * most k (distance, label) pairs; a pair enters a full buffer when
+    * it is below the k-th under IEEE `<` on (distance, label). */
+  def kBuffer(b: Array[Double], d: Double, l: Double, k: Int): Array[Double] = {
+    def lt(d1: Double, l1: Double, d2: Double, l2: Double) = d1 < d2 || (d1 == d2 && l1 < l2)
+    def insert(b: Array[Double]): Array[Double] = {
+      var i = 0
+      while (i < b.length / 2 && !lt(d, l, b(2 * i), b(2 * i + 1))) i += 1
+      (b.take(2 * i) :+ d :+ l) ++ b.drop(2 * i)
+    }
+    if (b.length / 2 < k) insert(b)
+    else if (lt(d, l, b(2 * k - 2), b(2 * k - 1))) insert(b.take(2 * (k - 1)))
+    else b
   }
 }

@@ -249,8 +249,7 @@ object KnnForecaster {
                               lags: Int, k: Int): java.util.HashMap[Long, Array[Double]] = {
     val merged = corpus.mapPartitions { it =>
       val qs = qRows
-      val near = nearest(it, qs, lags, k)
-      qs.indices.iterator.filter(near(_) != null).map(qi => (qs(qi)._1, near(qi)))
+      nearest(it, qs, lags, k).map { case (qi, a) => (qs(qi)._1, a) }
     }.reduceByKey(mergeTopK(_, _, k)).collect()
     val out = new java.util.HashMap[Long, Array[Double]]()
     merged.foreach { case (qid, a) => out.put(qid, a) }
@@ -258,9 +257,10 @@ object KnnForecaster {
   }
 
   /** One partition's share of the top-k: per index of `qRows` (qid,
-    * group, state[lags]), the k smallest (distance, label) pairs among
-    * the rows of `blocks` in its group, ascending and interleaved as
-    * [[topK]] returns them, or null when the partition holds none.
+    * group, state[lags]), in ascending index order, the k smallest
+    * (distance, label) pairs among the rows of `blocks` in its group,
+    * ascending and interleaved as [[topK]] returns them; no entry when
+    * the partition holds none.
     * [[topK]] and the distributed IVF roll ([[predictRecursiveIvf]])
     * run it in every task.
     *
@@ -279,7 +279,7 @@ object KnnForecaster {
     * allocate lazily, so a partition that holds one group's rows
     * materializes only that group's. */
   private def nearest(blocks: Iterator[Corpus], qRows: Array[(Long, Int, Array[Double])],
-                      lags: Int, k: Int): Array[Array[Double]] = {
+                      lags: Int, k: Int): Iterator[(Int, Array[Double])] = {
     val byGrp: scala.collection.Map[Int, Array[Int]] =
       qRows.indices.toArray.groupBy(i => qRows(i)._2)
     val empty = Array.empty[Int]
@@ -307,17 +307,14 @@ object KnnForecaster {
         s = e
       }
     }
-    Array.tabulate(nq) { qi =>
-      if (dA(qi) == null) null
-      else {
-        val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi)
-        val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
-        val packed = new Array[Double](2 * c)
-        var o = 0
-        while (o < c) { packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1 }
-        packed
-      }
+    (0 until nq).iterator.filter(dA(_) != null).map { qi =>
+      val c = cnt(qi); val d0 = dA(qi); val l0 = lA(qi)
+      val idx = Array.range(0, c).sortBy(j => (d0(j), l0(j)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+      val packed = new Array[Double](2 * c)
+      var o = 0
+      while (o < c) { packed(2 * o) = d0(idx(o)); packed(2 * o + 1) = l0(idx(o)); o += 1 }
+      (qi, packed)
     }
   }
 
@@ -555,11 +552,11 @@ object KnnForecaster {
       (m, m.getArray(meta.length).toDoubleArray(), Array.emptyDoubleArray)
     }
     val byCell = new HashPartitioner(p.df.sparkSession.sessionState.conf.numShufflePartitions)
-    val blocks = GraftSqlBridge.cacheLayoutRows(corpusRows).map { r =>
+    val blocks = corpus(GraftSqlBridge.cacheLayoutRows(corpusRows).map { r =>
       val row = Array.tabulate(lags + 1)(r.getDouble)
       (nearestCell(row, cents), row)
     }.repartitionAndSortWithinPartitions(byCell)
-      .mapPartitions(it => Iterator.single(cellBlock(it, lags)))
+      .map { case (c, row) => InternalRow.fromSeq(row.toSeq :+ c) }, lags, group = lags + 1)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       (1 to fh).foreach { h =>
@@ -567,12 +564,12 @@ object KnnForecaster {
         states = blocks.zipPartitions(
           prev.map(s => (nearestCell(s._2, cents), s)).partitionBy(byCell)) { (bs, it) =>
           val qs = it.toArray
-          val near = nearest(bs, qs.map { case (c, (_, s, _)) => (0L, c, s) }, lags, k)
+          val near = nearest(bs, qs.map { case (c, (_, s, _)) => (0L, c, s) }, lags, k).buffered
           qs.indices.iterator.map { i =>
             val (c, (m, s, preds)) = qs(i)
-            require(near(i) != null, s"knn recursive IVF step $h: cell $c holds no corpus " +
-              s"row for entity ${metaOf(m).dropRight(1).mkString(", ")}")
-            val pr = meanLabel(near(i), k)
+            require(near.hasNext && near.head._1 == i, s"knn recursive IVF step $h: cell $c " +
+              s"holds no corpus row for entity ${metaOf(m).dropRight(1).mkString(", ")}")
+            val pr = meanLabel(near.next()._2, k)
             (m, pr +: s.dropRight(1), preds :+ pr)
           }
         }.persist(StorageLevel.MEMORY_AND_DISK)
@@ -590,19 +587,6 @@ object KnnForecaster {
       states.unpersist(blocking = false)
       blocks.unpersist(blocking = false)
     }
-  }
-
-  /** One partition's (cell, lag 1…L + label) rows as a [[Corpus]] whose
-    * groups are the cells, in row order. */
-  private def cellBlock(rows: Iterator[(Int, Array[Double])], lags: Int): Corpus = {
-    val feats = Array.newBuilder[Double]
-    val labels = Array.newBuilder[Double]
-    val groups = Array.newBuilder[Int]
-    rows.foreach { case (c, r) =>
-      feats.addAll(r, 0, lags); labels += r(lags); groups += c
-    }
-    val g = groups.result()
-    new Corpus(feats.result(), labels.result(), g, g.length, Array.empty)
   }
 
   /** Strict-< ascending argmin of squared L2 between the centroids and

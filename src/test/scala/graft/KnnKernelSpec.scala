@@ -359,31 +359,6 @@ class KnnKernelSpec extends SparkSpec {
     }
   }
 
-  test("mergeTopK keeps the k smallest by (distance, label) whatever the split, " +
-    "and meanLabel sums them ascending") {
-    def packed(xs: Seq[(Double, Double)]): Array[Double] =
-      xs.sortBy(identity)(Ordering.Tuple2(Ordering.Double.TotalOrdering,
-        Ordering.Double.TotalOrdering)).flatMap { case (d, l) => Seq(d, l) }.toArray
-    def rawBits(a: Array[Double]): Seq[Long] = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
-    val xs = Seq((5.0, 50.0), (1.0, 10.0), (Double.NaN, 0.0), (1.0, 3.0), (4.0, 40.0),
-      (2.0, 20.0), (1.0, -0.0), (3.0, 30.0))
-    val k = 3
-    // k smallest, distance ties broken by label (−0.0 below 3.0), NaN last
-    val whole = packed(xs).take(2 * k)
-    assert(rawBits(whole) == rawBits(Array(1.0, -0.0, 1.0, 3.0, 1.0, 10.0)))
-    for (order <- Seq(xs, xs.reverse); cut <- 0 to xs.length) {
-      val (a, b) = order.splitAt(cut)
-      assert(rawBits(KnnForecaster.mergeTopK(packed(a), packed(b), k)) == rawBits(whole),
-        s"split at $cut")
-    }
-    // fewer than k pairs average what exists
-    assert(KnnForecaster.meanLabel(packed(Seq((2.0, 8.0), (1.0, 4.0))), 5) == 6.0)
-    // the sum runs in ascending (distance, label) order from 0.0: any
-    // other order of these labels rounds to 0.0
-    assert(KnnForecaster.meanLabel(packed(Seq((1.0, 1e16), (2.0, -1e16), (3.0, 1.0))), 3) ==
-      1.0 / 3)
-  }
-
   test("predictOneStep runs at most 5 jobs, its output action included") {
     val p = seeded(11L, nEnt = 23, holes = true)
     KnnForecaster.predictOneStep(p, "t", "1i", lags, 3).collect()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
   * every heavy query family's generated-class shapes on tiny frames so
   * rep-1 of a timed query measures the engine, not Janino/C2 compile.
   * Generated-source shapes depend on the structural knobs (lag counts,
-  * bins, topK — the stacker pivot width is topK+1), NOT the fitted
+  * topK — the stacker pivot width is topK+1), NOT the fitted
   * values (StableConst erases those), so a 384-row panel at the EXACT
   * registry configs warms the very classes the sf-scale run then pulls
   * from the enlarged codegen cache. r12 verdict #7: cold fc_elite_stack
@@ -141,15 +141,12 @@ object BenchWarmup {
       graft.operators.StumpBoost.fit(tinyPanel, lags = 3, freq = "1d",
         rounds = 2, bins = 4).predict(tinyPanel, "ts", fh = 1).count()
     }
-    // ...and the deterministic depth-2 TreeBoost at the EXACT configs
-    // fc_gbt / fc_auto_gbt / fc_gbt_stump run: its generated sources
-    // are shape-invariant (StableConst carries every fitted constant
-    // through the references array), so these 64-rows-per-entity fits
-    // compile the very classes the sf-scale fits then pull from the
-    // (enlarged) codegen cache — moving ~9 s of Janino cold-compile
-    // out of the timed queries. The panel mirrors the events table's
-    // schema (same columns, same order cols) so the reduction/predict
-    // scaffolds warm too.
+    // ...and the boosted-tree forecasters' reduction and recursive
+    // predict at the configs fc_gbt and fc_gbt_stump run, on a panel
+    // with the events table's schema (same columns, same order cols):
+    // their rounds are block folds and compile nothing, but the lag
+    // reduction and the predict projections compile per schema and lag
+    // count
     block("treeboost-family") {
       import org.apache.spark.sql.functions._
       val edf = spark.range(512).select(
@@ -162,39 +159,8 @@ object BenchWarmup {
       val ep = graft.core.Panel(edf, Seq("user_id"), Seq("ts", "event_id"), "value")
       graft.operators.TreeBoost.fit(ep, lags = 7, freq = "1d",
         rounds = 5, bins = 8, eta = 0.3).predict(ep, "ts", fh = 3).count()
-      // fc_gbt_stump's exact config (lags=3, rounds=5, bins=8)
       graft.operators.StumpBoost.fit(ep, lags = 3, freq = "1d",
         rounds = 5, bins = 8, eta = 0.3).predict(ep, "ts", fh = 3).count()
-      graft.operators.AutoForecast.autoTreeBoost(ep, "ts", "1d",
-        lagGrid = Seq(3, 7), rounds = 3, bins = 4, eta = 0.3, nSplits = 2)
-        ._3.predict(ep, "ts", fh = 3).count()
-      // the adaptive search's candidate shapes — the pass-A/B aggregate
-      // classes have 2·lags·(bins−1)+2 and 4·lags·(bins−1) expressions,
-      // so the generated source depends on (lags, rounds, BINS);
-      // StableConst only erases the fitted values (thresholds/leaves),
-      // not the candidate count. One tiny fit per distinct triple the
-      // CFO walk can reach warms every candidate — plus the log-link
-      // objectives' exp residual / exp-recursion classes
-      // (fc_gbt_poisson / fc_gbt_gamma configs)
-      // the registry's CFO walk (ns=gbt, seed=42, 3 evaluations): warm
-      // exactly its REACHABLE configs' (lags, rounds, bins) shapes —
-      // the full widened lattice is 80 distinct triples, far too many
-      // to fit one-by-one, and the walk can only ever visit these
-      locally {
-        val (cfgs, _) = graft.operators.AutoForecast.cfoReachable(
-          "gbt", 42L, 3, graft.operators.AutoForecast.dimsGbt)
-        cfgs.map(graft.operators.AutoForecast.decodeGbt)
-          .map { case (l, r, b, _) => (l, r, b) }.distinct
-          .foreach { case (l, r, b) =>
-            graft.operators.TreeBoost.fit(ep, lags = l, freq = "1d",
-              rounds = r, bins = b, eta = 0.3).predict(ep, "ts", fh = 1).count()
-          }
-      }
-      Seq("poisson", "gamma").foreach { obj =>
-        graft.operators.TreeBoost.fit(ep, lags = 7, freq = "1d",
-          rounds = 3, bins = 4, eta = 0.3, objective = obj)
-          .predict(ep, "ts", fh = 3).count()
-      }
     }
     // ...and the JDK image codec machinery (ImageIO plugin discovery +
     // per-format reader/writer init costs ~4 s on first use — measured

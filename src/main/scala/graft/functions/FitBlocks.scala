@@ -6,10 +6,13 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
+import scala.reflect.ClassTag
+
 /** A fit's training columns as one primitive block per partition, and
   * the reduction that iterative fits ([[graft.operators.StumpBoost]],
-  * [[Logistic]]) and the multi-model closed-form fits ([[Ols.fitSets]],
-  * the censored forecaster) run over them, pass by pass.
+  * [[graft.operators.TreeBoost]], [[Logistic]]) and the multi-model
+  * closed-form fits ([[Ols.fitSets]], the censored forecaster) run over
+  * them, pass by pass.
   *
   * A pass folds each partition's rows — and, under a coalesce, its
   * blocks in sequence — into one partial array from 0.0, then merges
@@ -97,6 +100,14 @@ object FitBlocks {
   def persist(df: DataFrame, cols: Seq[String]): Persisted =
     new Persisted(blocks(df, cols, cols).persist(StorageLevel.MEMORY_AND_DISK), null, false)
 
+  /** The partition count an iterative fit folds `n` rows in: about
+    * 100k rows per partition, at least 1 and at most `numPartitions`. A
+    * pass over a few small partitions is mostly scheduling, while a big
+    * set still fans out to thousands of tasks. The count fixes the fold
+    * order of every coalesced sum, so it must not change. */
+  def coalesceParts(numPartitions: Int, n: Long): Int =
+    math.max(1L, math.min(numPartitions.toLong, n / 100000L)).toInt
+
   /** Bytes of block doubles a persisted set may bring to the driver:
     * each partition of the materializing pass returns its blocks when
     * they fit in `driverCap / numPartitions`. One constant, not a conf;
@@ -128,15 +139,21 @@ object FitBlocks {
     /** One pass: the partials of every partition, in partition-index
       * order (the first pass is a job; see the class doc for the rest). */
     def partials(nSums: Int, nCounts: Int)(fold: Fold): Array[Partial] =
-      if (local != null) local.map(bs => foldPartition(bs.iterator, nSums, nCounts, fold))
-      else if (materialized) FitBlocks.partials(rdd, nSums, nCounts)(fold)
+      gather(bs => wire(foldPartition(bs, nSums, nCounts, fold))).map(unwire)
+
+    /** One pass of any per-partition state: `run` over each partition's
+      * blocks in order, the results in partition-index order. A result
+      * that crosses a job is Java-serialized, so `run` returns its
+      * doubles in a form that keeps their bits (see [[RawBits]]). */
+    def gather[T: ClassTag](run: Iterator[Block] => T): Array[T] =
+      if (local != null) local.map(bs => run(bs.iterator))
+      else if (materialized) pass(rdd, -1L)(run)._1
       else {
         materialized = true
         val cap = driverCap
-        val (ps, bs) = pass(rdd, nSums, nCounts,
-          if (cap > 0L) cap / math.max(1, rdd.getNumPartitions) else -1L)(fold)
+        val (ts, bs) = pass(rdd, if (cap > 0L) cap / math.max(1, rdd.getNumPartitions) else -1L)(run)
         local = bs
-        ps
+        ts
       }
 
     /** [[partials]] merged as in [[FitBlocks.sum]]. */
@@ -169,6 +186,9 @@ object FitBlocks {
     def doubles: Array[Double] = bits.map(java.lang.Double.longBitsToDouble)
   }
 
+  private def wire(p: Partial): (RawBits, Array[Long]) = (new RawBits(p.sums), p.counts)
+  private def unwire(w: (RawBits, Array[Long])): Partial = new Partial(w._1.doubles, w._2)
+
   /** One partition's fold: its blocks in order into fresh zeros. */
   private def foldPartition(blocks: Iterator[Block], nSums: Int, nCounts: Int,
                             fold: Fold): Partial = {
@@ -189,33 +209,30 @@ object FitBlocks {
     out
   }
 
-  /** One job: every task folds its blocks into fresh `nSums` zeros and
-    * `nCounts` zero counts; the partials come back (as [[RawBits]]) in
-    * partition-index order. */
-  def partials(blocks: RDD[Block], nSums: Int, nCounts: Int)(fold: Fold): Array[Partial] =
-    pass(blocks, nSums, nCounts, -1L)(fold)._1
-
-  /** The job of [[partials]], whose tasks also return their blocks when
+  /** One job: `run` over each task's blocks, the results in
+    * partition-index order; the tasks also return their blocks when
     * these hold at most `share` bytes of doubles: the blocks of every
     * partition, in partition-index order, if all came back, else null. */
-  private def pass(blocks: RDD[Block], nSums: Int, nCounts: Int, share: Long)(
-      fold: Fold): (Array[Partial], Array[Array[Block]]) = {
+  private def pass[T: ClassTag](blocks: RDD[Block], share: Long)(
+      run: Iterator[Block] => T): (Array[T], Array[Array[Block]]) = {
     val out = blocks.mapPartitions { it =>
       val bs = it.toArray
-      val p = foldPartition(bs.iterator, nSums, nCounts, fold)
+      val t = run(bs.iterator)
       val bytes = bs.map(b => 8L * b.n * b.cols.length).sum
       // persisted blocks hold no NaN (the `na.drop` rule), so their
       // doubles survive serialization bit for bit
-      Iterator.single((new RawBits(p.sums), p.counts, if (bytes <= share) bs else null))
+      Iterator.single((t, if (bytes <= share) bs else null))
     }.collect()
-    (out.map { case (sums, c, _) => new Partial(sums.doubles, c) },
-      if (out.forall(_._3 != null)) out.map(_._3) else null)
+    (out.map(_._1), if (out.forall(_._2 != null)) out.map(_._2) else null)
   }
 
-  /** [[partials]] merged by addition in partition-index order from 0.0
-    * — the `Sum`/`Count` result of the same fold. */
+  /** One job: every task folds its blocks into fresh `nSums` zeros and
+    * `nCounts` zero counts; the partials come back (as [[RawBits]]) and
+    * are added in partition-index order from 0.0 — the `Sum`/`Count`
+    * result of the same fold. */
   def sum(blocks: RDD[Block], nSums: Int, nCounts: Int)(fold: Fold): Partial =
-    merge(partials(blocks, nSums, nCounts)(fold), nSums, nCounts)
+    merge(pass(blocks, -1L)(bs => wire(foldPartition(bs, nSums, nCounts, fold)))._1.map(unwire),
+      nSums, nCounts)
 
   /** Spark SQL's `x <= t` on doubles: NaN is greatest (so `x <= NaN`
     * holds for every x) and −0.0 equals 0.0. */

@@ -59,14 +59,10 @@ object Logistic {
   private[graft] def fitBlocks(blocks: FitBlocks.Persisted, p: Int, n: Long,
                                lambda: Double, iters: Int): (Double, Array[Double]) = {
     val d = p + 1
-    // size the iteration loop's parallelism to the data (the GBT-fit
-    // rule): `iters` sequential jobs over tiny partitions are pure
-    // scheduling overhead, so target ~100k rows/partition (floor 1) —
-    // a 100 TB reduction still fans out to thousands of tasks. A set
-    // under the driver cap folds the same groups on the driver, so the
-    // sums are the same bits on either side of the cap
-    val parts = math.max(1L,
-      math.min(blocks.numPartitions.toLong, n / 100000L)).toInt
+    // the fits' coalesce rule; a set under the driver cap folds the
+    // same groups on the driver, so the sums are the same bits on
+    // either side of the cap
+    val parts = FitBlocks.coalesceParts(blocks.numPartitions, n)
     val rows = if (parts < blocks.numPartitions) blocks.coalesce(parts) else blocks
     val tri = d * (d + 1) / 2
     val beta = new Array[Double](d)

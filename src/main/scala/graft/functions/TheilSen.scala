@@ -24,12 +24,13 @@ object TheilSen {
   final case class Obs(i: Long, y: Option[Double])
   final case class Fit(beta: Option[Double], alpha: Option[Double])
 
-  /** Spark's `percentile(x, 0.5)` on an ascending array with NaN last
-    * (`java.util.Arrays.sort` order), bit for bit — the interpolation
-    * of `PercentileBase.getPercentile`, whose tie test is the boxed
-    * `==` (`BoxesRunTime.equals`): −0.0 equals 0.0, NaN never equals. */
-  def median(sorted: Array[Double]): Double = {
-    val position = (sorted.length - 1) * 0.5
+  /** Spark's `percentile(x, alpha)` on a non-empty ascending array with
+    * NaN last (`java.util.Arrays.sort` order), bit for bit — position
+    * (n−1)·alpha and the interpolation of `PercentileBase.getPercentile`,
+    * whose tie test is the boxed `==` (`BoxesRunTime.equals`): −0.0
+    * equals 0.0, NaN never equals. */
+  def percentile(sorted: Array[Double], alpha: Double): Double = {
+    val position = (sorted.length - 1) * alpha
     val lower = math.floor(position).toInt
     val higher = math.ceil(position).toInt
     val lo = sorted(lower)
@@ -61,12 +62,12 @@ object TheilSen {
       a += 1
     }
     java.util.Arrays.sort(slopes)
-    val beta = median(slopes)
+    val beta = percentile(slopes, 0.5)
     val rest = new Array[Double](n)
     k = 0
     while (k < n) { rest(k) = ys(k) - beta * is(k).toDouble; k += 1 }
     java.util.Arrays.sort(rest)
-    Fit(Some(beta), Some(median(rest)))
+    Fit(Some(beta), Some(percentile(rest, 0.5)))
   }
 
   private object Agg extends Aggregator[Obs, SeriesBuf, Fit] {

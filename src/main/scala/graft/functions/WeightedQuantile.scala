@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-
 /** Weighted interpolated quantile — the fractional-weight analog of
   * Spark's exact `percentile` / DuckDB's `quantile_cont`, which only
   * support integral frequencies. Completes the GBT family's
@@ -75,7 +71,7 @@ import org.apache.spark.sql.functions.udaf
   * with amortized-doubling appends and two-arraycopy merges — the
   * round-11 per-row `Arrays.copyOf` grew the buffer one pair at a
   * time, an O(g²) copy tax that made a 90k-row group cost ~40 s.
-  * `finish` sorts once, so buffer order never reaches the result —
+  * [[WeightedQuantile.of]] sorts once, so buffer order never reaches the result —
   * memory O(pairs in the group), the same class as exact
   * `percentile`'s value→count map; at 100 TB the bounded-memory path
   * is TreeBoost's `quantileExact = false` — see TreeBoost.fit.
@@ -84,9 +80,9 @@ object WeightedQuantile {
 
   /** Growable primitive interleaved [v0,w0,v1,w1,…] pair buffer:
     * appends are amortized O(1) array stores, merges are a single
-    * grow + arraycopy, and the object lives un-serialized inside
-    * ObjectHashAggregate — Kryo only sees it on spill/shuffle, where
-    * the custom image writes exactly 2n doubles (no slack capacity).
+    * grow + arraycopy, and the object lives un-serialized inside a
+    * partition's renewal state ([[QuantileGather]]); its Kryo image,
+    * the partition's partial, is exactly 2n doubles (no slack).
     * Same design as [[FeatureAggs.SeriesBuf]]. */
   final class PairBuf(private var xs: Array[Double], private var n: Int)
       extends Serializable with com.esotericsoftware.kryo.KryoSerializable {
@@ -217,38 +213,4 @@ object WeightedQuantile {
     }
     src
   }
-}
-
-/** Aggregator form: rows are (value, weight); null values (e.g. a
-  * `when(cond, d)` leaf gate) and non-positive weights are skipped;
-  * an empty group yields null (callers coalesce — TreeBoost's empty
-  * leaf → 0.0, like the unweighted renewal). */
-final class WeightedQuantileAgg(alpha: Double)
-    extends Aggregator[(java.lang.Double, java.lang.Double), WeightedQuantile.PairBuf,
-      java.lang.Double] with Serializable {
-  require(alpha > 0.0 && alpha < 1.0, s"weighted quantile needs alpha in (0,1), got $alpha")
-
-  override def zero: WeightedQuantile.PairBuf = new WeightedQuantile.PairBuf()
-
-  override def reduce(b: WeightedQuantile.PairBuf,
-                      in: (java.lang.Double, java.lang.Double)): WeightedQuantile.PairBuf =
-    if (in._1 == null || in._2 == null || in._2.doubleValue <= 0.0) b
-    else b.append(in._1.doubleValue, in._2.doubleValue)
-
-  override def merge(a: WeightedQuantile.PairBuf,
-                     b: WeightedQuantile.PairBuf): WeightedQuantile.PairBuf =
-    a.mergeWith(b)
-
-  override def finish(b: WeightedQuantile.PairBuf): java.lang.Double =
-    WeightedQuantile.of(b.pairs, alpha)
-
-  override def bufferEncoder: Encoder[WeightedQuantile.PairBuf] =
-    Encoders.kryo[WeightedQuantile.PairBuf]
-  override def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
-}
-
-object WeightedQuantileAgg {
-  /** Two-column (value, weight) UDAF for DataFrame `agg`. */
-  def apply(alpha: Double) = udaf(new WeightedQuantileAgg(alpha),
-    Encoders.product[(java.lang.Double, java.lang.Double)])
 }

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-
 /** Bounded-memory weighted quantile sketch — the PRODUCTION twin of
   * the exact [[WeightedQuantile]] renewal (TreeBoost's
   * `quantileExact = false` with sample weights), completing the
@@ -34,7 +30,7 @@ import org.apache.spark.sql.functions.udaf
   * exact weighted renewal to quantization (≤1e-9 relative weight).
   *
   * NOT bitwise-oracle-checkable by construction: the centroid set
-  * depends on Spark's partial-merge order, like every sketch. The
+  * depends on the partition merge order, like every sketch. The
   * oracle-gated mode stays `quantileExact = true`; this twin is
   * spec-pinned against it (QuantileSpec) and soak-measured
   * (QuantileSoak weighted row, SCALE.md).
@@ -60,7 +56,6 @@ final class WeightedQuantileSketch(private var delta0: Int, private var bufCap0:
   private var nb: Int = 0
   private var total: Double = 0.0
 
-  def totalWeight: Double = total
   def centroidCount: Int = nc
   /** Compressed-centroid accessors (call [[compress]] first) — the
     * streaming gate persists the bounded set as its group state. */
@@ -186,48 +181,4 @@ final class WeightedQuantileSketch(private var delta0: Int, private var bufCap0:
     cW = input.readDoubles(nc)
     nb = 0
   }
-}
-
-/** Aggregator form mirroring [[WeightedQuantileAgg]]'s null/weight
-  * contract: (value, weight) rows, null values and non-positive
-  * weights skipped, empty group → null. `delta` is the accuracy
-  * budget (max rank error ≈ 1/δ at ≤ ~2δ centroids): the default
-  * 2000 (~5e-4) suits central quantiles; DEEP tail quantiles (α
-  * within ~10/δ of 0 or 1) or tight-tolerance renewals should raise
-  * it (δ = 20000 → ~5e-5 at 10× the state) — QuantileSpec pins the
-  * realized error at both budgets. */
-final class WeightedQuantileSketchAgg(alpha: Double, delta: Int = 2000,
-                                      bufCap: Int = 8192)
-    extends Aggregator[(java.lang.Double, java.lang.Double), WeightedQuantileSketch,
-      java.lang.Double] with Serializable {
-  require(alpha > 0.0 && alpha < 1.0,
-    s"weighted quantile sketch needs alpha in (0,1), got $alpha")
-  require(delta >= 10 && bufCap >= 64,
-    s"weighted quantile sketch needs delta >= 10 and bufCap >= 64 " +
-      s"(got delta=$delta, bufCap=$bufCap)")
-
-  override def zero: WeightedQuantileSketch = new WeightedQuantileSketch(delta, bufCap)
-
-  override def reduce(b: WeightedQuantileSketch,
-                      in: (java.lang.Double, java.lang.Double)): WeightedQuantileSketch =
-    if (in._1 == null || in._2 == null || in._2.doubleValue <= 0.0) b
-    else b.add(in._1.doubleValue, in._2.doubleValue)
-
-  override def merge(a: WeightedQuantileSketch,
-                     b: WeightedQuantileSketch): WeightedQuantileSketch =
-    a.mergeWith(b)
-
-  override def finish(b: WeightedQuantileSketch): java.lang.Double =
-    b.quantile(alpha)
-
-  override def bufferEncoder: Encoder[WeightedQuantileSketch] =
-    Encoders.kryo[WeightedQuantileSketch]
-  override def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
-}
-
-object WeightedQuantileSketchAgg {
-  /** Two-column (value, weight) UDAF for DataFrame `agg`. */
-  def apply(alpha: Double, delta: Int = 2000, bufCap: Int = 8192) =
-    udaf(new WeightedQuantileSketchAgg(alpha, delta, bufCap),
-      Encoders.product[(java.lang.Double, java.lang.Double)])
 }

@@ -45,13 +45,11 @@ object GbtForecaster {
       .cache()
     // GBT runs maxIter × depth findBestSplits passes over this matrix
     // — cache it so every iteration reads memory, not the lag-window
-    // recompute. Then SIZE the fit's parallelism to the data: ~100
+    // recompute — in the fits' coalesce rule's partition count (~100
     // sequential treeAggregate jobs over tiny partitions are pure
-    // scheduling overhead, so target ~100k rows/partition (floor 1) —
-    // a 100 TB reduction still fans out to thousands of tasks, while
-    // a small-SF fit stops launching 32 tasks to scan 10k rows
+    // scheduling overhead)
     val n = assembled.count()
-    val parts = math.max(1L, math.min(assembled.rdd.getNumPartitions.toLong, n / 100000L)).toInt
+    val parts = graft.functions.FitBlocks.coalesceParts(assembled.rdd.getNumPartitions, n)
     val fitInput =
       if (parts < assembled.rdd.getNumPartitions) assembled.coalesce(parts) else assembled
     val base = new GBTRegressor()

@@ -68,60 +68,24 @@ object StumpBoost {
     val blocks = FitBlocks.persist(train, featureCols :+ label)
     try {
       // one pass: exact per-feature min/max (no float-order drift) +
-      // the base prediction sum(y)/n — the oracle's min/max/sum/count,
-      // with `least`/`greatest` folds merged in partition order
-      val mm = blocks.partials(2 * lags + 1, 1) { (b, s, c) =>
-        val x = b.cols
+      // the base prediction sum(y)/n — the oracle's min/max/sum/count
+      val range = BoostGrid.firstPass(blocks, lags, 1, 0) { (b, s, _) =>
+        val y = b.cols(lags)
         var r = 0
-        while (r < b.n) {
-          var i = 0
-          while (i < lags) {
-            val v = x(i)(r)
-            if (c(0) == 0L) { s(2 * i) = v; s(2 * i + 1) = v }
-            else {
-              s(2 * i) = FitBlocks.least(s(2 * i), v)
-              s(2 * i + 1) = FitBlocks.greatest(s(2 * i + 1), v)
-            }
-            i += 1
-          }
-          s(2 * lags) += x(lags)(r)
-          c(0) += 1L
-          r += 1
-        }
+        while (r < b.n) { s(2 * lags) += y(r); r += 1 }
       }
-      val mins = new Array[Double](lags)
-      val maxs = new Array[Double](lags)
-      var sumY = 0.0
-      var n = 0L
-      mm.foreach { part =>
-        if (part.counts(0) > 0L) {
-          var i = 0
-          while (i < lags) {
-            if (n == 0L) { mins(i) = part.sums(2 * i); maxs(i) = part.sums(2 * i + 1) }
-            else {
-              mins(i) = FitBlocks.least(mins(i), part.sums(2 * i))
-              maxs(i) = FitBlocks.greatest(maxs(i), part.sums(2 * i + 1))
-            }
-            i += 1
-          }
-          sumY += part.sums(2 * lags)
-          n += part.counts(0)
-        }
-      }
+      val n = range.n
       // an empty frame gets the same actionable error as Ols.fit /
       // Logistic.fitIrls, never a min/max of nothing
       if (n == 0L)
         throw new IllegalArgumentException(
           s"stump-boost fit has no complete training rows (every entity " +
             s"shorter than lags=$lags, or all rows null in $label)")
-      val b0 = sumY / n
-      // uniform-grid candidates: mn + k·(mx−mn)/bins, k = 1..bins−1 —
-      // identical IEEE op order to the oracle's threshold expression
-      val cands = for { i <- 1 to lags; k <- 1 until bins }
-        yield (i, k, mins(i - 1) + k * (maxs(i - 1) - mins(i - 1)) / bins.toDouble)
-      val nc = cands.size
-      val candFeat = cands.map(_._1 - 1).toArray
-      val candThr = cands.map(_._3).toArray
+      val b0 = range.sums(0) / n
+      val grid = new BoostGrid.Grid(range, bins)
+      val nc = grid.size
+      val candFeat = grid.feat
+      val candThr = grid.thr
       var stumps = Vector.empty[Stump]
       (1 to rounds).foreach { _ =>
         val ns = stumps.size
@@ -153,24 +117,9 @@ object StumpBoost {
             r += 1
           }
         }
-        val st = tot.sums(nc)
-        val nt = tot.counts(nc)
-        val scored = cands.zipWithIndex.map { case ((i, k, t), ci) =>
-          val sl = tot.sums(ci)
-          val nl = tot.counts(ci)
-          // SSE-reduction gain for mean leaves; empty/full sides get a
-          // finite sentinel (not NaN/−Inf — engines order those apart)
-          val gain =
-            if (nl > 0 && nl < nt) sl * sl / nl + (st - sl) * (st - sl) / (nt - nl)
-            else -1e308
-          (gain, i, k, t, sl, nl)
-        }
-        // argmax gain, ties to the lowest (feature, threshold) —
-        // ORDER BY gain DESC, i, k LIMIT 1 in the oracle
-        val (_, bi, _, bt, bsl, bnl) = scored.minBy { case (g, i, k, _, _, _) => (-g, i, k) }
-        val vl = if (bnl > 0) bsl / bnl * eta else 0.0
-        val vr = if (nt > bnl) (st - bsl) / (nt - bnl) * eta else 0.0
-        stumps :+= Stump(bi, bt, vl, vr)
+        val (best, vl, vr) = BoostGrid.pickSplit(grid, tot.sums, tot.counts.map(_.toDouble),
+          tot.sums(nc), tot.counts(nc).toDouble, eta)
+        stumps :+= Stump(grid.feat(best) + 1, grid.thr(best), vl, vr)
       }
       (b0, stumps)
     } finally blocks.unpersist()

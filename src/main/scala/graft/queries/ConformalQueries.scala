@@ -730,7 +730,7 @@ object ConformalQueries {
     // fall ≤ 0), the clamp rewrites those to 1 BEFORE the lag
     // reduction, and the predict tail rolls from the clamped series —
     // the default (labelClamp=false) null-gradient mode on the same
-    // target is contrasted in TreeBoostSpec
+    // target is contrasted in AutoForecastSpec
     "fc_gbt_gamma_clamp" -> Q(
       s"""WITH ${OlsBacktestSql.lagdCte(7, valueExpr =
              "CASE WHEN value - 50.0 <= 0 THEN 1.0 ELSE value - 50.0 END")},

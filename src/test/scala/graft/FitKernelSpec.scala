@@ -38,12 +38,12 @@ class FitKernelSpec extends SparkSpec {
       val b0 = mmRow.getDouble(2 * lags) / mmRow.getLong(2 * lags + 1)
       val cands = for { i <- 1 to lags; k <- 1 until bins }
         yield (i, k, mins(i - 1) + k * (maxs(i - 1) - mins(i - 1)) / bins.toDouble)
-      import graft.functions.StableConst.{double => sd, int => si}
+      import graft.functions.StableConst.{double => sd}
       val featsArr = array(featureCols.map(col): _*)
       var stumps = Vector.empty[Stump]
       (1 to rounds).foreach { _ =>
         val r = col(label) - stumps.foldLeft(sd(b0): Column)((acc, s) =>
-          acc + when(element_at(featsArr, si(s.feat)) <= sd(s.thr),
+          acc + when(element_at(featsArr, lit(s.feat)) <= sd(s.thr),
             sd(s.vl)).otherwise(sd(s.vr)))
         val aggs = cands.flatMap { case (i, _, t) =>
           Seq(sum(when(col(featureCols(i - 1)) <= sd(t), r)),

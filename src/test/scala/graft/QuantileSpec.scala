@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{WeightedQuantile, WeightedQuantileAgg}
+import graft.functions.{QuantileGather, WeightedQuantile}
 import graft.operators.TreeBoost
 import org.apache.spark.sql.functions._
 
@@ -12,6 +12,21 @@ class QuantileSpec extends SparkSpec {
 
   private def pairs(vw: (Double, Double)*): Array[Double] =
     vw.flatMap { case (v, w) => Seq(v, w) }.toArray
+
+  /** The weighted exact renewal's kernel-side gather over (value,
+    * weight) rows, as a two-partition block pass runs it: each half's
+    * state sent as its partial and merged in order. A residual is never
+    * null, so a null value never reaches the gather; it is skipped here,
+    * as the former aggregate skipped it. */
+  private def gathered(alpha: Double, rows: Seq[(java.lang.Double, java.lang.Double)]): Double = {
+    val g = QuantileGather(weighted = true, exact = true, alpha, 2000)
+    rows.grouped((rows.size + 1) / 2).foreach { part =>
+      val st = QuantileGather(weighted = true, exact = true, alpha, 2000)
+      part.foreach { case (v, w) => if (v != null) st.add(v, w) }
+      g.merge(st.partial())
+    }
+    g.result()
+  }
 
   test("unit weights reduce to quantile_cont positions (j-1)/(n-1)") {
     val vs = Seq(3.0, 1.0, 4.0, 1.5, 9.0, 2.6, 5.0)
@@ -39,8 +54,7 @@ class QuantileSpec extends SparkSpec {
     // r6 round absorbs (the fit-level test below shows where even the
     // bits line up)
     for (a <- Seq(0.1, 0.5, 0.9)) {
-      val got = df.agg(WeightedQuantileAgg(a)(col("v"), col("w")))
-        .collect()(0).getDouble(0)
+      val got = gathered(a, vs.map(v => (v: java.lang.Double, 1.0: java.lang.Double)))
       val want = df.agg(percentile(col("v"), lit(a))).collect()(0).getDouble(0)
       assertClose(got, want, 1e-12)
     }
@@ -63,14 +77,12 @@ class QuantileSpec extends SparkSpec {
   test("edges: empty null, single pair, zero weights skipped on input") {
     assert(WeightedQuantile.of(Array.emptyDoubleArray, 0.5) == null)
     assertClose(WeightedQuantile.of(pairs((7.0, 0.3)), 0.9).doubleValue, 7.0, 0)
-    // the aggregator drops zero/negative weights and null values
-    import spark.implicits._
-    val df = Seq((1.0: java.lang.Double, 1.0: java.lang.Double),
+    // the gather drops zero/negative weights (and null values never
+    // reach it)
+    val got = gathered(0.5, Seq((1.0: java.lang.Double, 1.0: java.lang.Double),
       (100.0: java.lang.Double, 0.0: java.lang.Double),
       (null: java.lang.Double, 1.0: java.lang.Double),
-      (3.0: java.lang.Double, 1.0: java.lang.Double)).toDF("v", "w")
-    val got = df.agg(WeightedQuantileAgg(0.5)(col("v"), col("w")))
-      .collect()(0).getDouble(0)
+      (3.0: java.lang.Double, 1.0: java.lang.Double)))
     assertClose(got, 2.0, 1e-12)
   }
 

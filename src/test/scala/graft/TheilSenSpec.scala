@@ -108,7 +108,7 @@ class TheilSenSpec extends SparkSpec {
     }
   }
 
-  test("median equals Spark percentile(x, 0.5) on small arrays") {
+  test("percentile equals Spark percentile(x, alpha) on small arrays") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
     val pool = Array(0.0, -0.0, 1.0, -1.0, 2.5, Double.NaN, Double.PositiveInfinity,
@@ -120,14 +120,16 @@ class TheilSenSpec extends SparkSpec {
     val arrays = edges ++ (0 until 400).map(_ => Array.fill(1 + rnd.nextInt(8))(
       if (rnd.nextInt(3) == 0) rnd.nextGaussian() else pool(rnd.nextInt(pool.length))))
     val rows = arrays.zipWithIndex.flatMap { case (xs, k) => xs.map(x => (k, x)) }
-    val spark50 = rows.toDF("k", "x").groupBy("k").agg(expr("percentile(x, 0.5)"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    arrays.zipWithIndex.foreach { case (xs, k) =>
-      val sorted = xs.clone()
-      java.util.Arrays.sort(sorted)
-      val got = TheilSen.median(sorted)
-      assert(same(Some(got), Some(spark50(k))),
-        s"${xs.mkString("[", ", ", "]")}: $got vs ${spark50(k)}")
+    for (alpha <- Seq(0.1, 0.25, 0.5, 0.9)) {
+      val want = rows.toDF("k", "x").groupBy("k").agg(expr(s"percentile(x, $alpha)"))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      arrays.zipWithIndex.foreach { case (xs, k) =>
+        val sorted = xs.clone()
+        java.util.Arrays.sort(sorted)
+        val got = TheilSen.percentile(sorted, alpha)
+        assert(same(Some(got), Some(want(k))),
+          s"α=$alpha ${xs.mkString("[", ", ", "]")}: $got vs ${want(k)}")
+      }
     }
   }
 
